@@ -40,13 +40,25 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import statistics
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# Scratch dirs made by this run (generated CSVs, relaid inputs); main()
+# removes them on the way out, whether the run finished or failed.
+_TMP_DIRS: list[str] = []
+
+
+def _mkdtemp(prefix: str) -> str:
+    d = tempfile.mkdtemp(prefix=prefix)
+    _TMP_DIRS.append(d)
+    return d
 
 # One headline per operator family; heaviest representative of each.
 HEADLINE = [
@@ -103,10 +115,8 @@ def _caliper_csv(n_rows: int) -> str:
     afterwards so pending writeback of the (large) input file does not
     stall filesystem metadata ops inside the timed sink window —
     measured as multi-x wall variance on the 5000-file layout."""
-    import tempfile
-
     n_attempts = n_rows // CALIPER_ROWS_PER_ATTEMPT
-    workdir = tempfile.mkdtemp(prefix="caliper_bench_")
+    workdir = _mkdtemp("caliper_bench_")
     csv_path = f"{workdir}/items.csv"
     with open(csv_path, "w") as f:
         f.write(
@@ -147,19 +157,18 @@ def _file_create_ceiling(
     (r3: 24.8 s; r4 smoke: 65 s) — a HOST artifact, not an engine
     property, which is why the file-sink entries report median next
     to min."""
-    import shutil
-    import tempfile
-
     rates = []
     payload = b"x" * payload_bytes
     for _ in range(2):
         d = tempfile.mkdtemp(prefix="files_ceiling_")
-        t0 = time.perf_counter()
-        for i in range(n_files):
-            with open(f"{d}/f{i}.json", "wb") as f:
-                f.write(payload)
-        wall = time.perf_counter() - t0
-        shutil.rmtree(d, ignore_errors=True)
+        try:
+            t0 = time.perf_counter()
+            for i in range(n_files):
+                with open(f"{d}/f{i}.json", "wb") as f:
+                    f.write(payload)
+            wall = time.perf_counter() - t0
+        finally:
+            shutil.rmtree(d, ignore_errors=True)
         rates.append(round(n_files / wall, 1))
     return rates[0], rates[1]
 
@@ -280,9 +289,6 @@ def _caliper_trials(
     between trials, ruling out dirty-page writeback as the cause).
     Min is the engine-capability number; median is reported alongside
     as the throttle-pessimistic read."""
-    import shutil
-    import statistics
-
     workdir = os.path.dirname(csv_path)
     walls: list[float] = []
     rps_best = 0.0
@@ -303,7 +309,49 @@ def _caliper_trials(
     return best, rps_best, walls, med
 
 
+def _time_relaid(spark, qs, relaid_queries, timings) -> dict[str, float]:
+    """Median of 3 runs of each of ``relaid_queries`` over a relaid copy
+    of the sf dir (big tables re-written as 16 files)."""
+    from caliper_poc_data_etl_spark.sources.readers import TABLE_NAMES
+
+    relaid_sf = _mkdtemp("bench_relaid_sf_") + "/sf"
+    os.makedirs(relaid_sf, exist_ok=True)
+    for tbl in TABLE_NAMES:
+        src = f"{SF_DIR}/{tbl}.parquet"
+        dst = f"{relaid_sf}/{tbl}.parquet"
+        if tbl in ("lineitem", "orders", "documents"):
+            spark.read.parquet(src).repartition(16).write.mode(
+                "overwrite"
+            ).parquet(dst)
+        else:
+            os.symlink(os.path.abspath(src), dst)
+    scaling_relaid: dict[str, float] = {}
+    for name in relaid_queries:
+        walls_r: list[float] = []
+        for _ in range(3):
+            t0 = time.perf_counter()
+            qs[name](spark, relaid_sf).count()
+            walls_r.append(round(time.perf_counter() - t0, 3))
+        scaling_relaid[name] = round(statistics.median(walls_r), 3)
+        print(
+            f"# relaid {name}: trials {walls_r} -> median "
+            f"{scaling_relaid[name]:.2f}s (single-row-group headline: "
+            f"{timings.get(name, float('nan')):.2f}s)",
+            file=sys.stderr,
+        )
+    return scaling_relaid
+
+
 def main() -> int:
+    try:
+        return _main()
+    finally:
+        for d in _TMP_DIRS:
+            shutil.rmtree(d, ignore_errors=True)
+        _TMP_DIRS.clear()
+
+
+def _main() -> int:
     only = None
     if "--queries" in sys.argv:
         only = sys.argv[sys.argv.index("--queries") + 1].split(",")
@@ -457,90 +505,31 @@ def main() -> int:
         "caliper_items_1m_bulk_e2e (JSON-lines scale layout)",
     )
     trial_times["caliper_items_1m_bulk_e2e"] = walls_bulk
-    # Input-layout experiment (outside the headline sum): the driver's
-    # sf0.1 parquet is ONE row group per table, so any scan decodes on
-    # a single task no matter the plan (DuckDB's intra-rowgroup
-    # parallelism hides this; Spark's split unit is the row group).
-    # Re-laying the fact table out with the engine's own compaction
-    # operator shows the same q1 plan with real scan parallelism.
-    import tempfile
-
-    from caliper_poc_data_etl_spark.sinks import compact_files
-
-    relaid = tempfile.mkdtemp(prefix="bench_relayout_") + "/lineitem"
-    spark.read.parquet(f"{SF_DIR}/lineitem.parquet").repartition(16).write.mode(
-        "overwrite"
-    ).parquet(relaid)
-    q1_relaid = None
-    if "q1_pricing_summary" in timings:
-        from pyspark.sql import functions as F
-
-        li = spark.read.parquet(relaid)
-        t0 = time.perf_counter()
-        (
-            li.filter(F.col("l_shipdate") <= "1998-09-02")
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(
-                F.sum("l_quantity"),
-                F.sum("l_extendedprice"),
-                F.avg("l_discount"),
-                F.count("*"),
-            )
-            .collect()
-        )
-        q1_relaid = round(time.perf_counter() - t0, 3)
-        print(
-            f"# q1 aggregation on 16-file relayout: {q1_relaid}s "
-            f"(vs {timings['q1_pricing_summary']}s on the single-row-group "
-            f"input — the gap is parquet row-group granularity, not the plan)",
-            file=sys.stderr,
-        )
-    # VERDICT r12 #5 (scaling_relaid): the sf0.1 fixtures are ONE parquet
-    # row group per table, so 12 of 28 headline queries scan on a single
-    # task no matter the plan (Spark's split unit is the row group; the
-    # 8-vs-32-core ratios sit at ~1 for exactly those queries). This
-    # block stages a multi-row-group relaid COPY of the big tables
-    # (lineitem / orders / documents re-written as 16 files; small
-    # tables symlinked), then times the SAME declared builders against
-    # the relaid dir — OUTSIDE the keyed headline sum, like the q1
-    # experiment above — so the driver's two core-count runs can ratio
+    # Input-layout experiment (outside the keyed headline sum): the
+    # sf0.1 fixtures are ONE parquet row group per table, so 12 of 28
+    # headline queries scan on a single task no matter the plan (Spark's
+    # split unit is the row group; DuckDB's intra-rowgroup parallelism
+    # hides this). This block stages a multi-row-group relaid COPY of
+    # the big tables (lineitem / orders / documents re-written as 16
+    # files; small tables symlinked), then times the SAME declared
+    # builders against the relaid dir, so two core-count runs can ratio
     # them and show the plans parallelize when the input does. Staging
-    # happens fresh inside every bench run (input layout, not results).
-    relaid_sf = tempfile.mkdtemp(prefix="bench_relaid_sf_") + "/sf"
-    os.makedirs(relaid_sf, exist_ok=True)
-    from caliper_poc_data_etl_spark.sources.readers import TABLE_NAMES
-
-    for tbl in TABLE_NAMES:
-        src = f"{SF_DIR}/{tbl}.parquet"
-        dst = f"{relaid_sf}/{tbl}.parquet"
-        if tbl in ("lineitem", "orders", "documents"):
-            spark.read.parquet(src).repartition(16).write.mode(
-                "overwrite"
-            ).parquet(dst)
-        else:
-            os.symlink(os.path.abspath(src), dst)
+    # happens fresh inside every bench run (input layout, not results),
+    # and only when a relaid query is among the selected ones.
     relaid_queries = [
-        "q1_pricing_summary",
-        "q3_top_revenue",
-        "dedup_exact_normalized",
-        "text_winnowing_fingerprint",
+        n
+        for n in (
+            "q1_pricing_summary",
+            "q3_top_revenue",
+            "dedup_exact_normalized",
+            "text_winnowing_fingerprint",
+        )
+        if n in names
     ]
     scaling_relaid: dict[str, float] = {}
-    for name in relaid_queries:
-        if name not in qs:
-            continue
-        walls_r: list[float] = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            qs[name](spark, relaid_sf).count()
-            walls_r.append(round(time.perf_counter() - t0, 3))
-        scaling_relaid[name] = round(statistics.median(walls_r), 3)
-        print(
-            f"# relaid {name}: trials {walls_r} -> median "
-            f"{scaling_relaid[name]:.2f}s (single-row-group headline: "
-            f"{timings.get(name, float('nan')):.2f}s)",
-            file=sys.stderr,
-        )
+    if relaid_queries:
+        scaling_relaid = _time_relaid(spark, qs, relaid_queries, timings)
+    q1_relaid = scaling_relaid.get("q1_pricing_summary")
     total = round(sum(timings.values()), 3)
     # Detail line FIRST (trial spreads + host calibration anchors):
     # the driver tail-captures stdout and r4's single fat line got

@@ -44,8 +44,14 @@ def truncate_lineage(df: DataFrame, *, eager: bool = True) -> DataFrame:
     tolerance for the checkpointed partitions (module docstring).
     Reliable mode: ``checkpoint(eager)`` to the configured checkpoint
     dir — survives executor loss at the cost of a distributed write
-    per round. Values are identical either way; tests pin both modes
-    and the once-per-round execution of lazy local checkpoints."""
+    per round. The round is persisted first: the checkpoint write is a
+    separate job over the same RDD, and without the cache it reruns
+    the round's plan (three lazy rounds of 100 rows, each read by two
+    consumers, evaluated 700 rows instead of 300). An eager round's
+    cache is released once its checkpoint is written; a lazy round's
+    stays until the session's cache is cleared. Values are identical either
+    way; tests pin both modes and the once-per-round execution of lazy
+    rounds in both."""
     try:
         reliable = (
             df.sparkSession.conf.get("spark.graft.checkpoint.reliable", "false")
@@ -54,7 +60,11 @@ def truncate_lineage(df: DataFrame, *, eager: bool = True) -> DataFrame:
     except Exception:  # pragma: no cover - conf lookup must never fail a job
         reliable = "false"
     if str(reliable).lower() == "true":
-        return df.checkpoint(eager=eager)
+        cached = df.persist()
+        out = cached.checkpoint(eager=eager)
+        if eager:
+            cached.unpersist()
+        return out
     return df.localCheckpoint(eager=eager)
 
 

@@ -298,7 +298,7 @@ _PHASH_COS_SCALE = 1 << 15
 
 # Integer-scaled DCT-II basis, C[u*8+x] = round(cos((2x+1)*u*pi/16) * 2^15).
 # Generated ONCE here with math.cos at import time and embedded verbatim in
-# the oracle SQL (queries/round13.py), so both engines share the SAME
+# the oracle SQL (queries/multimodal_q.py), so both engines share the SAME
 # integer table — transcendental parity by construction, never at runtime.
 # Coefficient magnitude bound: |D[u][v]| <= 8*8*255*2^15*2^15 ~ 1.75e13,
 # comfortably inside BIGINT.

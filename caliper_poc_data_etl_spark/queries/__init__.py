@@ -23,7 +23,8 @@ from caliper_poc_data_etl_spark.queries.registry import (  # noqa: F401
     oracle_queries,
 )
 
-# Importing the modules populates the registry.
+# Importing the modules populates the registry; registration order is
+# this import order.
 from caliper_poc_data_etl_spark.queries import (  # noqa: F401, E402
     caliper,
     relational,
@@ -40,545 +41,6 @@ from caliper_poc_data_etl_spark.queries import (  # noqa: F401, E402
     curation,
     training,
     skewed,
-    extended,
-    round5,
-    round6,
-    round7,
-    round8,
-    round9,
-    round10,
-    round11,
-    round12,
-    round13,
-    round14,
-    round15,
-    round16,
-    round17,
-    round18,
+    graphs,
+    ml,
 )
-
-# ---------------------------------------------------------------------------
-# Grading-window ordering.
-#
-# The correctness driver grades the FIRST 50 registry entries
-# (CORRECTNESS_r01 cut off exactly at #50), so registration order decides
-# which operators get hard oracle evidence each round. The rotation policy:
-# entries that earned a green (or rows-only-by-design) driver row in a past
-# round with UNCHANGED implementations move to _DEFERRED, freeing the front
-# of the registry for (a) queries with no graded row yet, (b) regrades of
-# anything re-implemented or oracle-fixed since its green row, and (c) new
-# queries (which stay in natural module order at the front by default).
-#
-# Round-4 window: the whole r3 `_NEXT` queue (18 queries — the extended.py
-# module, streaming throttle, bucketed join, containment dedup, regression
-# aggregates), two regrades whose array-typed outputs crashed the r3
-# driver canonicalizer and are now string-serialized on both sides
-# (dedup_minhash_md5_parity — the MinHash family's missing hash-exact
-# evidence — and inverted_index_postings), and the round-4 additions
-# (new operators register at the front in module order).
-# ---------------------------------------------------------------------------
-_DEFERRED = [
-    # The r11 backfill block (38 entries re-certified GREEN in
-    # CORRECTNESS_r11) rotated to the TAIL below — deferral backfill
-    # is a rolling re-certification, oldest un-re-checked first. NOT
-    # rotated (pulled to the FRONT for r12 regrades instead):
-    # sim_lsh_bucket_parity + text_ngram_shingles (see the regrade
-    # notes in their original blocks). The r12 backfill starts HERE:
-    "funnel_conversion",
-    "upsert_latest_state",
-    "sample_cap_per_source",
-    "graph_pagerank",
-    "ts_user_trajectory",
-    "anomaly_zscore_events",
-    "hist_order_totals",
-    "scd2_event_intervals",
-    "decontam_exact_substring",
-    "agg_salted_event_type",
-    "join_salted_supplier",
-    # green in r04 (CORRECTNESS_r04: 50/50), implementation unchanged
-    # since. NOT deferred from earlier rounds: q3_top_revenue,
-    # sql_q3_shipping_priority, unpivot_measures,
-    # sim_pairwise_label_stats — hardened AFTER their green rows
-    # during the r4 sf0.1 robustness sweep, so they regrade in the
-    # r5 window (pulled back to the front).
-    "join_bucketed_colocated",
-    "agg_regr_slope",
-    "q8_market_share",
-    "q13_customer_distribution",
-    "q15_top_supplier",
-    "q17_small_quantity_revenue",
-    "q19_discounted_revenue",
-    "q22_global_sales_opportunity",
-    "agg_grouping_id_rollup",
-    "setop_all_variants",
-    "window_percent_rank",
-    "window_nth_value",
-    "agg_bit_aggregate_pack",
-    "fn_hash_pack",
-    "fn_format_pack",
-    "fn_datetime_extra_pack",
-    "fn_string_distance_pack",
-    "text_dedup_prefix_key",
-    "sim_ivf_assign_parity",
-    # NOT deferred: dedup_embedding_lsh_candidate_parity (N_HYPERPLANES env-knob touched the shared hyperplane helper) -> regrade
-    "text_stopword_density",
-    "text_hashing_vectorizer",
-    # NOT deferred: dedup_events_throttle_lastkept (applyInPandas walk re-implemented (linear mask, ADVICE-adjacent perf)) -> regrade
-    "window_gaps_islands",
-    "ts_retention_cohorts",
-    "ts_event_transitions",
-    "ts_inter_event_gap_stats",
-    "anomaly_mad_events",
-    "stream_throttle_replay",
-    "sample_bernoulli_hash",
-    "inverted_index_postings",
-    "funnel_time_to_convert",
-    "graph_degree_stats",
-    "graph_triangle_count",
-    "fn_bitwise_pack",
-    "agg_bool_pack",
-    "agg_string_agg_ordered",
-    "window_locf_fill",
-    "ts_dow_hour_profile",
-    "text_readability_score",
-    "mix_temperature_sampling",
-    "anomaly_iqr_events",
-    "ts_cumulative_dau",
-    "join_shuffle_hash_hint",
-    "scan_partitioned_pruning",
-    "embed_dim_variance",
-    "text_bigram_lm",
-    "text_tokenize_vocab_ids",
-    # green in r05 (CORRECTNESS_r05: 50/50), implementation unchanged
-    # since:
-    "q3_top_revenue",
-    "unpivot_measures",
-    "sql_q3_shipping_priority",
-    "join_asof_tolerance",
-    "join_point_in_time_scd2",
-    "join_asof_nearest",
-    "window_running_distinct",
-    "window_max_drawdown",
-    "fn_url_pack",
-    "fn_higher_order_pack",
-    # NOT deferred: sim_pairwise_label_stats (re-implemented: canonical pairs + integer quantization + closed-form linear oracle (VERDICT r11 #2)) -> regrade
-    "sim_pq_code_parity",
-    "embed_top_pc_power_iter",
-    # NOT deferred: dedup_keep_longest (oracle pairs CTE materialized + split-once shingles) -> regrade
-    "text_perplexity_proxy",
-    "text_boilerplate_shingle_ratio",
-    # text_bm25_topk re-implemented in r9 (tf match-set reuse,
-    # scans 4->2) -> pulled OUT of deferral into the graded window.
-    "ts_resample_linear_interp",
-    "ts_ewma_smoothing",
-    "ts_cusum_changepoint",
-    "window_longest_streak",
-    "ts_event_sequence_pattern",
-    "ts_seasonal_decompose",
-    "ts_acf_autocorrelation",
-    "ts_seasonal_naive_forecast",
-    "stream_topk_per_window_replay",
-    "stream_foreachbatch_upsert",
-    "mm_ahash_hamming_neardup",
-    "mm_video_scene_cuts",
-    "scan_schema_evolution",
-    "scan_text_source",
-    "scan_xml_source",
-    "sample_time_holdout",
-    "dq_k_anonymity",
-    "er_blocked_name_match",
-    "agg_countmin_heavy_hitters",
-    "sql_recursive_cte_bfs",
-    "graph_common_neighbors",
-    "agg_bloom_filter_membership",
-    # dq_constraint_check re-implemented in r9 (one-pass join+agg,
-    # scans 8->2) -> pulled OUT of deferral into the graded window.
-    "agg_moments_pack",
-    "agg_gini_concentration",
-    "agg_percentile_disc_pack",
-    "fn_regex_all_pack",
-    "agg_incremental_merge",
-    "ml_ols_two_feature",
-    "text_bpe_tokenize",
-    "embed_kmeans_assign",
-    "q3_bucketed_top_revenue",
-    # green in r06 (CORRECTNESS_r06: 50/50 hash-green),
-    # implementation unchanged since:
-    "embed_kmeans_representatives",
-    "q21_sole_late_supplier",
-    "agg_two_level_count_distinct",
-    "text_bpe_pair_stats",
-    "dq_benford_digits",
-    "graph_sssp_bellman_ford",
-    "dq_table_checksum",
-    "agg_kmv_distinct_sketch",
-    "sample_sequential_poisson",
-    # ml_naive_bayes_train re-implemented in r9 (model-table reuse,
-    # scans 5->2) -> pulled OUT of deferral into the graded window.
-    "window_rolling_median",
-    "dq_referential_integrity",
-    "dq_snapshot_diff",
-    "mm_audio_silence_segments",
-    "graph_label_propagation",
-    "stream_scd2_replay",
-    "embed_prefix_nn_fidelity",
-    "agg_kmv_set_ops",
-    "ts_lttb_downsample",
-    "sim_ivfpq_topk",
-    "ml_confusion_eval",
-    "text_paragraph_dedup_ratio",
-    "er_survivorship_golden_record",
-    "mix_epoch_oversample",
-    "dq_freshness_lag",
-    "join_interval_bucketed",
-    "ml_auc_rank_eval",
-    "ml_calibration_bins",
-    "graph_kcore_decompose",
-    "ts_hypertable_rollup",
-    "ts_trend_mann_kendall",
-    "ts_peak_detection",
-    "agg_weighted_median",
-    # decontam_bloom_ngram re-planned in r11 (pre-explode doc_id
-    # repartition — the winnowing lesson; 4.0 s → 1.3 s) → regrade.
-    "window_hampel_outliers",
-    "curation_funnel_report",
-    "agg_log2_histogram",
-    "ts_backtest_wape",
-    "training_batch_manifest",
-    "dedup_cross_source_priority",
-    "stream_distinct_users_replay",
-    "graph_clustering_coeff",
-    "dq_drift_bins",
-    "scan_binary_files",
-    "fn_variant_pack",
-    "udtf_sentence_split",
-    "sql_pipe_syntax",
-    "fn_collation_pack",
-    "join_lateral_topk",
-    "sim_ivfpq_recall_vs_exact",
-    # green in r07 (CORRECTNESS_r07 50/50), implementation unchanged
-    # since. NOT deferred from the r07 block:
-    # text_winnowing_fingerprint (selection re-planned in r11 —
-    # packed-key scalar window min + lag dedup + pre-explode shuffle,
-    # VERDICT r10 #2 → regrade at the front).
-    "sample_stratified_fixed_n",
-    "ts_xcorr_lag_scan",
-    "ml_mrr_eval",
-    "curation_chunk_dedup_rewrite",
-    "dedup_url_canonical",
-    "q12_late_line_priority",
-    "graph_link_prediction_ra",
-    "er_soundex_block",
-    "ts_theil_sen_slope",
-    "dq_column_profile",
-    "window_time_range_frame",
-    "agg_argminmax_pack",
-    "training_span_loss_mask",
-    "er_phonetic_cluster_cc",
-    "agg_quantile_binned",
-    "scan_parquet_merge_schema",
-    "dedup_token_sort",
-    "ts_calendar_dim_join",
-    "fn_try_pack",
-    "graph_bipartite_projection",
-    "scan_csv_multiline_quoted",
-    "curation_blocklist_filter",
-    "sim_hard_negative_mining",
-    "curation_gopher_rules",
-    "geo_grid_point_in_box",
-    # NOT deferred: geo_nearest_poi (keyed event_id % 7 sample on both sides (VERDICT r11 #7)) -> regrade
-    "scan_jsonl_nested",
-    "graph_random_walk_deterministic",
-    "ts_event_pattern_detect",
-    # text_bpe_train_merges re-planned in r11 (arrays_zip pairs +
-    # pre-loop repartition; 457 s → ~14 s at sf0.1) → regrade.
-    "agg_skyline_pareto",
-    "sim_mmr_select",
-    "text_collocation_pmi",
-    "dq_schema_contract",
-    "agg_mode_pack",
-    "training_shard_snake",
-    "text_rake_keywords",
-    "ml_roc_points",
-    "ml_kfold_assign",
-    "join_pit_feature_store",
-    "window_rolling_slope",
-    "ml_ndcg_eval",
-    "ts_m4_downsample",
-    "dq_ab_srm_check",
-    # join_interval_overlap re-planned in r11 (canonical-bucket emit
-    # replaces the 2.4M-row distinct, VERDICT r10 perf-suspect set)
-    # → regrade at the front.
-    "ml_lift_gain_deciles",
-    "scan_gzip_nonsplittable",
-    "ml_f1_threshold_pick",
-    "window_touch_attribution",
-    # green in r08 (CORRECTNESS_r08), implementation unchanged since.
-    # NOT deferred from the r08 window: ts_period_over_period and
-    # ts_anomaly_seasonal_adjusted (driver-red on oracle HUGEINT
-    # leaks, oracles BIGINT-recast in r9 → regrade), ml_psi_drift
-    # (NULL-date semantics aligned in r9 → regrade), and
-    # curation_span_dedup_rewrite (_SPAN_IDX_BASE raised in r9 →
-    # regrade) — all four stay at the front of the r9 window.
-    # NOT deferred: dedup_ngram_jaccard (oracle split-once shingle rewrite) -> regrade
-    "dedup_minhash_md5_parity",
-    "dedup_minhash_lsh",
-    "dedup_simhash_md5_parity",
-    "dedup_simhash",
-    # NOT deferred: dedup_ngram_containment (oracle split-once shingle rewrite) -> regrade
-    # dedup_minhash_jaccard_estimate oracle re-sourced in r11 (shingle
-    # equi-join candidates instead of the all-pairs list_intersect
-    # self-join — the prefix-filter oracle fix's sibling) → regrade.
-    # NOT deferred: dedup_cluster_cc (oracle: MATERIALIZED pairs + split-once shingles) -> regrade
-    "graph_hits_scores",
-    "text_ngram_novelty",
-    "ml_regression_metrics",
-    "graph_personalized_pagerank",
-    "ml_ab_chi2_outcome",
-    "ml_pr_curve_points",
-    "mix_token_budget_fill",
-    "sink_compact_small_files",
-    "fn_zorder_key",
-    "graph_modularity_score",
-    "ml_bootstrap_ci_mean",
-    "er_blocking_quality_report",
-    "fn_business_days_pack",
-    "join_asof_forward",
-    "ml_cramers_v",
-    "ml_cohens_kappa",
-    "ts_allen_interval_relations",
-    "geo_geohash_encode",
-    "text_zipf_slope",
-    "ml_ks_two_sample",
-    "ts_cusum_page_reflected",
-    "fn_hilbert_key",
-    # re-graded GREEN in r08 as deferral backfill (r01 originals);
-    # rotated to the tail so the rolling re-certification advances
-    # through the rest of the r01/r02 block first:
-    # NOT deferred: caliper_eventize_flat (keyed l_orderkey % 101 sample on both sides (VERDICT r11 #7)) -> regrade
-    "caliper_group_events",
-    "caliper_fanout",
-    "caliper_split_multivalue",
-    "q1_pricing_summary",
-    "scan_project",
-    "q5_local_supplier_revenue",
-    "filter_predicates",
-    "filter_null_semantics",
-    "join_inner",
-    "join_right_outer",
-    "join_full_outer",
-    "join_left_outer",
-    "join_semi",
-    "join_anti",
-    "join_broadcast_dims",
-    # re-graded GREEN in r09 as deferral backfill (r01 originals);
-    # rotated to the tail behind the r08 backfill block:
-    "join_range_predicate",
-    "join_theta",
-    "agg_distinct",
-    "agg_percentiles",
-    "agg_corr_stats",
-    "agg_approx_distinct",
-    "agg_stats",
-    "agg_collect_sorted",
-    "agg_rollup",
-    "agg_cube",
-    "agg_grouping_sets",
-    "pivot_status_by_priority",
-    "setop_union_all",
-    "setop_intersect",
-    "distinct_rows",
-    "sort_topk_global",
-    "limit_rows",
-    "window_rank_topk_per_group",
-    "fn_string_pack",
-    "fn_date_pack",
-    # NOT deferred: fn_math_pack (keyed l_orderkey % 101 sample on both sides (VERDICT r11 #7)) -> regrade
-    # green in r09 (CORRECTNESS_r09: 49 hash-green + 1 rows-only),
-    # implementation unchanged since. NOT deferred from the r09
-    # window: dedup_prefix_filter_jaccard (candidate join slimmed to
-    # bare id pairs in r10 -> regrade), agg_hll_md5_parity and
-    # stream_hll_distinct_replay (shared HLL estimator helper renamed
-    # in r10 -- rename-only, but the window rule regrades any query
-    # whose transitively-used helper changed). decontam_embedding_
-    # cosine's r10 change is docstring-only (ADVICE acceptance note)
-    # and does not regrade; mix_round_robin_interleave re-planned in
-    # r10 (two-pass range-offset global position, ADVICE r9) -> front
-    # for regrade:
-    "text_bm25_topk",
-    "dq_constraint_check",
-    "ml_naive_bayes_train",
-    "ts_period_over_period",
-    "ts_anomaly_seasonal_adjusted",
-    "curation_span_dedup_rewrite",
-    "ml_psi_drift",
-    "ml_quantile_drift",
-    "sample_weighted_reservoir",
-    "dedup_minhash_recall_vs_exact",
-    "sample_weighted_reservoir_per_source",
-    "decontam_minhash_crosscorpus",
-    "mix_importance_select",
-    "sample_neyman_allocation",
-    "decontam_embedding_cosine",
-    "training_epoch_shuffle_order",
-    "er_fellegi_sunter_match",
-    # NOT deferred: mm_phash_dct (oracle cos table materialized as CTE column) -> regrade
-    "embed_residual_quantize",
-    "funnel_path_topk",
-    "anomaly_grid_density_events",
-    "dq_cross_table_reconciliation",
-    # NOT deferred: embed_jl_projection_parity (oracle sign tables materialized + spread repartition) -> regrade
-    "training_length_bucket_batches",
-    "ml_group_kfold_assign",
-    # re-graded GREEN in r10 as deferral backfill (the r01/r02 block);
-    # rotated to the tail behind the r09 backfill block. NOT rotated:
-    # stream_join_replay (click_purchase_join grew the how= param for
-    # the r11 outer join — transitively-used-helper rule → regrade at
-    # the front).
-    "fn_array_pack",
-    "fn_map_pack",
-    "join_asof",
-    "setop_except",
-    "window_lag_lead",
-    "window_running_sum",
-    "window_moving_avg",
-    "window_range_frame",
-    "fn_json_pack",
-    "fn_conditional_pack",
-    "dedup_exact",
-    # NOT deferred: dedup_embedding_cosine (re-planned: salted equi-join vs broadcast side) -> regrade
-    # NOT deferred: dedup_embedding_lsh (multi-probe range now N_HYPERPLANES-derived) -> regrade
-    "sim_cosine_topk",
-    # NOT deferred: sim_ann_lsh (N_HYPERPLANES env-knob touched the shared hyperplane helper) -> regrade
-    "sim_ivf_topk",
-    # NOT deferred: sim_label_centroid_stats (oracle rewritten to the closed linear centroid form (VERDICT r11 #2)) -> regrade
-    "text_stats",
-    "text_quality_score",
-    "text_langid",
-    "text_token_count",
-    "ts_tumbling_window",
-    "ts_sliding_window",
-    "ts_session_window",
-    "ts_first_last_by_time",
-    "stream_tumbling_replay",
-    "stream_sliding_replay",
-    "stream_session_replay",
-    "mm_payload_stats",
-    "mm_frame_sample",
-    # NOT deferred: mm_pixel_features (promoted rows-only -> hash-green (pure-SQL byte-decode oracle, VERDICT r11 #3)) -> regrade
-    "udf_vector_norm",
-    "scan_csv_policy",
-    "scan_json_source",
-    "scan_orc_source",
-    "scan_csv_malformed_policy",
-    "text_pii_redact",
-    "text_repetition_stats",
-    "sample_hash_split",
-    "sample_stratified_lang",
-    "mix_weighted_sources",
-    # green in r10 at the window FRONT (new ops / regrades there),
-    # implementation unchanged since → deferred:
-    "agg_hll_md5_parity",
-    "mix_round_robin_interleave",
-    "stream_hll_distinct_replay",
-    "scd2_dimension_history",
-    "agg_kll_quantile_sketch",
-    # re-graded GREEN in r11 as deferral backfill (the r02/r03 block);
-    # rotated to the tail behind the r10 backfill block. NOT rotated:
-    # sim_lsh_bucket_parity + text_ngram_shingles (r12 regrades at the
-    # front — shared-hyperplane env knob / split-once oracle):
-    "chunk_documents",
-    "pack_sequences",
-    "decontam_ngram_overlap",
-    "join_null_safe",
-    "agg_heavy_hitter_per_user",
-    "profile_orders_columns",
-    "sql_exists_scalar_subquery",
-    "agg_filtered_pack",
-    "q6_forecast_revenue",
-    "q4_order_priority",
-    "q7_volume_shipping",
-    "q10_returned_items",
-    "q14_promo_revenue",
-    "q18_large_volume_customer",
-    "window_ntile",
-    "window_sessionize",
-    "window_cume_dist",
-    "window_session_stats",
-    "dedup_exact_normalized",
-    "knn_label_vote",
-    "embed_quantize_int8",
-    "text_fingerprint",
-    "text_char_entropy",
-    "text_regex_extract",
-    "ts_rate_per_day",
-    "ts_gap_fill_daily",
-    "ts_ohlc_daily",
-    "ts_month_over_month",
-    "dedup_events_throttle",
-    "stream_stateful_profile_replay",
-    "stream_dedup_within_watermark",
-    "mm_audio_energy",
-    "udf_grouped_label_var",
-    "doc_length_pctl_filter",
-    "curriculum_quality_order",
-    "tfidf_top_terms",
-    # green at the r11 window FRONT (regrades / round-11 ops there),
-    # implementation unchanged since → deferred:
-    "dedup_minhash_jaccard_estimate",
-    "stream_join_replay",
-    "decontam_bloom_ngram",
-    "text_bpe_train_merges",
-    "join_interval_overlap",
-    "dedup_prefix_filter_jaccard",
-    "stream_static_enrich_replay",
-    "stream_quantile_hist_replay",
-    "stream_outer_join_replay",
-    "stream_full_outer_join_replay",
-    "curation_repeated_span_dedup",
-]
-
-# Round-12 graded window (VERDICT r11 demands): the front holds the
-# round-12 additions (queries/round18.py: dedup_semantic_cluster —
-# demand #1, text_quality_classifier_score — demand #4,
-# sim_rrf_fusion — demand #5, plus the frontier bonuses
-# sim_maxsim_late_interaction — ColBERT-style multi-vector MaxSim
-# scoring — and dedup_cdc_chunks — content-defined chunking dedup,
-# the LBFS/FastCDC cut rule), mm_pixel_features (rows-only →
-# hash-green promotion, demand #3), the demand-#2 oracle/plan
-# rewrites (sim_pairwise_label_stats re-implemented integer-exact
-# with a closed-form linear oracle; sim_label_centroid_stats oracle
-# → closed form; dedup_cluster_cc / dedup_ngram_jaccard /
-# dedup_ngram_containment / dedup_keep_longest / text_ngram_shingles
-# — split-once + MATERIALIZED shingle oracles; mm_phash_dct /
-# embed_jl_projection_parity — literal-table CTE oracles), the
-# single-task all-pairs re-plans (dedup_embedding_cosine), the
-# demand-#7 keyed samples (fn_math_pack, caliper_eventize_flat,
-# geo_nearest_poi), text_winnowing_fingerprint (ADVICE r11 cap
-# guard), dedup_events_throttle_lastkept (linear walk), and the
-# N_HYPERPLANES-env-knob family (sim_ann_lsh, sim_lsh_bucket_parity,
-# dedup_embedding_lsh, dedup_embedding_lsh_candidate_parity —
-# transitively-used-helper rule; default value unchanged). The
-# remaining 25 slots backfill from the HEAD of `_DEFERRED`, which
-# rotates: entries re-graded as backfill move to the tail, so the
-# rolling re-certification sweeps oldest-first (this round: the rest
-# of the r02/r03 block, then the r04 block head). `_NEXT` stays
-# empty — every declared query carries a driver-graded row since r08.
-_NEXT: list[str] = []
-
-_missing = [n for n in _DEFERRED + _NEXT if n not in QUERIES]
-if _missing:
-    raise RuntimeError(f"_DEFERRED/_NEXT names not in registry: {_missing}")
-_front = {
-    n: q for n, q in QUERIES.items() if n not in set(_DEFERRED) | set(_NEXT)
-}
-if len(_front) > 50:
-    raise RuntimeError(
-        f"{len(_front)} queries ahead of the 50-entry grading window; "
-        "defer more previously-green entries in _DEFERRED"
-    )
-_reordered = dict(_front)
-for _n in _NEXT + _DEFERRED:
-    _reordered[_n] = QUERIES[_n]
-QUERIES.clear()
-QUERIES.update(_reordered)

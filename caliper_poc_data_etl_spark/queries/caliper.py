@@ -37,7 +37,7 @@ def caliper_eventize_flat(spark, sf_dir):
     """S8-S13 flattened: project/rename/literal/cast into event fields.
 
     Graded on a keyed deterministic sample (l_orderkey % 101, both
-    engines — VERDICT r11 #7): per-row projection parity has the same
+    engines): per-row projection parity has the same
     power on the sample, without the 600k-row echo whose comparison
     dominated the sweep entry. The projection itself is scan-shaped at
     any corpus size; the filter is a pushed-down predicate."""

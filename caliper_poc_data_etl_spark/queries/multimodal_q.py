@@ -9,6 +9,7 @@ md5) agree between text and blob on this corpus.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window as W
 
 from caliper_poc_data_etl_spark.multimodal import (
     AHASH_BITS,
@@ -18,6 +19,7 @@ from caliper_poc_data_etl_spark.multimodal import (
     payload_stats,
     sample_frames,
 )
+from caliper_poc_data_etl_spark.multimodal import PHASH_COS, phash_dct64, PHASH_PIXELS
 from caliper_poc_data_etl_spark.queries.registry import query
 
 FRAME_BYTES = 64
@@ -167,8 +169,7 @@ def mm_pixel_features(spark, sf_dir):
     the REAL Arrow-batched binary-decode plumbing (numpy over payload
     bytes) — now oracle-checked against a pure-SQL decode of the SAME
     bytes (hex → per-byte parse → aggregate), the mm_audio_energy
-    treatment (VERDICT r11 #3: last rows-only entry without hash
-    evidence → promoted to hash-green, rows-only set 7→6).
+    treatment.
 
     Cross-engine determinism without any rounding: pixel values are
     uint8 integers, so numpy's pairwise-summed .mean() accumulates
@@ -390,3 +391,191 @@ def mm_video_scene_cuts(spark, sf_dir):
             .alias("first_cut_idx"),
         )
     )
+
+
+# ---------------------------------------------------------------------------
+# Audio silence segmentation (gaps-and-islands over frame energy)
+# ---------------------------------------------------------------------------
+
+_SIL_FRAME_BYTES = 64
+_SIL_MEANSQ = 9800  # silent iff mean-square energy < threshold
+
+
+@query(
+    "mm_audio_silence_segments",
+    oracle=f"""
+    WITH f AS (
+      SELECT doc_id AS media_id,
+             CAST(ceil(octet_length(encode(text)) / {_SIL_FRAME_BYTES}.0)
+               AS INT) AS n_frames,
+             hex(encode(text)) AS hx
+      FROM documents
+      WHERE octet_length(encode(text)) > 0
+    ), frames AS (
+      SELECT media_id, CAST(i AS INT) AS frame_idx,
+             substr(hx, CAST(i * {_SIL_FRAME_BYTES} * 2 + 1 AS BIGINT),
+                    {_SIL_FRAME_BYTES} * 2) AS fhx
+      FROM f, unnest(range(0, n_frames)) AS u(i)
+    ), en AS (
+      SELECT media_id, frame_idx,
+             list_sum(list_transform(
+               list_transform(range(1, CAST(len(fhx) / 2 AS BIGINT) + 1),
+                 j -> ('0x' || substr(fhx, (j - 1) * 2 + 1, 2))::BIGINT),
+               x -> x * x)) AS sq,
+             CAST(len(fhx) / 2 AS BIGINT) AS n
+      FROM frames
+    ), sil AS (
+      SELECT media_id, frame_idx,
+             frame_idx - ROW_NUMBER() OVER (PARTITION BY media_id
+                                            ORDER BY frame_idx) AS grp
+      FROM en WHERE sq < n * {_SIL_MEANSQ}
+    ), seg AS (
+      SELECT media_id, grp,
+             CAST(COUNT(*) AS BIGINT) AS seg_len,
+             MIN(frame_idx) AS seg_start
+      FROM sil GROUP BY media_id, grp
+    )
+    SELECT media_id,
+           CAST(COUNT(*) AS BIGINT) AS n_segments,
+           CAST(SUM(seg_len) AS BIGINT) AS n_silent_frames,
+           CAST(MAX(seg_len) AS BIGINT) AS longest_run,
+           CAST(MIN(seg_start) AS INT) AS first_silent_idx
+    FROM seg GROUP BY media_id
+    """,
+)
+def mm_audio_silence_segments(spark, sf_dir):
+    """Silence segmentation over framed audio: frames whose
+    mean-square sample energy falls below a threshold are silent, and
+    consecutive silent frames merge into segments (gaps-and-islands on
+    frame index) — the trim/split primitive of every speech pipeline
+    (VAD front-ends do exactly this with a learned threshold).
+
+    The threshold test is pure integer (sum-of-squares < n·T — no
+    division, no sqrt), the framing is the shared pure-Column
+    ``sample_frames`` plumbing (zero Python, codegen all the way), and
+    the islands trick is one per-media window — so the whole operator
+    is frame-scan + one narrow shuffle on media_id. Swap the byte
+    parse for a PCM decoder at the energy step; everything downstream
+    is unchanged."""
+    from caliper_poc_data_etl_spark.multimodal import (
+        documents_as_media,
+        sample_frames,
+    )
+
+    frames = sample_frames(
+        documents_as_media(spark, sf_dir), _SIL_FRAME_BYTES, every_n=1
+    )
+    hx = F.hex(F.col("frame"))
+    samples = F.transform(
+        F.sequence(F.lit(1), F.length("frame")),
+        lambda j: F.conv(F.substring(hx, (j - 1) * 2 + 1, 2), 16, 10).cast("long"),
+    )
+    en = frames.select(
+        "media_id",
+        F.col("frame_idx").cast("int").alias("frame_idx"),
+        F.aggregate(samples, F.lit(0).cast("long"), lambda a, x: a + x * x).alias(
+            "sq"
+        ),
+        F.length("frame").cast("long").alias("n"),
+    )
+    sil = en.filter(F.col("sq") < F.col("n") * _SIL_MEANSQ).select(
+        "media_id",
+        "frame_idx",
+        (
+            F.col("frame_idx")
+            - F.row_number().over(
+                W.partitionBy("media_id").orderBy("frame_idx")
+            )
+        ).alias("grp"),
+    )
+    seg = sil.groupBy("media_id", "grp").agg(
+        F.count("*").alias("seg_len"), F.min("frame_idx").alias("seg_start")
+    )
+    return seg.groupBy("media_id").agg(
+        F.count("*").cast("long").alias("n_segments"),
+        F.sum("seg_len").cast("long").alias("n_silent_frames"),
+        F.max("seg_len").cast("long").alias("longest_run"),
+        F.min("seg_start").cast("int").alias("first_silent_idx"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# DCT perceptual hash (pHash) over binary media
+# ---------------------------------------------------------------------------
+
+_PHASH_COS_SQL = "[" + ", ".join(str(c) for c in PHASH_COS) + "]"
+
+
+@query(
+    "mm_phash_dct",
+    oracle=f"""
+    WITH cost AS (
+      -- the integer cos basis as a COLUMN: inlining the 64-literal
+      -- list inside the DCT lambdas made DuckDB rebuild it per
+      -- element access (measured 38.5 s -> 0.6 s at sf0.1,
+      -- result-identical)
+      SELECT {_PHASH_COS_SQL} AS C
+    ), bytes AS (
+      SELECT doc_id AS media_id, hex(encode(text)) AS hx
+      FROM documents WHERE octet_length(encode(text)) >= {PHASH_PIXELS}
+    ), px AS (
+      SELECT media_id, C,
+             list_transform(range(1, {PHASH_PIXELS} + 1),
+               i -> ('0x' || substr(hx, CAST((i - 1) * 2 + 1 AS BIGINT), 2))::BIGINT)
+               AS b
+      FROM bytes CROSS JOIN cost
+    ), rowdct AS (
+      SELECT media_id, C, b,
+             list_transform(range(0, 64), uy ->
+               list_sum(list_transform(range(0, 8), x ->
+                 C[CAST((uy // 8) * 8 + x + 1 AS BIGINT)]
+                 * b[CAST(x * 8 + (uy % 8) + 1 AS BIGINT)]))) AS tt
+      FROM px
+    ), coldct AS (
+      SELECT media_id,
+             list_transform(range(0, 64), uv ->
+               list_sum(list_transform(range(0, 8), y ->
+                 C[CAST((uv % 8) * 8 + y + 1 AS BIGINT)]
+                 * tt[CAST((uv // 8) * 8 + y + 1 AS BIGINT)]))) AS d
+      FROM rowdct
+    ), med AS (
+      SELECT media_id, d, list_sort(d)[32] AS med FROM coldct
+    )
+    SELECT media_id,
+           CAST(list_sum(list_transform(range(32, 64), i ->
+             CASE WHEN d[CAST(i + 1 AS BIGINT)] > med
+                  THEN (1::BIGINT << CAST(i - 32 AS INT)) ELSE 0 END))
+             AS BIGINT) AS phash_hi,
+           CAST(list_sum(list_transform(range(0, 32), i ->
+             CASE WHEN d[CAST(i + 1 AS BIGINT)] > med
+                  THEN (1::BIGINT << CAST(i AS INT)) ELSE 0 END))
+             AS BIGINT) AS phash_lo,
+           CAST(len(list_filter(d, v -> v > med)) AS BIGINT) AS n_bits_set,
+           CAST(d[1] AS BIGINT) AS dc_coeff,
+           CAST(med AS BIGINT) AS median_coeff
+    FROM med
+    """,
+)
+def mm_phash_dct(spark, sf_dir):
+    """pHash — the DCT perceptual hash (``mm_ahash_hamming_neardup``'s
+    robust sibling: aHash thresholds raw pixels, pHash thresholds the
+    low-frequency DCT spectrum, so it survives brightness/contrast
+    shifts a real image pipeline sees). "Pixels" = the payload's first
+    64 bytes as an 8x8 grayscale tile (the documented fake-decode
+    stand-in; a real decoder resizes to 8x8 and the rest is
+    unchanged). The 2-D DCT-II runs in EXACT int64 arithmetic against
+    the integer-scaled cosine table :data:`multimodal.PHASH_COS`
+    (generated once at import and embedded verbatim in this oracle —
+    transcendental parity by construction); bit i = coefficient i
+    above the lower median. Output: the hash as two 32-bit halves (no
+    sign edge cases), bit count, DC coefficient and the median — the
+    fields a Hamming-banding stage (exactly the aHash one) consumes.
+
+    Scale shape: Arrow-batched mapInPandas, two fixed 8x8 integer
+    matmuls per row (numpy over the batch), embarrassingly parallel,
+    zero shuffle; memory bounded by Arrow batch size. Cites the mm
+    layout contract in multimodal.py (payload binary + typed meta)."""
+    media = documents_as_media(spark, sf_dir).filter(
+        F.length("payload") >= PHASH_PIXELS
+    )
+    return phash_dct64(media)

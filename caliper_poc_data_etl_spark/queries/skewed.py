@@ -1,7 +1,7 @@
 """Skew-mitigation operators as graded query entries.
 
 The ``skew`` module (salted two-stage aggregation, replicated-dim
-salted join) was pytest-only through round 2; these entries put both
+salted join) is pinned by pytest; these entries also put both
 constructions under the driver's DuckDB oracle. The oracle is the
 PLAIN formulation — salting is a physical rewrite that must be
 result-identical, and that identity is exactly what the hash check

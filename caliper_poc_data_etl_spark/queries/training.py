@@ -1,4 +1,4 @@
-"""Training-data preparation operators (round-2 additions).
+"""Training-data preparation operators.
 
 The ops an LLM pretraining/RAG corpus build needs between curation
 (curation.py) and tokenization: document chunking, token-budget
@@ -29,7 +29,9 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
+from pyspark.sql.window import Window as W
 
+from caliper_poc_data_etl_spark.queries.kernels import _TS_FMT_SPARK
 from caliper_poc_data_etl_spark.queries.registry import query, t
 
 CHUNK_SIZE = 200
@@ -37,9 +39,6 @@ CHUNK_STRIDE = 150
 
 PACK_SHARDS = 8
 PACK_BUDGET = 2048
-
-_TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-_TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S.%f"
 
 
 @query(
@@ -292,7 +291,7 @@ def inverted_index_postings(spark, sf_dir):
     production sink would write the whole list per term-partition.
     The prefix is emitted comma-joined (STRING, not array<bigint>):
     the grading driver's pandas canonicalizer cannot hash list cells,
-    so graded outputs keep every column scalar-typed (r3 lesson)."""
+    so graded outputs keep every column scalar-typed."""
     d = t(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("term")
@@ -1360,7 +1359,7 @@ def dq_constraint_check(spark, sf_dir):
     conditional sum in the SAME aggregate as the other four counters
     (the first form union-ed five branches over a shared scalar
     frame, and each branch recomputed it: plan_audit showed scans=8
-    where this docstring claimed one pass — the r9 quantile-drift
+    where this docstring claimed one pass — the quantile-drift
     lesson applied here). The five report rows then come from
     exploding a literal 5-struct array over the single 1-row
     aggregate, never from re-running it. S6's malformed-row policy is
@@ -1407,3 +1406,378 @@ def dq_constraint_check(spark, sf_dir):
         row("domain_orderstatus", 1 - nb / n, nb, nb == 0),
     )
     return m.select(F.explode(report).alias("r")).select("r.*")
+
+
+# ---------------------------------------------------------------------------
+# Training-batch manifest (epoch expansion → sequence packing)
+# ---------------------------------------------------------------------------
+
+_TBM_BUDGET = 2048  # tokens per packed sequence
+
+
+@query(
+    "training_batch_manifest",
+    oracle=f"""
+    WITH ep AS (
+      SELECT doc_id, source,
+             CAST(substr(source, 4) AS INT) % 3 + 1 AS epochs,
+             len(list_filter(string_split_regex(trim(text), '\\s+'),
+                 x -> x <> '')) AS n_tokens
+      FROM documents
+    ), expanded AS (
+      SELECT doc_id, source, n_tokens, CAST(u.i AS INT) AS copy_id
+      FROM ep, unnest(range(1, epochs + 1)) AS u(i)
+    ), offs AS (
+      SELECT source, doc_id, copy_id, n_tokens,
+             COALESCE(SUM(n_tokens) OVER (
+               PARTITION BY source ORDER BY copy_id, doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+               AS cum_before
+      FROM expanded
+    ), placed AS (
+      SELECT source, doc_id, copy_id, n_tokens,
+             CAST(FLOOR(cum_before / {_TBM_BUDGET}) AS BIGINT) AS seq_id
+      FROM offs
+    )
+    SELECT source, seq_id,
+           CAST(COUNT(*) AS BIGINT) AS n_items,
+           CAST(SUM(n_tokens) AS BIGINT) AS tokens_packed,
+           CAST(MIN(doc_id) AS BIGINT) AS first_doc,
+           CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_distinct_docs
+    FROM placed GROUP BY source, seq_id
+    """,
+)
+def training_batch_manifest(spark, sf_dir):
+    """The training-data assembly manifest — the composition that
+    turns a curated corpus into trainer input: epoch-expand each
+    source by its mixing recipe (``mix_epoch_oversample``'s knob),
+    order copies epoch-major so repeats of a document land in
+    DIFFERENT packed sequences, then greedy-pack token counts into
+    {_TBM_BUDGET}-token sequences by running offset
+    (``pack_sequences``' cumsum placement). The manifest rows (one
+    per packed sequence per source) are what a loader shards across
+    data-parallel workers.
+
+    Plan: one map-side epoch explode, one per-source running-sum
+    window (source-partitioned — sources are the natural parallel
+    unit), one groupBy. Per-sequence token totals and distinct-doc
+    counts make over-repetition auditable at the sequence level."""
+    d = t(spark, sf_dir, "documents")
+    ep = d.select(
+        "doc_id",
+        "source",
+        (F.substring("source", 4, 10).cast("int") % 3 + 1).alias("epochs"),
+        F.size(
+            F.filter(F.split(F.trim("text"), "\\s+"), lambda x: x != "")
+        ).alias("n_tokens"),
+    )
+    expanded = ep.select(
+        "doc_id",
+        "source",
+        "n_tokens",
+        F.explode(F.sequence(F.lit(1), F.col("epochs"))).alias("copy_id"),
+    )
+    woff = (
+        W.partitionBy("source")
+        .orderBy("copy_id", "doc_id")
+        .rowsBetween(W.unboundedPreceding, -1)
+    )
+    placed = expanded.select(
+        "source",
+        "doc_id",
+        "n_tokens",
+        F.floor(
+            F.coalesce(F.sum("n_tokens").over(woff), F.lit(0)) / _TBM_BUDGET
+        )
+        .cast("long")
+        .alias("seq_id"),
+    )
+    return placed.groupBy("source", "seq_id").agg(
+        F.count("*").cast("long").alias("n_items"),
+        F.sum("n_tokens").cast("long").alias("tokens_packed"),
+        F.min("doc_id").cast("long").alias("first_doc"),
+        F.countDistinct("doc_id").cast("long").alias("n_distinct_docs"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# SFT loss-mask construction
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "training_span_loss_mask",
+    oracle="""
+    WITH tok AS (
+      SELECT doc_id, len(string_split(text, ' ')) AS n_tokens
+      FROM documents
+    )
+    SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
+           CAST(p AS BIGINT) AS prompt_tokens,
+           CAST(n_tokens - p AS BIGINT) AS completion_tokens,
+           repeat('0', CAST(p AS INT))
+             || repeat('1', CAST(n_tokens - p AS INT)) AS loss_mask
+    FROM (SELECT doc_id, n_tokens,
+                 greatest(1, CAST(FLOOR(n_tokens / 3.0) AS BIGINT)) AS p
+          FROM tok)
+    """,
+)
+def training_span_loss_mask(spark, sf_dir):
+    """SFT loss-mask construction — the supervised-fine-tuning data
+    prep stage that marks which token positions contribute to the
+    loss: the first third of each document stands in for the prompt
+    (masked out, '0') and the remainder for the completion (trained,
+    '1'), emitted as a position-aligned mask string plus the span
+    counts the packer needs. Serialized as a string rather than an
+    array<int> per the registry's array-canonicalization convention.
+    Scale shape: pure per-row Column arithmetic and repeat() — zero
+    shuffle, no explode; the mask length is bounded by the document's
+    own token count."""
+    d = t(spark, sf_dir, "documents")
+    n = F.size(F.split(F.col("text"), " "))
+    p = F.greatest(F.lit(1), F.floor(n / 3.0).cast("long"))
+    tok = d.select(
+        "doc_id", n.cast("long").alias("n_tokens"), p.alias("p")
+    )
+    return tok.select(
+        "doc_id",
+        "n_tokens",
+        F.col("p").alias("prompt_tokens"),
+        (F.col("n_tokens") - F.col("p")).alias("completion_tokens"),
+        F.concat(
+            F.repeat(F.lit("0"), F.col("p").cast("int")),
+            F.repeat(F.lit("1"), (F.col("n_tokens") - F.col("p")).cast("int")),
+        ).alias("loss_mask"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Snake-draft balanced shard assignment
+# ---------------------------------------------------------------------------
+
+SNAKE_SHARDS = 8
+
+
+@query(
+    "training_shard_snake",
+    oracle=f"""
+    WITH ranked AS (
+      SELECT doc_id, n_chars,
+             ROW_NUMBER() OVER (ORDER BY n_chars DESC, doc_id) - 1 AS r0
+      FROM documents
+    ),
+    assigned AS (
+      SELECT doc_id, n_chars,
+             CASE WHEN (r0 // {SNAKE_SHARDS}) % 2 = 0
+                  THEN r0 % {SNAKE_SHARDS}
+                  ELSE {SNAKE_SHARDS - 1} - (r0 % {SNAKE_SHARDS})
+             END AS shard
+      FROM ranked
+    )
+    SELECT CAST(shard AS BIGINT) AS shard,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(n_chars) AS BIGINT) AS total_chars,
+           CAST(MIN(doc_id) AS BIGINT) AS min_doc
+    FROM assigned GROUP BY shard
+    """,
+)
+def training_shard_snake(spark, sf_dir):
+    """Size-balanced output sharding for training-data export — the
+    loader-side fix for the long-tail-shard straggler: sort documents
+    by size descending and deal them to N shards in a SNAKE draft
+    (rounds alternate direction 0..7, 7..0), which bounds the
+    per-shard size gap by one document. Hash-mod sharding balances
+    counts, not bytes; greedy first-fit is inherently sequential —
+    the snake draft is the distributed-friendly balancer because the
+    assignment is pure rank arithmetic.
+
+    The global rank uses the ``window_ntile`` construction, NOT a
+    single-reducer global window: range-repartition on the sort key,
+    per-partition counts → broadcast running offsets, global rank =
+    offset + local row_number. Emits per-shard totals; the balance
+    property (max−min spread ≤ max single doc) is pinned in pytest."""
+    d = t(spark, sf_dir, "documents").select(
+        "doc_id", "n_chars", (-F.col("n_chars")).alias("neg")
+    )
+    parts = d.repartitionByRange(32, "neg", "doc_id").withColumn(
+        "pid", F.spark_partition_id()
+    )
+    sizes = parts.groupBy("pid").agg(F.count("*").alias("cnt"))
+    # bounded-by-construction: window over <=32 partition-count rows
+    w_off = W.orderBy("pid").rowsBetween(W.unboundedPreceding, -1)
+    offsets = sizes.select(
+        "pid", F.coalesce(F.sum("cnt").over(w_off), F.lit(0)).alias("off")
+    )
+    w_local = W.partitionBy("pid").orderBy("neg", "doc_id")
+    r0 = F.col("off") + F.row_number().over(w_local) - 1
+    rnd = (r0 / SNAKE_SHARDS).cast("long")
+    pos = r0 % SNAKE_SHARDS
+    shard = F.when(rnd % 2 == 0, pos).otherwise(
+        F.lit(SNAKE_SHARDS - 1) - pos
+    )
+    return (
+        parts.join(F.broadcast(offsets), "pid")
+        .select(
+            shard.cast("long").alias("shard"), "doc_id", "n_chars"
+        )
+        .groupBy("shard")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars").alias("total_chars"),
+            F.min("doc_id").alias("min_doc"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Deterministic epoch-wise shuffle + data-parallel assignment
+# ---------------------------------------------------------------------------
+
+SHUFFLE_EPOCHS = 3
+DP_WORLD_SIZE = 8
+
+
+@query(
+    "training_epoch_shuffle_order",
+    oracle=f"""
+    WITH keyed AS (
+      SELECT u.e AS epoch, doc_id,
+             md5(CAST(u.e AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR))
+               AS skey
+      FROM documents, unnest(range(0, {SHUFFLE_EPOCHS})) AS u(e)
+    ),
+    ordered AS (
+      SELECT epoch, doc_id,
+             ROW_NUMBER() OVER (PARTITION BY epoch
+                                ORDER BY skey, doc_id) AS position
+      FROM keyed
+    )
+    SELECT CAST(epoch AS BIGINT) AS epoch, doc_id,
+           CAST(position AS BIGINT) AS position,
+           CAST((position - 1) % {DP_WORLD_SIZE} AS BIGINT) AS dp_rank,
+           CAST((position - 1) // {DP_WORLD_SIZE} AS BIGINT) AS dp_step
+    FROM ordered
+    """,
+)
+def training_epoch_shuffle_order(spark, sf_dir):
+    """Deterministic per-epoch shuffle manifest + data-parallel
+    assignment — the reproducibility contract of a distributed
+    dataloader: every trainer rank must independently derive the SAME
+    global order for epoch e (resume-from-step, skip-batch debugging,
+    and bitwise rerun all depend on it), and each document lands on
+    rank ``(pos-1) % world`` at step ``(pos-1) // world``. The shuffle
+    key is md5(epoch:doc_id) — seeded, content-independent, different
+    every epoch (so repeats of a document meet different neighbors,
+    the property ``training_batch_manifest``'s epoch-major order
+    relies on), and identical on any engine that re-derives it.
+
+    Complements the training pack: ``training_batch_manifest`` decides
+    WHAT enters an epoch (mixing/packing), this decides the ORDER and
+    the RANK; ``training_shard_snake`` balances export shards.
+
+    Scale shape: the manifest is corpus x epochs rows by definition
+    (written to the loader, never collected). Position assignment is a
+    per-epoch global sort — Spark range-partitions the sort; the
+    row_number window per epoch is the declarative form (at 100 TB
+    you'd emit per-partition counts and add range offsets — two
+    passes, same result; epochs parallelize independently either
+    way). Everything else is per-row modular arithmetic."""
+    d = t(spark, sf_dir, "documents")
+    keyed = d.select(
+        F.explode(
+            F.array(*[F.lit(e).cast("long") for e in range(SHUFFLE_EPOCHS)])
+        ).alias("epoch"),
+        "doc_id",
+    ).withColumn(
+        "skey",
+        F.md5(
+            F.concat_ws(":", F.col("epoch").cast("string"), F.col("doc_id").cast("string"))
+        ),
+    )
+    w = W.partitionBy("epoch").orderBy("skey", "doc_id")
+    pos = F.row_number().over(w).cast("long")
+    return keyed.select(
+        "epoch",
+        "doc_id",
+        pos.alias("position"),
+    ).select(
+        "epoch",
+        "doc_id",
+        "position",
+        ((F.col("position") - 1) % DP_WORLD_SIZE).alias("dp_rank"),
+        ((F.col("position") - 1) / DP_WORLD_SIZE).cast("long").alias("dp_step"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Power-of-two length-bucketed batching
+# ---------------------------------------------------------------------------
+
+LB_BATCH_DOCS = 16  # documents per batch within a bucket
+
+
+@query(
+    "training_length_bucket_batches",
+    oracle=f"""
+    WITH n AS (
+      SELECT doc_id,
+             len(list_filter(string_split_regex(trim(text), '\\s+'),
+                             x -> x <> '')) AS n_tokens
+      FROM documents
+    ),
+    b AS (
+      SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
+             CAST(CASE WHEN n_tokens <= 1 THEN 1
+                       ELSE 1::BIGINT << CAST(length(bin(n_tokens - 1)) AS INT)
+                  END AS BIGINT) AS bucket
+      FROM n
+    ),
+    r AS (
+      SELECT doc_id, n_tokens, bucket,
+             ROW_NUMBER() OVER (PARTITION BY bucket ORDER BY doc_id) AS rn
+      FROM b
+    )
+    SELECT doc_id, n_tokens, bucket,
+           CAST((rn - 1) // {LB_BATCH_DOCS} AS BIGINT) AS batch_idx,
+           CAST(bucket - n_tokens AS BIGINT) AS padding
+    FROM r
+    """,
+)
+def training_length_bucket_batches(spark, sf_dir):
+    """Power-of-two length-bucketed batching — the dynamic-batching
+    manifest a trainer's loader uses to bound padding waste: each
+    document pads to the next power of two of its token count (the
+    envelope guarantees padding < n_tokens, pinned in pytest), and
+    batches of {LB_BATCH_DOCS} form WITHIN a bucket so every batch is
+    rectangular. Complements the pack: ``pack_sequences``
+    concatenates into fixed windows (no padding, loses example
+    boundaries); bucketed batching keeps one example per row and pays
+    bounded padding — the standard trade-off pair.
+
+    Exactness: the bucket is pure integer bit arithmetic — next pow2
+    via the binary-digit length (1 << len(bin(n-1)), the HLL rho
+    idiom), no log. Scale shape: one scan, per-row token count, one
+    bucket-partitioned window (buckets are the natural parallel unit,
+    ~log(max_len) of them, each corpus-sized/|buckets| — at extreme
+    skew a bucket's window range-partitions exactly like any sort)."""
+    d = t(spark, sf_dir, "documents")
+    n_tokens = F.size(
+        F.filter(F.split(F.trim("text"), "\\s+"), lambda x: x != "")
+    ).cast("long")
+    b = d.select("doc_id", n_tokens.alias("n_tokens")).withColumn(
+        "bucket",
+        F.when(F.col("n_tokens") <= 1, F.lit(1).cast("long")).otherwise(
+            F.expr("shiftleft(1L, cast(length(bin(n_tokens - 1)) as int))")
+        ),
+    )
+    w = W.partitionBy("bucket").orderBy("doc_id")
+    rn = F.row_number().over(w).cast("long")
+    # (rn-1)/{B}: both operands tiny, the double quotient is exact and
+    # the truncation equals the oracle's // on nonnegatives
+    return b.select(
+        "doc_id",
+        "n_tokens",
+        "bucket",
+        ((rn - 1) / LB_BATCH_DOCS).cast("long").alias("batch_idx"),
+        (F.col("bucket") - F.col("n_tokens")).alias("padding"),
+    )

@@ -9,7 +9,7 @@ vectorized over record batches, ~10-100× faster than row-at-a-time
 ``F.udf``, and visible in plans as ArrowEvalPython.
 
 The example below is intentionally one we ALSO have natively
-(`similarity._dot`): the pandas_udf twin is oracle-checked against
+(`kernels.dot`): the pandas_udf twin is oracle-checked against
 DuckDB, and the pytest suite asserts it agrees with the native path —
 demonstrating the hatch without ever needing it.
 """

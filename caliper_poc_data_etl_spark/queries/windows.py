@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from caliper_poc_data_etl_spark.queries.kernels import _TS_FMT_DUCK, _TS_FMT_SPARK
 from caliper_poc_data_etl_spark.queries.registry import query, t
 
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -506,3 +507,452 @@ def window_max_drawdown(spark, sf_dir):
         .cast("double")
         .alias("last_peak_cum"),
     )
+
+
+@query(
+    "window_locf_fill",
+    oracle="""
+    SELECT event_id, user_id,
+           last_value(CASE WHEN event_type = 'purchase' THEN value END
+                      IGNORE NULLS)
+             OVER (PARTITION BY user_id ORDER BY ts, event_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+             AS last_purchase_value
+    FROM events
+    """,
+)
+def window_locf_fill(spark, sf_dir):
+    """Last-observation-carried-forward (IGNORE NULLS running
+    last_value): each event carries the most recent purchase value of
+    its user — the standard sparse-signal fill before feature joins.
+    One window, one shuffle on user_id."""
+    w = (
+        W.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    signal = F.when(F.col("event_type") == "purchase", F.col("value"))
+    return t(spark, sf_dir, "events").select(
+        "event_id",
+        "user_id",
+        F.last(signal, ignorenulls=True).over(w).alias("last_purchase_value"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Exact rolling median over a row frame
+# ---------------------------------------------------------------------------
+
+RM_FRAME = 6  # preceding rows; frame = 6 PRECEDING .. CURRENT ROW
+
+
+@query(
+    "window_rolling_median",
+    oracle=f"""
+    WITH q AS (
+      SELECT user_id, event_id, ts,
+             CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT) AS vq
+      FROM events
+    ), fr AS (
+      SELECT user_id, event_id, ts,
+             list_sort(list(vq) OVER (
+               PARTITION BY user_id ORDER BY ts, event_id
+               ROWS BETWEEN {RM_FRAME} PRECEDING AND CURRENT ROW)) AS lst
+      FROM q
+    )
+    SELECT user_id, event_id,
+           strftime(ts, '{_TS_FMT_DUCK}') AS ts_s,
+           CAST(len(lst) AS INT) AS n_frame,
+           CAST(CASE WHEN len(lst) % 2 = 1
+                THEN 2 * lst[(len(lst) + 1) // 2]
+                ELSE lst[len(lst) // 2] + lst[len(lst) // 2 + 1]
+           END AS BIGINT) AS med2_micro
+    FROM fr
+    """,
+)
+def window_rolling_median(spark, sf_dir):
+    """Exact moving median of the event value over a trailing 7-row
+    frame per user — the robust-smoothing primitive (a moving average
+    distorts under spikes; the median doesn't). Spark has no exact
+    percentile over a moving frame, so the frame materializes as a
+    collected array, sorts, and indexes — correct because the frame is
+    CONSTANT-BOUNDED (7 rows), so per-row state is O(frame), not
+    O(partition).
+
+    Cross-engine exactness: values floor-quantize to integer
+    micro-units first, and the even-frame median is emitted as the
+    SUM of the two middle elements (med2 = 2×median) — integer
+    arithmetic end to end, no .5-tie or division divergence. One
+    shuffle (hash by user), per-user sort; scales across users."""
+    e = t(spark, sf_dir, "events")
+    vq = F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long")
+    w = (
+        W.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(-RM_FRAME, 0)
+    )
+    lst = F.sort_array(F.collect_list(vq).over(w))
+    n = F.size(F.col("lst"))
+    mid_hi = F.floor((n + 1) / 2).cast("int")
+    mid_lo = F.floor(n / 2).cast("int")
+    med2 = F.when(
+        n % 2 == 1, 2 * F.element_at("lst", mid_hi)
+    ).otherwise(
+        F.element_at("lst", mid_lo) + F.element_at("lst", mid_lo + 1)
+    )
+    return (
+        e.select(
+            "user_id",
+            "event_id",
+            F.date_format("ts", _TS_FMT_SPARK).alias("ts_s"),
+            lst.alias("lst"),
+        )
+        .select(
+            "user_id",
+            "event_id",
+            "ts_s",
+            n.cast("int").alias("n_frame"),
+            med2.cast("long").alias("med2_micro"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Hampel outlier filter (rolling median ± k·MAD)
+# ---------------------------------------------------------------------------
+
+HAMPEL_T = 3  # |x - med| > 3·MAD flags
+
+
+@query(
+    "window_hampel_outliers",
+    oracle=f"""
+    WITH q AS (
+      SELECT user_id, event_id, ts,
+             CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT) AS vq
+      FROM events
+    ), fr AS (
+      SELECT user_id, event_id, ts, vq,
+             list_sort(list(vq) OVER w) AS lst
+      FROM q
+      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+                   ROWS BETWEEN {RM_FRAME} PRECEDING AND CURRENT ROW)
+    ), med AS (
+      SELECT user_id, event_id, ts, vq, lst,
+             CASE WHEN len(lst) % 2 = 1
+                  THEN 2 * lst[(len(lst) + 1) // 2]
+                  ELSE lst[len(lst) // 2] + lst[len(lst) // 2 + 1]
+             END AS med2
+      FROM fr
+    ), dev AS (
+      SELECT user_id, event_id, ts, vq, med2,
+             list_sort(list_transform(lst, x -> abs(2 * x - med2))) AS dl
+      FROM med
+    )
+    SELECT user_id, event_id,
+           strftime(ts, '{_TS_FMT_DUCK}') AS ts_s,
+           CAST(vq AS BIGINT) AS vq_micro,
+           CAST(med2 AS BIGINT) AS med2_micro,
+           CAST(CASE WHEN len(dl) % 2 = 1
+                THEN 2 * dl[(len(dl) + 1) // 2]
+                ELSE dl[len(dl) // 2] + dl[len(dl) // 2 + 1]
+           END AS BIGINT) AS mad4_micro,
+           2 * abs(2 * vq - med2) > {HAMPEL_T} * (
+             CASE WHEN len(dl) % 2 = 1
+                  THEN 2 * dl[(len(dl) + 1) // 2]
+                  ELSE dl[len(dl) // 2] + dl[len(dl) // 2 + 1] END)
+             AS is_outlier
+    FROM dev
+    """,
+)
+def window_hampel_outliers(spark, sf_dir):
+    """Hampel outlier filter: a point is anomalous when it deviates
+    from its trailing-window MEDIAN by more than {HAMPEL_T}× the
+    window's MAD — the robust replacement for the z-score filter
+    (``anomaly_zscore_events``), immune to the outliers polluting
+    their own baseline (a spike inflates a mean+stddev gate but
+    barely moves median/MAD). The de-facto standard despiker for
+    sensor and metrics streams.
+
+    Integer-exact doubling cascade: med2 = 2·median,
+    d = |2x − med2| = 2|x − med|, mad4 = med2-of-d = 4·MAD, and the
+    flag is the cross-multiplied 2·d > {HAMPEL_T}·mad4 — no division
+    anywhere. Same constant-bounded frame argument as
+    ``window_rolling_median``: per-row state is O(frame), one hash
+    shuffle by user."""
+    e = t(spark, sf_dir, "events")
+    vq = F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long")
+    w = (
+        W.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(-RM_FRAME, 0)
+    )
+    lst = F.sort_array(F.collect_list(vq).over(w))
+    base = e.select(
+        "user_id",
+        "event_id",
+        F.date_format("ts", _TS_FMT_SPARK).alias("ts_s"),
+        vq.alias("vq"),
+        lst.alias("lst"),
+    )
+
+    def med2_of(arr):
+        n = F.size(arr)
+        hi = F.floor((n + 1) / 2).cast("int")
+        lo = F.floor(n / 2).cast("int")
+        return F.when(n % 2 == 1, 2 * F.element_at(arr, hi)).otherwise(
+            F.element_at(arr, lo) + F.element_at(arr, lo + 1)
+        )
+
+    med = base.withColumn("med2", med2_of(F.col("lst")))
+    dl = F.sort_array(
+        F.transform(F.col("lst"), lambda x: F.abs(2 * x - F.col("med2")))
+    )
+    dev = med.withColumn("mad4", med2_of(dl))
+    return dev.select(
+        "user_id",
+        "event_id",
+        "ts_s",
+        F.col("vq").cast("long").alias("vq_micro"),
+        F.col("med2").cast("long").alias("med2_micro"),
+        F.col("mad4").cast("long").alias("mad4_micro"),
+        (
+            2 * F.abs(2 * F.col("vq") - F.col("med2"))
+            > HAMPEL_T * F.col("mad4")
+        ).alias("is_outlier"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Time-interval RANGE window frame
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "window_time_range_frame",
+    oracle="""
+    SELECT event_id, user_id,
+           strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_s,
+           CAST(COUNT(*) OVER w AS BIGINT) AS cnt_1h,
+           CAST(SUM(CAST(FLOOR(value * 100) AS BIGINT)) OVER w AS BIGINT)
+             AS sum_centi_1h
+    FROM events
+    WINDOW w AS (PARTITION BY user_id ORDER BY ts
+                 RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
+    """,
+)
+def window_time_range_frame(spark, sf_dir):
+    """Time-interval RANGE window frame — the rolling trailing-hour
+    aggregate stated as a frame bound (RANGE BETWEEN INTERVAL 1 HOUR
+    PRECEDING), not a self-join: per user, how many events and how
+    much quantized value landed in the 60 minutes up to each event.
+    This is the sliding-window primitive behind rate limiting and
+    velocity features; unlike ROWS frames the bound is a TIME span,
+    so bursty users get wide frames and quiet users narrow ones, and
+    timestamp peers enter the frame together (identical peer
+    semantics on both engines). Scale shape: one shuffle on user_id,
+    one per-partition time sort, frames advance with a two-pointer
+    scan — no self-join blowup; the value is centi-quantized before
+    the frame SUM so the aggregate is BIGINT-exact."""
+    t(spark, sf_dir, "events").createOrReplaceTempView("events_trf_r7")
+    return spark.sql(
+        """
+        SELECT event_id, user_id,
+               date_format(ts, 'yyyy-MM-dd HH:mm:ss.SSSSSS') AS ts_s,
+               CAST(COUNT(*) OVER w AS BIGINT) AS cnt_1h,
+               CAST(SUM(CAST(FLOOR(value * 100) AS BIGINT)) OVER w AS BIGINT)
+                 AS sum_centi_1h
+        FROM events_trf_r7
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts
+                     RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
+        """
+    )
+
+
+# ---------------------------------------------------------------------------
+# Rolling OLS slope (windowed regression as exact integer sums)
+# ---------------------------------------------------------------------------
+
+SLOPE_WIN = 7
+SLOPE_MICRO = 1_000_000
+
+
+@query(
+    "window_rolling_slope",
+    oracle=f"""
+    WITH daily AS (
+      SELECT event_type,
+             CAST(ts AS DATE) AS day,
+             date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS x,
+             SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS y
+      FROM events GROUP BY 1, 2, 3
+    ),
+    sums AS (
+      SELECT event_type, day,
+             COUNT(*) OVER w AS n,
+             SUM(x) OVER w AS sx, SUM(y) OVER w AS sy,
+             SUM(x * y) OVER w AS sxy, SUM(x * x) OVER w AS sxx
+      FROM daily
+      WINDOW w AS (PARTITION BY event_type ORDER BY day
+                   ROWS BETWEEN {SLOPE_WIN - 1} PRECEDING AND CURRENT ROW)
+    ),
+    scaled AS (
+      SELECT event_type, day,
+             n * sxy - sx * sy AS num,
+             n * sxx - sx * sx AS den,
+             (n * sxy - sx * sy) * {SLOPE_MICRO} AS snum
+      FROM sums WHERE n = {SLOPE_WIN}
+    )
+    SELECT event_type, strftime(day, '%Y-%m-%d') AS day,
+           CAST(num AS BIGINT) AS slope_num,
+           CAST(den AS BIGINT) AS slope_den,
+           -- exact floor division: DuckDB // truncates on negatives
+           CAST((snum - ((snum % den + den) % den)) // den AS BIGINT)
+             AS slope_micro
+    FROM scaled
+    """,
+)
+def window_rolling_slope(spark, sf_dir):
+    """Rolling OLS slope — the trailing-7-day linear trend of each
+    event type's daily total, the windowed version of the
+    ``agg_regr_slope`` aggregate (monitoring dashboards run exactly
+    this: slope-over-trailing-window as the trend alarm). The closed
+    form (n·Σxy − Σx·Σy)/(n·Σx² − (Σx)²) needs only frame SUMs, so
+    the plan is one daily partial aggregation then ONE window pass
+    computing four running sums together — no self-join, no per-frame
+    recompute. Everything stays BIGINT (days as integer x, values
+    centi-quantized); the quotient is emitted as the exact num/den
+    pair plus a FLOOR-division micro-slope (floor, not truncate:
+    slopes go negative and the engines' integer `div` semantics
+    differ — the (s − pmod)/n identity). Short leading frames are
+    excluded (n = 7), the textbook trailing-window rule."""
+    e = t(spark, sf_dir, "events")
+    daily = e.groupBy(
+        "event_type",
+        F.col("ts").cast("date").alias("day"),
+    ).agg(
+        F.sum(
+            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+        ).alias("y")
+    ).select(
+        "event_type",
+        "day",
+        F.datediff("day", F.lit("2024-01-01")).cast("long").alias("x"),
+        "y",
+    )
+    # bounded-by-construction: per-type daily frame (|days| rows)
+    w = (
+        W.partitionBy("event_type")
+        .orderBy("day")
+        .rowsBetween(-(SLOPE_WIN - 1), 0)
+    )
+    sums = daily.select(
+        "event_type",
+        "day",
+        F.count(F.lit(1)).over(w).alias("n"),
+        F.sum("x").over(w).alias("sx"),
+        F.sum("y").over(w).alias("sy"),
+        F.sum(F.col("x") * F.col("y")).over(w).alias("sxy"),
+        F.sum(F.col("x") * F.col("x")).over(w).alias("sxx"),
+    ).filter(F.col("n") == SLOPE_WIN)
+    num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
+    den = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
+    return sums.select(
+        "event_type",
+        F.date_format("day", "yyyy-MM-dd").alias("day"),
+        num.cast("long").alias("slope_num"),
+        den.cast("long").alias("slope_den"),
+        # exact floor division (negative numerators): (s - pmod(s, n)) / n
+        F.expr(
+            f"(({SLOPE_MICRO} * (n * sxy - sx * sy)) "
+            f"- pmod({SLOPE_MICRO} * (n * sxy - sx * sy), n * sxx - sx * sx)) "
+            f"div (n * sxx - sx * sx)"
+        ).cast("long").alias("slope_micro"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Marketing touch attribution (first-touch / last-touch credits)
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "window_touch_attribution",
+    oracle="""
+    WITH stream AS (
+      SELECT user_id, ts, event_id, event_type,
+             CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS tag
+      FROM events WHERE event_type IN ('view', 'click', 'purchase')
+    ),
+    touched AS (
+      SELECT event_type, user_id,
+             FIRST_VALUE(CASE WHEN event_type IN ('view', 'click')
+                              THEN event_type END IGNORE NULLS) OVER w
+               AS first_touch,
+             LAST_VALUE(CASE WHEN event_type IN ('view', 'click')
+                             THEN event_type END IGNORE NULLS) OVER w
+               AS last_touch
+      FROM stream
+      WINDOW w AS (PARTITION BY user_id ORDER BY ts, tag, event_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+    ),
+    p AS (SELECT * FROM touched WHERE event_type = 'purchase')
+    SELECT 'first_touch' AS model,
+           COALESCE(first_touch, 'none') AS channel,
+           CAST(COUNT(*) AS BIGINT) AS credits
+    FROM p GROUP BY 2
+    UNION ALL
+    SELECT 'last_touch' AS model,
+           COALESCE(last_touch, 'none') AS channel,
+           CAST(COUNT(*) AS BIGINT) AS credits
+    FROM p GROUP BY 2
+    """,
+)
+def window_touch_attribution(spark, sf_dir):
+    """Marketing touch attribution — credit each conversion
+    (purchase) to the user's FIRST and LAST preceding marketing touch
+    (view/click), the two bookend models every attribution system
+    ships first. Same single-pass shape as ``join_pit_feature_store``:
+    both touch columns resolve in ONE user-partitioned window over
+    the unioned stream (IGNORE NULLS first/last), so adding models
+    costs columns, not shuffles; conversions with no prior touch
+    credit the 'none' channel (the unattributable bucket every real
+    report needs). Touch rows order before conversions on equal ts
+    via an explicit tag. Output: credits per (model, channel) —
+    two tiny aggregations over the filtered conversions."""
+    e = t(spark, sf_dir, "events")
+    stream = e.filter(
+        F.col("event_type").isin("view", "click", "purchase")
+    ).select(
+        "user_id",
+        "ts",
+        "event_id",
+        "event_type",
+        F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("tag"),
+    )
+    w = (
+        W.partitionBy("user_id")
+        .orderBy("ts", "tag", "event_id")
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    touch = F.when(
+        F.col("event_type").isin("view", "click"), F.col("event_type")
+    )
+    p = (
+        stream.withColumn(
+            "first_touch", F.first(touch, ignorenulls=True).over(w)
+        )
+        .withColumn("last_touch", F.last(touch, ignorenulls=True).over(w))
+        .filter(F.col("event_type") == "purchase")
+    )
+    first = p.groupBy(
+        F.coalesce("first_touch", F.lit("none")).alias("channel")
+    ).agg(F.count(F.lit(1)).cast("long").alias("credits")).select(
+        F.lit("first_touch").alias("model"), "channel", "credits"
+    )
+    last = p.groupBy(
+        F.coalesce("last_touch", F.lit("none")).alias("channel")
+    ).agg(F.count(F.lit(1)).cast("long").alias("credits")).select(
+        F.lit("last_touch").alias("model"), "channel", "credits"
+    )
+    return first.unionByName(last)

@@ -30,7 +30,7 @@ _replay_counter = itertools.count()
 # record_stream_progress() itself evicts the oldest replays beyond
 # _MAX_RECORDED_REPLAYS — without that, a long bench/check_oracle
 # session (each replay records under a unique 'replay_N' key) would
-# accumulate every replay's history in driver memory (ADVICE r6).
+# accumulate every replay's history in driver memory.
 RECENT_STREAM_PROGRESS: dict[str, list[dict]] = {}
 
 _MAX_RECORDED_REPLAYS = 16
@@ -49,7 +49,7 @@ def record_stream_progress(name: str, q) -> None:
     # Pop-and-reinsert so dict insertion order tracks recency of
     # RECORDING: re-recording an existing name must move it to the
     # back, or a just-refreshed replay could be evicted as "oldest"
-    # while stale entries survive (ADVICE r7).
+    # while stale entries survive.
     RECENT_STREAM_PROGRESS.pop(name, None)
     RECENT_STREAM_PROGRESS[name] = progress
     while len(RECENT_STREAM_PROGRESS) > _MAX_RECORDED_REPLAYS:
@@ -263,8 +263,8 @@ def stage_watermark_flush_source(spark: SparkSession, sf_dir: str) -> str:
     apply_fixture_confs(spark)
     raw = spark.read.parquet(f"{key}/events.parquet")
     stage = tempfile.mkdtemp(prefix="wm_flush_")
-    # ADVICE r11: staged dirs were cached for process life but never
-    # removed, leaking one sentinel dir per sf_dir per process into
+    # Staged dirs are cached for process life; without reaping they
+    # would never be removed, leaking one sentinel dir per sf_dir per process into
     # /tmp across bench/sweep invocations — reap them at process exit.
     import atexit
 

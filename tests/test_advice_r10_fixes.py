@@ -1,17 +1,17 @@
 """Regression tests for the ADVICE r9 findings (all low severity):
 
-1. queries/round13.py — decontam_embedding_cosine keeps the RAW-FLOAT
+1. queries/dedup.py — decontam_embedding_cosine keeps the RAW-FLOAT
    cosine form deliberately (acceptance recorded in the docstring, to
    stay twinned with dedup_embedding_cosine); the acceptance's factual
    basis — "the fixtures sit far from the threshold and from every
    ROUND(...,4) boundary" — is pinned HERE so a future corpus that
    shrinks the margin fails loudly and forces the integer
    quantize-then-score port (both twins together).
-2. queries/round14.py — _hll_raw_milli_cols renamed
+2. queries/relational.py — _hll_raw_milli_cols renamed
    _hll_clamped_inverse_col with a docstring that matches its return
    value (docstring-only; estimator parity already pinned in
    tests/test_round14_ops.py).
-3. queries/round14.py — mix_round_robin_interleave re-planned: the
+3. queries/curation.py — mix_round_robin_interleave re-planned: the
    global position no longer routes the whole manifest through a
    single-partition Window (the WindowExec warning ADVICE flagged) —
    range repartition + per-partition rank + broadcast offset table.
@@ -35,7 +35,7 @@ def _cosine_margins(sf_dir: str) -> tuple[float, float]:
     """(min |cosine - threshold|, min grid-distance of any FLAGGED
     cosine to a ROUND(...,4) half-point) over the fixture corpus,
     computed in DuckDB with the op's own expression shape."""
-    from caliper_poc_data_etl_spark.queries.round13 import (
+    from caliper_poc_data_etl_spark.queries.dedup import (
         DECONTAM_COS_THRESHOLD,
         DECONTAM_EVAL_VEC_MOD,
     )
@@ -77,9 +77,7 @@ class TestDecontamRawFloatAcceptance:
             assert grid_margin > 1e-3, sf
 
     def test_acceptance_recorded_in_docstring(self):
-        from caliper_poc_data_etl_spark.queries.round13 import (
-            decontam_embedding_cosine,
-        )
+        from caliper_poc_data_etl_spark.queries.dedup import decontam_embedding_cosine
 
         doc = decontam_embedding_cosine.__doc__ or ""
         assert "RAW-FLOAT FORM ACCEPTED" in doc
@@ -87,10 +85,10 @@ class TestDecontamRawFloatAcceptance:
 
 class TestHllHelperRename:
     def test_docstring_matches_return(self):
-        from caliper_poc_data_etl_spark.queries import round14
+        from caliper_poc_data_etl_spark.queries import relational
 
-        assert not hasattr(round14, "_hll_raw_milli_cols")
-        doc = round14._hll_clamped_inverse_col.__doc__ or ""
+        assert not hasattr(relational, "_hll_raw_milli_cols")
+        doc = relational._hll_clamped_inverse_col.__doc__ or ""
         assert "clamped" in doc.lower()
 
 

@@ -1,6 +1,6 @@
 """Regression tests for the ADVICE r11 findings (all low severity):
 
-1. queries/round7.py — text_winnowing_fingerprint's 22-bit packed
+1. queries/text.py — text_winnowing_fingerprint's 22-bit packed
    position field now fails LOUDLY past 4,194,303 chars (assert_true
    in-plan) instead of silently corrupting fingerprints.
 2. streaming/events.py — stage_watermark_flush_source registers its

@@ -1,12 +1,12 @@
 """Regression tests for the ADVICE r7 findings (all low severity):
 
-1. queries/round10.py — ml_cohens_kappa derived Σ rmₖ·cmₖ from
+1. queries/ml.py — ml_cohens_kappa derived Σ rmₖ·cmₖ from
    DIAGONAL cells; a label with nonzero row/column marginals but an
    empty (k,k) cell silently dropped its chance term, overstating
    kappa on BOTH engines (cross-engine hash can't catch it). Now pe
    comes from the row/column marginal tables full-outer-joined on
    label, removing the data-dependent precondition.
-2. queries/round10.py — geo_geohash_encode assumes nonnegative
+2. queries/scalars.py — geo_geohash_encode assumes nonnegative
    user_id/event_id (sign-preserving % plus DuckDB-//-vs-Spark-div
    divergence on negative operands would break parity). The
    assumption is pinned here against the driver fixtures so a future

@@ -1,6 +1,6 @@
 """Regression tests for the ADVICE r8 findings (all low severity):
 
-1. queries/round11.py — ml_psi_drift: the DuckDB oracle's
+1. queries/ml.py — ml_psi_drift: the DuckDB oracle's
    ``CASE WHEN early THEN 0 ELSE 1`` classified a NULL o_orderdate as
    late while Spark's ``early.cast('int')`` yielded NULL which sum()
    skipped — a NULL-dated row was counted on one side but not the
@@ -8,7 +8,7 @@
    alignment is pinned here with a synthetic NULL-dated row so the
    divergence class fails loudly even though the fixtures carry no
    NULL dates.
-2. queries/round11.py — curation_span_dedup_rewrite: the survivorship
+2. queries/curation.py — curation_span_dedup_rewrite: the survivorship
    key ``doc_id * _SPAN_IDX_BASE + pos`` mis-ranks first-occurrence
    survivorship for any document with >= _SPAN_IDX_BASE words —
    identically on both engines, so the cross-engine hash stays green
@@ -30,7 +30,7 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from caliper_poc_data_etl_spark.queries.round11 import _SPAN_IDX_BASE
+from caliper_poc_data_etl_spark.queries.curation import _SPAN_IDX_BASE
 from tests.conftest import SF_DIR, SF_DIR_ORACLE
 
 

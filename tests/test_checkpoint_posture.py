@@ -1,16 +1,19 @@
-"""Checkpoint-posture tests (VERDICT r12 #7).
+"""Checkpoint-posture tests.
 
 Pins the two claims the iterative operators' lazy localCheckpoints
 rest on:
 
-1. **Once-per-round execution**: a lazy localCheckpoint dedupes its
+1. **Once-per-round execution**: a lazy checkpoint dedupes its
    downstream references — each round's plan executes exactly once
    even though two later operators read it (asserted with a Python
-   accumulator bumped per processed row inside the round).
+   accumulator bumped per processed row inside the round), in local
+   mode and, because the round is persisted before the write, in
+   reliable mode.
 2. **The reliable-mode switch**: with
    ``spark.graft.checkpoint.reliable=true`` (+ a checkpoint dir),
-   :func:`graph.truncate_lineage` routes to reliable ``checkpoint()``
-   and the graded iterative queries produce identical values.
+   :func:`graph.truncate_lineage` routes to reliable ``checkpoint()``,
+   every iterative query truncates through it (the checkpoint dir is
+   written), and the queries produce identical values.
 """
 
 from __future__ import annotations
@@ -24,11 +27,10 @@ from caliper_poc_data_etl_spark.graph import truncate_lineage
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_lazy_rounds_execute_once(spark):
-    """Two downstream consumers of a lazy-checkpointed round must not
-    re-execute the round's plan: the accumulator counts row-level
-    evaluations of the round body, which must equal rows x rounds
-    (not 2x) after the final action."""
+def _count_round_evaluations(spark, checkpoint):
+    """Run 3 rounds over 100 rows, each lazily checkpointed by
+    ``checkpoint`` and consumed twice; return (rows, round-body
+    row evaluations)."""
     sc = spark.sparkContext
     acc = sc.accumulator(0)
 
@@ -46,14 +48,42 @@ def test_lazy_rounds_execute_once(spark):
         # then the result is lazily checkpointed and consumed TWICE
         # (self-join), like the CC/kmeans rounds' double references.
         stepped = labels.select("node", bump(F.col("lbl")).alias("lbl"))
-        ck = stepped.localCheckpoint(eager=False)
+        ck = checkpoint(stepped)
         labels = ck.alias("a").join(
             ck.select(F.col("node").alias("node2"), F.col("lbl").alias("lbl2")),
             F.col("node") == F.col("node2"),
         ).select("node", F.least("lbl", "lbl2").alias("lbl"))
-    assert labels.count() == n_rows
+    return labels.count(), acc.value
+
+
+def test_lazy_rounds_execute_once(spark):
+    """Two downstream consumers of a lazy-checkpointed round must not
+    re-execute the round's plan: the accumulator counts row-level
+    evaluations of the round body, which must equal rows x rounds
+    (not 2x) after the final action."""
+    rows, evals = _count_round_evaluations(
+        spark, lambda df: df.localCheckpoint(eager=False)
+    )
+    assert rows == 100
     # each round evaluated each row exactly once despite two consumers
-    assert acc.value == n_rows * n_rounds
+    assert evals == 100 * 3
+
+
+def test_lazy_rounds_execute_once_reliable_mode(spark, tmp_path):
+    """Reliable mode: neither the two consumers nor the separate
+    checkpoint-write job may re-run a lazy round's plan."""
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ck"))
+    spark.conf.set("spark.graft.checkpoint.reliable", "true")
+    try:
+        rows, evals = _count_round_evaluations(
+            spark, lambda df: truncate_lineage(df, eager=False)
+        )
+    finally:
+        spark.conf.set("spark.graft.checkpoint.reliable", "false")
+        spark.catalog.clearCache()
+    assert rows == 100
+    assert evals == 100 * 3
+    assert list((tmp_path / "ck").rglob("rdd-*")), "reliable rounds must be written"
 
 
 def test_truncate_lineage_reliable_mode_value_identical(spark, tmp_path):
@@ -77,11 +107,29 @@ def test_truncate_lineage_reliable_mode_value_identical(spark, tmp_path):
     assert ck_files, "reliable mode must write to the checkpoint dir"
 
 
-@pytest.mark.parametrize("qname", ["er_phonetic_cluster_cc", "graph_pagerank"])
+ITERATIVE_QUERIES = [
+    "er_phonetic_cluster_cc",
+    "graph_pagerank",
+    "graph_sssp_bellman_ford",
+    "graph_label_propagation",
+    "graph_kcore_decompose",
+    "graph_bipartite_projection",
+    "graph_random_walk_deterministic",
+    "text_bpe_train_merges",
+    "sim_mmr_select",
+    "graph_hits_scores",
+    "graph_personalized_pagerank",
+    "embed_top_pc_power_iter",
+]
+
+
+@pytest.mark.parametrize("qname", ITERATIVE_QUERIES)
 def test_iterative_queries_identical_under_reliable_mode(spark, tmp_path, qname):
-    """The CC / pagerank graded queries give identical results under
-    the reliable-checkpoint posture (the 100 TB fault-tolerant
-    deployment shape) as under the default local checkpoints."""
+    """The iterative queries give identical results under the
+    reliable-checkpoint posture (the 100 TB fault-tolerant deployment
+    shape) as under the default local checkpoints, and in that
+    posture they write their rounds to the checkpoint dir — no round
+    bypasses :func:`graph.truncate_lineage`."""
     import __spark_entry__ as entry
 
     qs = entry.queries()
@@ -93,4 +141,8 @@ def test_iterative_queries_identical_under_reliable_mode(spark, tmp_path, qname)
         hardened = sorted(tuple(r) for r in qs[qname](spark, SF_DIR).collect())
     finally:
         spark.conf.set("spark.graft.checkpoint.reliable", "false")
+        spark.catalog.clearCache()
     assert hardened == base
+    # setCheckpointDir alone creates the (empty) app dir; rdd-* only
+    # appears once a round is actually written there.
+    assert list((tmp_path / "ck").rglob("rdd-*")), "no round reached the checkpoint dir"

@@ -1,4 +1,4 @@
-"""Semantic tests for the round-10 batch (queries/round10.py):
+"""Semantic tests for the round-10 batch (queries/ml.py, scalars.py, text.py, timeseries.py):
 pure-Python replicas of Cramér's V, Cohen's kappa, Allen interval
 relations, geohash encoding, and the Zipf log-log OLS fit, checked
 against the Spark implementations on sf0.001."""
@@ -10,10 +10,8 @@ import math
 import duckdb
 
 from caliper_poc_data_etl_spark.queries import QUERIES
-from caliper_poc_data_etl_spark.queries.round10 import (
-    GEOHASH_ALPHABET,
-    ZIPF_TOP_N,
-)
+from caliper_poc_data_etl_spark.queries.scalars import GEOHASH_ALPHABET
+from caliper_poc_data_etl_spark.queries.text import ZIPF_TOP_N
 
 
 def _duck(sf_dir: str, sql: str):

@@ -13,12 +13,12 @@ from __future__ import annotations
 import duckdb
 from hypothesis import given, settings, strategies as st
 
-from caliper_poc_data_etl_spark.queries.round10 import (
+from caliper_poc_data_etl_spark.queries.scalars import (
     GEOHASH_ALPHABET,
-    _ALLEN_CASE,
     _geohash_char_expr,
     _geohash_int_expr,
 )
+from caliper_poc_data_etl_spark.queries.timeseries import _ALLEN_CASE
 
 
 def _py_geohash(lat_c: int, lon_c: int) -> tuple[str, int]:

@@ -1,4 +1,4 @@
-"""Semantic tests for the round-8 batch (queries/round11.py):
+"""Semantic tests for the round-8 batch (queries/curation.py, ml.py, scalars.py):
 pure-Python replicas of span-level exact dedup, the two-sample KS
 statistic, PSI drift, and the Hilbert curve key, checked against the
 Spark implementations on sf0.001 — plus constructed-fixture edge
@@ -13,11 +13,8 @@ import math
 import duckdb
 
 from caliper_poc_data_etl_spark.queries import QUERIES
-from caliper_poc_data_etl_spark.queries.round11 import (
-    HILBERT_BITS,
-    SPAN_K,
-    _SPAN_IDX_BASE,
-)
+from caliper_poc_data_etl_spark.queries.scalars import HILBERT_BITS
+from caliper_poc_data_etl_spark.queries.curation import SPAN_K, _SPAN_IDX_BASE
 
 
 def _round_half_away(x: float) -> int:

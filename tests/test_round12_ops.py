@@ -1,4 +1,4 @@
-"""Semantic tests for the round-9 batch (queries/round12.py):
+"""Semantic tests for the round-9 batch (queries/curation.py, dedup.py, ml.py):
 pure-Python replicas of all three operators plus property/fixture
 checks the cross-engine hash cannot provide (the r8 Hilbert lesson:
 generated/identical-on-both-engines arithmetic needs an independent
@@ -21,12 +21,9 @@ from caliper_poc_data_etl_spark.queries.dedup import (
     MINHASH_K,
     _minhash_coeffs,
 )
-from caliper_poc_data_etl_spark.queries.round6 import _DRIFT_CUTOFF
-from caliper_poc_data_etl_spark.queries.round12 import (
-    LSH_RECALL_FLOOR_MILLI,
-    PRIORITY_SAMPLE_K,
-    _U52,
-)
+from caliper_poc_data_etl_spark.queries.curation import _DRIFT_CUTOFF
+from caliper_poc_data_etl_spark.queries.dedup import LSH_RECALL_FLOOR_MILLI
+from caliper_poc_data_etl_spark.queries.curation import PRIORITY_SAMPLE_K, _U52
 
 
 def _n_words(text: str) -> int:
@@ -322,7 +319,7 @@ def _docs_with_source(sf_dir: str) -> list[tuple[int, str, str]]:
 
 class TestPerSourcePrioritySampling:
     def test_python_replica(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round12 import (
+        from caliper_poc_data_etl_spark.queries.curation import (
             PRIORITY_SAMPLE_K_SRC as K,
         )
 
@@ -364,7 +361,7 @@ class TestPerSourcePrioritySampling:
             )
 
     def test_every_source_represented(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round12 import (
+        from caliper_poc_data_etl_spark.queries.curation import (
             PRIORITY_SAMPLE_K_SRC as K,
         )
 
@@ -394,7 +391,7 @@ class TestPerSourcePrioritySampling:
 
 
 def _py_decontam(docs: list[tuple[int, str]]):
-    from caliper_poc_data_etl_spark.queries.round12 import (
+    from caliper_poc_data_etl_spark.queries.dedup import (
         DECONTAM_EVAL_MOD,
         DECONTAM_JACC_MILLI,
     )
@@ -447,7 +444,7 @@ class TestDecontamMinhash:
         assert got, "fixture must flag at least one contaminated doc"
 
     def test_no_eval_docs_flagged(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round12 import DECONTAM_EVAL_MOD
+        from caliper_poc_data_etl_spark.queries.dedup import DECONTAM_EVAL_MOD
 
         rows = (
             QUERIES["decontam_minhash_crosscorpus"].spark(spark, sf_dir).collect()
@@ -460,7 +457,7 @@ class TestDecontamMinhash:
     def test_planted_contamination(self, spark, tmp_path):
         # A training doc sharing exactly half its shingle set with an
         # eval doc must be flagged; a disjoint doc must not.
-        from caliper_poc_data_etl_spark.queries.round12 import DECONTAM_EVAL_MOD
+        from caliper_poc_data_etl_spark.queries.dedup import DECONTAM_EVAL_MOD
 
         base = [f"w{i}" for i in range(40)]
         ev_id = DECONTAM_EVAL_MOD  # % mod == 0 -> eval side
@@ -497,7 +494,7 @@ def _docs_lang(sf_dir: str) -> list[tuple[int, str, str]]:
 
 
 def _py_importance(docs):
-    from caliper_poc_data_etl_spark.queries.round12 import (
+    from caliper_poc_data_etl_spark.queries.curation import (
         DSIR_BUCKETS,
         DSIR_TOP,
         _DSIR_TARGET_LANG,
@@ -553,9 +550,7 @@ class TestImportanceSelect:
     def test_target_language_enriched_in_head(self, spark, sf_dir):
         # Face validity: the selected head must be enriched in the
         # target language relative to the corpus base rate.
-        from caliper_poc_data_etl_spark.queries.round12 import (
-            _DSIR_TARGET_LANG,
-        )
+        from caliper_poc_data_etl_spark.queries.curation import _DSIR_TARGET_LANG
 
         docs = _docs_lang(sf_dir)
         lang_of = {d: l for d, l, _ in docs}
@@ -574,7 +569,7 @@ class TestImportanceSelect:
 
 class TestNeymanAllocation:
     def test_python_replica(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round12 import NEYMAN_K
+        from caliper_poc_data_etl_spark.queries.curation import NEYMAN_K
 
         con = duckdb.connect()
         strata = con.execute(

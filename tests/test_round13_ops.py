@@ -1,5 +1,6 @@
 """Semantic tests for the round-9 continuation batch
-(queries/round13.py): pure-Python replicas of all five operators plus
+(queries/dedup.py, training.py, curation.py, multimodal_q.py,
+similarity.py): pure-Python replicas of all five operators plus
 the property/fixture pins the cross-engine hash cannot provide (the r8
 Hilbert lesson: arithmetic that is generated identically for both
 engines needs an INDEPENDENT replica and an algebraic property)."""
@@ -20,10 +21,12 @@ from caliper_poc_data_etl_spark.multimodal import (
     _PHASH_COS_SCALE,
 )
 from caliper_poc_data_etl_spark.queries import QUERIES
-from caliper_poc_data_etl_spark.queries.round13 import (
+from caliper_poc_data_etl_spark.queries.dedup import (
     DECONTAM_COS_THRESHOLD,
     DECONTAM_EVAL_VEC_MOD,
-    DP_WORLD_SIZE,
+)
+from caliper_poc_data_etl_spark.queries.training import DP_WORLD_SIZE, SHUFFLE_EPOCHS
+from caliper_poc_data_etl_spark.queries.curation import (
     FS_MATCH_THRESHOLD,
     FS_PRICE_TOL_CENTI,
     FS_W_BRAND_AGREE,
@@ -32,7 +35,6 @@ from caliper_poc_data_etl_spark.queries.round13 import (
     FS_W_NAME_DIS,
     FS_W_PRICE_AGREE,
     FS_W_PRICE_DIS,
-    SHUFFLE_EPOCHS,
 )
 
 

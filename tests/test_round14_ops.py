@@ -1,5 +1,6 @@
 """Semantic tests for the round-9 continuation batch 2
-(queries/round14.py): pure-Python replicas plus property/degenerate
+(queries/relational.py, timeseries.py,
+curation.py, streaming_replay.py, similarity.py): pure-Python replicas plus property/degenerate
 pins for all five operators."""
 
 from __future__ import annotations
@@ -13,18 +14,20 @@ import pytest
 from pyspark.sql import functions as F
 
 from caliper_poc_data_etl_spark.queries import QUERIES
-from caliper_poc_data_etl_spark.queries.round14 import (
+from caliper_poc_data_etl_spark.queries.timeseries import (
     DENSITY_MIN_NBR,
+    PATH_LEN,
+    PATH_TOPK,
+)
+from caliper_poc_data_etl_spark.queries.relational import (
     HLL_ALPHA_MILLI,
     HLL_LC_CUTOFF_MILLI,
     HLL_LC_MILLI,
     HLL_M,
     HLL_R_CAP,
     HLL_W_BITS,
-    PATH_LEN,
-    PATH_TOPK,
-    RECON_TOL_CENTI,
 )
+from caliper_poc_data_etl_spark.queries.curation import RECON_TOL_CENTI
 
 
 def _fetch(sf_dir: str, sql: str):
@@ -399,7 +402,7 @@ class TestEmbedJlProjectionParity:
     def test_python_replica(self, spark, sf_dir):
         import numpy as np
 
-        from caliper_poc_data_etl_spark.queries.round14 import (
+        from caliper_poc_data_etl_spark.queries.similarity import (
             JL_K,
             JL_MICRO,
             JL_SIGNS,
@@ -437,7 +440,7 @@ class TestEmbedJlProjectionParity:
         # the cross-engine hash proves parity, not geometry).
         import numpy as np
 
-        from caliper_poc_data_etl_spark.queries.round14 import JL_K, JL_SIGNS
+        from caliper_poc_data_etl_spark.queries.similarity import JL_K, JL_SIGNS
 
         rows = _fetch(
             sf_dir, "SELECT embedding FROM '{sf}/embeddings.parquet'"
@@ -457,7 +460,7 @@ class TestEmbedJlProjectionParity:
     def test_sign_matrix_regenerates(self):
         import hashlib
 
-        from caliper_poc_data_etl_spark.queries.round14 import JL_D, JL_K, JL_SIGNS
+        from caliper_poc_data_etl_spark.queries.similarity import JL_D, JL_K, JL_SIGNS
 
         for j in range(JL_K):
             for d in range(JL_D):

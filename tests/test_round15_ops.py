@@ -1,5 +1,5 @@
 """Semantic tests for the round-9 continuation batch 3
-(queries/round15.py): pure-Python replicas plus the properties the
+(queries/dedup.py, training.py, ml.py): pure-Python replicas plus the properties the
 cross-engine hash cannot prove (lossless recall, padding envelope,
 group integrity)."""
 
@@ -13,11 +13,9 @@ from collections import defaultdict
 import duckdb
 
 from caliper_poc_data_etl_spark.queries import QUERIES
-from caliper_poc_data_etl_spark.queries.round15 import (
-    GKF_K,
-    LB_BATCH_DOCS,
-    PF_JACC_MILLI,
-)
+from caliper_poc_data_etl_spark.queries.ml import GKF_K
+from caliper_poc_data_etl_spark.queries.training import LB_BATCH_DOCS
+from caliper_poc_data_etl_spark.queries.dedup import PF_JACC_MILLI
 
 
 def _fetch(sf_dir: str, sql: str):

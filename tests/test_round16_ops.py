@@ -1,4 +1,4 @@
-"""Semantic tests for the round-10 ops (queries/round16.py):
+"""Semantic tests for the round-10 ops (queries/streaming_replay.py, timeseries.py, relational.py):
 pure-Python replicas plus the properties the cross-engine hash cannot
 prove — SCD2 interval algebra, sketch mergeability, rank accuracy, and
 the stream-static replay's agreement with its batch twin."""
@@ -12,7 +12,7 @@ from collections import defaultdict
 import duckdb
 
 from caliper_poc_data_etl_spark.queries import QUERIES
-from caliper_poc_data_etl_spark.queries.round16 import KLL_K
+from caliper_poc_data_etl_spark.queries.relational import KLL_K
 
 
 def _fetch(sf_dir: str, sql: str):

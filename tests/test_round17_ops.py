@@ -1,4 +1,4 @@
-"""Semantic tests for the round-11 ops (queries/round17.py): the
+"""Semantic tests for the round-11 ops (queries/streaming_replay.py, curation.py): the
 left-outer stream-stream join's watermark-expiry emission contract
 (an unmatched row appears ONLY after its watermark expires — the
 with/without-sentinel contrast the cross-engine hash cannot show),
@@ -198,7 +198,7 @@ def _replica_spans(corpus: dict[int, list[str]], k: int):
 
 class TestRepeatedSpanDedup:
     def test_python_replica(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round11 import SPAN_K
+        from caliper_poc_data_etl_spark.queries.curation import SPAN_K
 
         corpus = _corpus_tokens(sf_dir)
         want = _replica_spans(corpus, SPAN_K)
@@ -228,7 +228,7 @@ class TestRepeatedSpanDedup:
         gram occurs twice anywhere in the corpus."""
         from collections import Counter
 
-        from caliper_poc_data_etl_spark.queries.round11 import SPAN_K
+        from caliper_poc_data_etl_spark.queries.curation import SPAN_K
 
         corpus = _corpus_tokens(sf_dir)
         flagged: dict[int, set[int]] = {d: set() for d in corpus}

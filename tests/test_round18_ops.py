@@ -1,4 +1,4 @@
-"""Semantic tests for the round-12 ops (queries/round18.py): SemDeDup
+"""Semantic tests for the round-12 ops (queries/dedup.py, similarity.py, text.py): SemDeDup
 recall/pruning properties the cross-engine hash cannot show, the
 quality classifier's local replica, and RRF's fusion contract.
 """
@@ -14,15 +14,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from caliper_poc_data_etl_spark.queries import QUERIES
-from caliper_poc_data_etl_spark.queries.round18 import (
-    SEM_COS_THRESHOLD,
+from caliper_poc_data_etl_spark.queries.dedup import SEM_COS_THRESHOLD
+from caliper_poc_data_etl_spark.queries.text import (
     _QC_BUCKETS,
     _QC_LCG_A,
     _QC_LCG_C,
     _QC_MOD,
-    _RRF_K,
-    _RRF_TOPN,
 )
+from caliper_poc_data_etl_spark.queries.similarity import _RRF_K, _RRF_TOPN
 
 
 def _rows(name, spark, sf_dir):
@@ -185,7 +184,7 @@ class TestMaxSimLateInteraction:
         the floor-quantized cosine, and the top-N ordering."""
         import numpy as np
 
-        from caliper_poc_data_etl_spark.queries.round18 import (
+        from caliper_poc_data_etl_spark.queries.similarity import (
             _MAXSIM_DOC_TOKENS as G,
             _MAXSIM_TOPN as TOPN,
         )
@@ -245,7 +244,7 @@ class TestMaxSimLateInteraction:
         however many unrelated token vectors surround it."""
         import numpy as np
 
-        from caliper_poc_data_etl_spark.queries.round18 import (
+        from caliper_poc_data_etl_spark.queries.similarity import (
             _MAXSIM_DOC_TOKENS as G,
         )
 

@@ -11,14 +11,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from caliper_poc_data_etl_spark.queries import QUERIES
-from caliper_poc_data_etl_spark.queries.round5 import (
+from caliper_poc_data_etl_spark.queries.text import (
     BPE_MERGES,
     BPE_SWEEPS,
     BPE_VOCAB,
-    KM_ITERS,
-    KM_K,
     bpe_symbols_expr,
 )
+from caliper_poc_data_etl_spark.queries.similarity import KM_ITERS, KM_K
 
 
 def _bpe_encode_ref(word: str) -> list[str]:
@@ -295,7 +294,7 @@ class TestBenfordDigits:
         total = sum(counts.values())
         out = QUERIES["dq_benford_digits"].spark(spark, sf_dir).collect()
         assert {r["digit"] for r in out} == set(counts)
-        from caliper_poc_data_etl_spark.queries.round5 import BENFORD_EXPECTED
+        from caliper_poc_data_etl_spark.queries.curation import BENFORD_EXPECTED
 
         for r in out:
             assert r["n"] == counts[r["digit"]]
@@ -312,10 +311,7 @@ class TestSsspBellmanFord:
     def test_matches_python_replica(self, spark, sf_dir):
         from collections import defaultdict
 
-        from caliper_poc_data_etl_spark.queries.round5 import (
-            SSSP_ROUNDS,
-            SSSP_SOURCE,
-        )
+        from caliper_poc_data_etl_spark.queries.graphs import SSSP_ROUNDS, SSSP_SOURCE
 
         n = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
         doc_ids = [

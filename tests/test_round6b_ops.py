@@ -1,4 +1,4 @@
-"""Semantic tests for the round-6 queue additions in queries/round6.py:
+"""Semantic tests for the round-6 queue additions (now in their family modules under queries/):
 python/numpy replicas for the KMV sketch, weighted sampling, NB trainer,
 rolling median, snapshot diff, silence segmentation, label propagation,
 and prefix-NN fidelity; constructed-frame checks for the FK audit; and
@@ -17,20 +17,19 @@ import pytest
 from pyspark.sql import functions as F
 
 from caliper_poc_data_etl_spark.queries import QUERIES
-from caliper_poc_data_etl_spark.queries.round6 import (
-    _LP_GEN,
-    KMV_K,
-    _KMV_SPACE,
-    LP_ROUNDS,
-    NB_TOP,
-    PFX_DIMS,
-    PFX_QUERIES,
-    RM_FRAME,
+from caliper_poc_data_etl_spark.queries.graphs import _LP_GEN, LP_ROUNDS
+from caliper_poc_data_etl_spark.queries.relational import KMV_K, _KMV_SPACE
+from caliper_poc_data_etl_spark.queries.ml import NB_TOP
+from caliper_poc_data_etl_spark.queries.similarity import PFX_DIMS, PFX_QUERIES
+from caliper_poc_data_etl_spark.queries.windows import RM_FRAME
+from caliper_poc_data_etl_spark.queries.curation import (
     SNAP_CUTOFF,
     SPS_N,
+    ref_integrity_frame,
+)
+from caliper_poc_data_etl_spark.queries.multimodal_q import (
     _SIL_FRAME_BYTES,
     _SIL_MEANSQ,
-    ref_integrity_frame,
 )
 
 
@@ -323,7 +322,7 @@ class TestStreamScd2:
         import shutil
         import tempfile
 
-        from caliper_poc_data_etl_spark.queries.round6 import _scd2_replay
+        from caliper_poc_data_etl_spark.queries.streaming_replay import _scd2_replay
 
         src = spark.read.parquet(f"{sf_dir}/events.parquet")
         d = tempfile.mkdtemp(prefix="scd2_multi_")
@@ -399,7 +398,7 @@ def _round_away(x: float) -> int:
 
 class TestKmvSetOps:
     def test_python_replica_and_bounds(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round6 import KMV_A, KMV_B
+        from caliper_poc_data_etl_spark.queries.relational import KMV_A, KMV_B
 
         rows = _duck(
             f"SELECT DISTINCT event_type, user_id FROM events"
@@ -428,7 +427,7 @@ class TestKmvSetOps:
 
 class TestLttbDownsample:
     def test_python_replica(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round6 import LTTB_BUCKET
+        from caliper_poc_data_etl_spark.queries.timeseries import LTTB_BUCKET
 
         rows = _duck(
             "SELECT user_id, event_id, epoch_us(ts) // 1000000 AS x,"
@@ -499,7 +498,7 @@ class TestLttbDownsample:
 
 class TestIvfPqTopk:
     def _replica(self, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round6 import (
+        from caliper_poc_data_etl_spark.queries.similarity import (
             IVFPQ_CELLS,
             IVFPQ_NQ,
             IVFPQ_PROBE,
@@ -587,10 +586,7 @@ class TestIvfPqTopk:
             )
 
     def test_recall_vs_exact(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round6 import (
-            IVFPQ_NQ,
-            IVFPQ_TOPK,
-        )
+        from caliper_poc_data_etl_spark.queries.similarity import IVFPQ_NQ, IVFPQ_TOPK
 
         expect, ids, X, idx = self._replica(sf_dir)
         hits = total = 0
@@ -725,7 +721,7 @@ class TestFreshnessLag:
 
 class TestIntervalBucketed:
     def test_python_replica(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round6 import _IVB_GAP_MIN
+        from caliper_poc_data_etl_spark.queries.relational import _IVB_GAP_MIN
 
         rows = _duck(
             "SELECT user_id, event_id, epoch_us(ts) // 1000000 AS te,"
@@ -801,7 +797,7 @@ class TestAucRankEval:
 
 class TestCalibrationBins:
     def test_bin_totals(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round6 import CAL_BINS
+        from caliper_poc_data_etl_spark.queries.ml import CAL_BINS
 
         out = QUERIES["ml_calibration_bins"].spark(spark, sf_dir).collect()
         n, n_pos = _duck(
@@ -817,7 +813,7 @@ class TestCalibrationBins:
 
 class TestKcoreDecompose:
     def test_peel_and_stability(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round6 import KCORE_K
+        from caliper_poc_data_etl_spark.queries.graphs import KCORE_K
 
         got = {
             r["vec_id"]: r["core_degree"]
@@ -898,9 +894,7 @@ class TestMannKendall:
 
 class TestPeakDetection:
     def test_python_replica(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round6 import (
-            _PEAK_MARGIN_CENTI,
-        )
+        from caliper_poc_data_etl_spark.queries.timeseries import _PEAK_MARGIN_CENTI
 
         rows = _duck(
             "SELECT strftime(date_trunc('day', ts), '%Y-%m-%d'),"
@@ -967,7 +961,7 @@ class TestDecontamBloom:
     def test_python_replica_and_fp_accounting(self, spark, sf_dir):
         import re
 
-        from caliper_poc_data_etl_spark.queries.round6 import (
+        from caliper_poc_data_etl_spark.queries.dedup import (
             _DBL_BITS,
             _DBL_K,
             _DBL_MOD,
@@ -1026,7 +1020,7 @@ class TestDecontamBloom:
 
 class TestHampelOutliers:
     def test_python_replica(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round6 import HAMPEL_T
+        from caliper_poc_data_etl_spark.queries.windows import HAMPEL_T
 
         rows = _duck(
             "SELECT user_id, event_id, value FROM events"
@@ -1071,7 +1065,7 @@ class TestHampelOutliers:
 
 class TestCurationFunnel:
     def test_monotone_and_exact(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round6 import (
+        from caliper_poc_data_etl_spark.queries.curation import (
             _FUN_LANGS,
             _FUN_MIN_CHARS,
             _FUN_PREFIX,
@@ -1135,7 +1129,7 @@ class TestLog2Histogram:
 
 class TestBacktestWape:
     def test_python_replica(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round6 import _BT_SEASON
+        from caliper_poc_data_etl_spark.queries.timeseries import _BT_SEASON
 
         rows = _duck(
             "SELECT event_type, strftime(date_trunc('day', ts), '%Y-%m-%d'),"
@@ -1172,7 +1166,7 @@ class TestBatchManifest:
     def test_python_replica_and_packing_invariants(self, spark, sf_dir):
         import re
 
-        from caliper_poc_data_etl_spark.queries.round6 import _TBM_BUDGET
+        from caliper_poc_data_etl_spark.queries.training import _TBM_BUDGET
 
         docs = _duck("SELECT doc_id, source, text FROM documents", sf_dir)
         ws = re.compile(r"\s+")
@@ -1214,7 +1208,7 @@ class TestBatchManifest:
 
 class TestCrossSourcePriority:
     def test_python_replica(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round6 import _XSD_PREFIX
+        from caliper_poc_data_etl_spark.queries.dedup import _XSD_PREFIX
 
         docs = _duck("SELECT doc_id, source, text FROM documents", sf_dir)
         groups = defaultdict(list)

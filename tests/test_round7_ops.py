@@ -1,4 +1,4 @@
-"""Semantic tests for the round-7 batch (queries/round7.py): python /
+"""Semantic tests for the round-7 batch (family modules under queries/): python /
 numpy replicas for the LATERAL top-k join, stratified sampling,
 cross-correlation lag scan, MRR evaluation, winnowing fingerprints,
 global chunk dedup rewrite, and URL canonicalization."""
@@ -13,15 +13,11 @@ import duckdb
 import numpy as np
 
 from caliper_poc_data_etl_spark.queries import QUERIES
-from caliper_poc_data_etl_spark.queries.round7 import (
-    LATERAL_K,
-    LD_CHUNK_WORDS,
-    MRR_QUERIES,
-    STRAT_N,
-    WIN_K,
-    WIN_W,
-    XCORR_MAX_LAG,
-)
+from caliper_poc_data_etl_spark.queries.relational import LATERAL_K
+from caliper_poc_data_etl_spark.queries.curation import LD_CHUNK_WORDS, STRAT_N
+from caliper_poc_data_etl_spark.queries.ml import MRR_QUERIES
+from caliper_poc_data_etl_spark.queries.text import WIN_K, WIN_W
+from caliper_poc_data_etl_spark.queries.timeseries import XCORR_MAX_LAG
 
 
 def _duck(sql: str, sf_dir: str):
@@ -587,7 +583,7 @@ class TestPhoneticClusterCc:
                 if m != label[w]:
                     changed = True
             label = new
-        from caliper_poc_data_etl_spark.queries.round7 import PHON_ROUNDS
+        from caliper_poc_data_etl_spark.queries.curation import PHON_ROUNDS
 
         assert iters - 1 <= PHON_ROUNDS, (
             f"fixpoint needs {iters - 1} rounds > declared {PHON_ROUNDS}"
@@ -782,7 +778,7 @@ class TestMultilineCsv:
     def test_roundtrip_md5(self, spark, sf_dir):
         import hashlib
 
-        from caliper_poc_data_etl_spark.queries.round7 import _MLCSV_DOCS
+        from caliper_poc_data_etl_spark.queries.scans import _MLCSV_DOCS
 
         texts = dict(
             _duck(
@@ -800,7 +796,7 @@ class TestMultilineCsv:
             assert r["n_spaces_restored"] == src.count(" ")
 
     def test_staged_records_really_span_lines(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round7 import _MLCSV_CACHE
+        from caliper_poc_data_etl_spark.queries.scans import _MLCSV_CACHE
 
         # staging happened during the scan above
         [path] = [v for k, v in _MLCSV_CACHE.items() if k.startswith(sf_dir)]
@@ -816,7 +812,7 @@ class TestMultilineCsv:
 
 class TestBlocklistFilter:
     def test_python_replica(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round7 import BLOCKLIST
+        from caliper_poc_data_etl_spark.queries.curation import BLOCKLIST
 
         docs = _duck("SELECT doc_id, text FROM documents", sf_dir)
         got = {
@@ -834,7 +830,7 @@ class TestBlocklistFilter:
 
 class TestHardNegativeMining:
     def test_numpy_replica(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round7 import HNEG_K, HNEG_QUERIES
+        from caliper_poc_data_etl_spark.queries.similarity import HNEG_K, HNEG_QUERIES
 
         rows = _duck(
             "SELECT vec_id, label, embedding FROM embeddings ORDER BY vec_id",
@@ -876,7 +872,7 @@ class TestHardNegativeMining:
 
 class TestGopherRules:
     def test_python_replica(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round7 import (
+        from caliper_poc_data_etl_spark.queries.curation import (
             GOPHER_MIN_STOPWORDS,
             GOPHER_MIN_WORDS,
             GOPHER_STOPWORDS,
@@ -972,7 +968,7 @@ class TestGeoNearestPoi:
 
 class TestJsonlNested:
     def test_nested_projection_roundtrip(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round7 import _JSONL_DOCS
+        from caliper_poc_data_etl_spark.queries.scans import _JSONL_DOCS
 
         docs = _duck(
             f"SELECT doc_id, text, lang, source FROM documents "
@@ -991,7 +987,7 @@ class TestJsonlNested:
 
 class TestRandomWalk:
     def test_python_replica(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round7 import WALK_STEPS
+        from caliper_poc_data_etl_spark.queries.graphs import WALK_STEPS
 
         n = _duck("SELECT COUNT(*) FROM embeddings", sf_dir)[0][0]
         ids = [r[0] for r in _duck("SELECT vec_id FROM embeddings", sf_dir)]
@@ -1037,7 +1033,7 @@ class TestRandomWalk:
 
 class TestEventPatternDetect:
     def test_python_replica(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round7 import PATTERN
+        from caliper_poc_data_etl_spark.queries.timeseries import PATTERN
 
         rows = _duck(
             "SELECT user_id, ts, event_id, event_type FROM events", sf_dir
@@ -1069,7 +1065,7 @@ class TestBpeTrainMerges:
     def test_python_trainer_replica(self, spark, sf_dir):
         import re
 
-        from caliper_poc_data_etl_spark.queries.round7 import (
+        from caliper_poc_data_etl_spark.queries.text import (
             BPE_TRAIN_ROUNDS,
             _BPE_TRAIN_SWEEPS,
         )

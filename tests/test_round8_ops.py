@@ -1,4 +1,4 @@
-"""Semantic tests for the round-8 batch (queries/round8.py): python /
+"""Semantic tests for the round-8 batch (family modules under queries/): python /
 numpy replicas for MMR diverse selection, PMI collocation mining, and
 the declarative schema contract."""
 
@@ -10,14 +10,13 @@ import duckdb
 import numpy as np
 
 from caliper_poc_data_etl_spark.queries import QUERIES
-from caliper_poc_data_etl_spark.queries.round8 import (
+from caliper_poc_data_etl_spark.queries.similarity import (
     MMR_CAND,
     MMR_K,
     MMR_W_DIV,
     MMR_W_REL,
-    PMI_MICRO,
-    PMI_MIN_C12,
 )
+from caliper_poc_data_etl_spark.queries.text import PMI_MICRO, PMI_MIN_C12
 
 
 def _duck(sql: str, sf_dir: str):
@@ -221,7 +220,7 @@ class TestModePack:
 
 class TestShardSnake:
     def test_python_replica_and_balance(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round8 import SNAKE_SHARDS
+        from caliper_poc_data_etl_spark.queries.training import SNAKE_SHARDS
 
         rows = _duck("SELECT doc_id, n_chars FROM documents", sf_dir)
         ranked = sorted(rows, key=lambda r: (-r[1], r[0]))
@@ -249,7 +248,7 @@ class TestShardSnake:
 
 class TestRakeKeywords:
     def test_python_replica(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round8 import (
+        from caliper_poc_data_etl_spark.queries.text import (
             RAKE_MICRO,
             RAKE_MIN_OCC,
             RAKE_STOPWORDS,
@@ -292,7 +291,7 @@ class TestRakeKeywords:
         assert got == expect and expect
 
     def test_no_stopwords_in_phrases(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round8 import RAKE_STOPWORDS
+        from caliper_poc_data_etl_spark.queries.text import RAKE_STOPWORDS
 
         rows = QUERIES["text_rake_keywords"].spark(spark, sf_dir).collect()
         for r in rows:
@@ -301,10 +300,7 @@ class TestRakeKeywords:
 
 class TestRocPoints:
     def test_numpy_replica_and_monotonicity(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round8 import (
-            ROC_LABEL_SPLIT,
-            ROC_MICRO,
-        )
+        from caliper_poc_data_etl_spark.queries.ml import ROC_LABEL_SPLIT, ROC_MICRO
 
         rows = _duck("SELECT embedding[1], label FROM embeddings", sf_dir)
         scored = [
@@ -348,7 +344,7 @@ class TestKfoldAssign:
     def test_partition_and_balance(self, spark, sf_dir):
         import hashlib
 
-        from caliper_poc_data_etl_spark.queries.round8 import KFOLD_K
+        from caliper_poc_data_etl_spark.queries.ml import KFOLD_K
 
         rows = _duck("SELECT vec_id, label FROM embeddings", sf_dir)
         expect = {}
@@ -438,10 +434,7 @@ class TestRollingSlope:
         import datetime
         import math
 
-        from caliper_poc_data_etl_spark.queries.round8 import (
-            SLOPE_MICRO,
-            SLOPE_WIN,
-        )
+        from caliper_poc_data_etl_spark.queries.windows import SLOPE_MICRO, SLOPE_WIN
 
         rows = _duck(
             "SELECT event_type, CAST(ts AS DATE), value FROM events", sf_dir
@@ -482,7 +475,7 @@ class TestRollingSlope:
 
 class TestNdcgEval:
     def test_numpy_replica(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round8 import (
+        from caliper_poc_data_etl_spark.queries.ml import (
             NDCG_K,
             NDCG_QUERIES,
             _ndcg_weights,
@@ -558,9 +551,7 @@ class TestAbSrmCheck:
     def test_python_replica(self, spark, sf_dir):
         import hashlib
 
-        from caliper_poc_data_etl_spark.queries.round8 import (
-            SRM_CHI2_CRIT_MICRO,
-        )
+        from caliper_poc_data_etl_spark.queries.curation import SRM_CHI2_CRIT_MICRO
 
         rows = _duck("SELECT DISTINCT event_type, user_id FROM events", sf_dir)
         users = {u for _, u in rows}
@@ -640,7 +631,7 @@ class TestIntervalOverlap:
 
 class TestLiftGainDeciles:
     def test_python_replica(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round8 import LIFT_MICRO
+        from caliper_poc_data_etl_spark.queries.ml import LIFT_MICRO
 
         rows = _duck("SELECT embedding[1], label FROM embeddings", sf_dir)
         per = {}
@@ -684,7 +675,7 @@ class TestLiftGainDeciles:
 
 class TestGzipScan:
     def test_single_partition_and_roundtrip(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round8 import GZ_DOCS
+        from caliper_poc_data_etl_spark.queries.scans import GZ_DOCS
 
         df = QUERIES["scan_gzip_nonsplittable"].spark(spark, sf_dir)
         # gzip is not splittable: one file -> ONE input partition
@@ -706,10 +697,7 @@ class TestGzipScan:
 
 class TestF1ThresholdPick:
     def test_exhaustive_replica(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round8 import (
-            LIFT_MICRO,
-            ROC_LABEL_SPLIT,
-        )
+        from caliper_poc_data_etl_spark.queries.ml import LIFT_MICRO, ROC_LABEL_SPLIT
 
         rows = _duck("SELECT embedding[1], label FROM embeddings", sf_dir)
         per = {}
@@ -777,11 +765,8 @@ class TestTouchAttribution:
 
 class TestHitsScores:
     def test_python_replica(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round6 import _LP_GEN
-        from caliper_poc_data_etl_spark.queries.round8 import (
-            HITS_ROUNDS,
-            HITS_SCALE,
-        )
+        from caliper_poc_data_etl_spark.queries.graphs import _LP_GEN
+        from caliper_poc_data_etl_spark.queries.graphs import HITS_ROUNDS, HITS_SCALE
 
         ids = [r[0] for r in _duck("SELECT vec_id FROM embeddings", sf_dir)]
         n = len(ids)
@@ -816,10 +801,7 @@ class TestHitsScores:
 
 class TestNgramNovelty:
     def test_python_replica_and_dup_docs_zero(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round8 import (
-            NOVELTY_MICRO,
-            NOVELTY_N,
-        )
+        from caliper_poc_data_etl_spark.queries.text import NOVELTY_MICRO, NOVELTY_N
 
         rows = _duck("SELECT doc_id, text FROM documents ORDER BY doc_id", sf_dir)
         grams_by_doc = {}
@@ -866,7 +848,7 @@ class TestPeriodOverPeriod:
         import datetime
         import math
 
-        from caliper_poc_data_etl_spark.queries.round8 import (
+        from caliper_poc_data_etl_spark.queries.timeseries import (
             POP_LAG_DAYS,
             POP_MICRO,
         )
@@ -906,7 +888,7 @@ class TestRegressionMetrics:
         import datetime
         import math
 
-        from caliper_poc_data_etl_spark.queries.round8 import REG_LAG
+        from caliper_poc_data_etl_spark.queries.ml import REG_LAG
 
         rows = _duck(
             "SELECT event_type, CAST(ts AS DATE), value FROM events", sf_dir
@@ -946,8 +928,8 @@ class TestRegressionMetrics:
 
 class TestPersonalizedPagerank:
     def test_python_replica(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round6 import _LP_GEN
-        from caliper_poc_data_etl_spark.queries.round8 import (
+        from caliper_poc_data_etl_spark.queries.graphs import _LP_GEN
+        from caliper_poc_data_etl_spark.queries.graphs import (
             PPR_DAMP_DEN,
             PPR_DAMP_NUM,
             PPR_ROUNDS,
@@ -1027,7 +1009,7 @@ class TestAbChi2Outcome:
 
 class TestPrCurvePoints:
     def test_numpy_replica(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round8 import ROC_LABEL_SPLIT
+        from caliper_poc_data_etl_spark.queries.ml import ROC_LABEL_SPLIT
 
         rows = _duck("SELECT embedding[1], label FROM embeddings", sf_dir)
         per = {}
@@ -1123,10 +1105,7 @@ class TestSeasonalAdjustedAnomaly:
 
 class TestTokenBudgetFill:
     def test_python_replica_and_boundary(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round8 import (
-            BUDGET_DEN,
-            BUDGET_NUM,
-        )
+        from caliper_poc_data_etl_spark.queries.curation import BUDGET_DEN, BUDGET_NUM
 
         rows = _duck("SELECT doc_id, text FROM documents", sf_dir)
         docs = []
@@ -1160,7 +1139,7 @@ class TestCompactSmallFiles:
     def test_content_preserved_and_counts(self, spark, sf_dir):
         import hashlib
 
-        from caliper_poc_data_etl_spark.queries.round8 import (
+        from caliper_poc_data_etl_spark.queries.scans import (
             COMPACT_SMALL_FILES,
             COMPACT_TARGET_FILES,
         )
@@ -1184,7 +1163,7 @@ class TestZorderKey:
     def test_python_replica_and_locality(self, spark, sf_dir):
         import math
 
-        from caliper_poc_data_etl_spark.queries.round8 import ZORDER_BITS
+        from caliper_poc_data_etl_spark.queries.scalars import ZORDER_BITS
 
         rows = _duck("SELECT o_orderkey, o_totalprice FROM orders", sf_dir)
 
@@ -1227,8 +1206,8 @@ class TestModularityScore:
     def test_python_replica_and_q(self, spark, sf_dir):
         from fractions import Fraction
 
-        from caliper_poc_data_etl_spark.queries.round6 import _LP_GEN
-        from caliper_poc_data_etl_spark.queries.round8 import MOD_MICRO
+        from caliper_poc_data_etl_spark.queries.graphs import _LP_GEN
+        from caliper_poc_data_etl_spark.queries.graphs import MOD_MICRO
 
         rows = _duck("SELECT vec_id, label FROM embeddings", sf_dir)
         lab = dict(rows)
@@ -1276,7 +1255,7 @@ class TestBootstrapCi:
         import hashlib
         import math
 
-        from caliper_poc_data_etl_spark.queries.round8 import (
+        from caliper_poc_data_etl_spark.queries.ml import (
             BOOT_B,
             BOOT_HI_RANK,
             BOOT_LO_RANK,
@@ -1315,7 +1294,7 @@ class TestBootstrapCi:
 
 class TestBlockingQuality:
     def test_python_replica(self, spark, sf_dir):
-        from caliper_poc_data_etl_spark.queries.round8 import BLKQ_LEV
+        from caliper_poc_data_etl_spark.queries.curation import BLKQ_LEV
 
         rows = _duck(
             "SELECT DISTINCT w FROM ("
@@ -1384,7 +1363,7 @@ class TestBusinessDaysPack:
     def test_python_replica(self, spark, sf_dir):
         import datetime
 
-        from caliper_poc_data_etl_spark.queries.round8 import _BD_ANCHOR
+        from caliper_poc_data_etl_spark.queries.scalars import _BD_ANCHOR
 
         anchor = datetime.date.fromisoformat(_BD_ANCHOR)
         rows = _duck(

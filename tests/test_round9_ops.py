@@ -1,4 +1,4 @@
-"""Semantic tests for the round-9 batch (queries/round9.py): a numpy
+"""Semantic tests for the round-9 batch (queries/similarity.py): a numpy
 replica of IVF+PQ recall@k vs the exact integer-L2 top-k, pinning the
 declared mean-recall floor."""
 
@@ -8,14 +8,14 @@ import duckdb
 import numpy as np
 
 from caliper_poc_data_etl_spark.queries import QUERIES
-from caliper_poc_data_etl_spark.queries.round6 import (
+from caliper_poc_data_etl_spark.queries.similarity import (
     IVFPQ_CELLS,
     IVFPQ_NQ,
     IVFPQ_PROBE,
     IVFPQ_SHORTLIST,
     IVFPQ_TOPK,
 )
-from caliper_poc_data_etl_spark.queries.round9 import IVFPQ_RECALL_FLOOR_MILLI
+from caliper_poc_data_etl_spark.queries.similarity import IVFPQ_RECALL_FLOOR_MILLI
 from caliper_poc_data_etl_spark.queries.similarity import (
     PQ_CODEBOOK,
     PQ_SUBDIM,
@@ -36,7 +36,7 @@ def _vectors(sf_dir: str) -> dict[int, np.ndarray]:
 
 
 def _numpy_ivfpq_topk(z: dict[int, np.ndarray]) -> dict[int, list[int]]:
-    """Replica of the composed pipeline (round6.sim_ivfpq_topk)."""
+    """Replica of the composed pipeline (similarity.sim_ivfpq_topk)."""
     ids = sorted(z)
     cells = {c: z[c] for c in range(IVFPQ_CELLS)}
 

@@ -3,7 +3,7 @@
 Negative result #5 of r13 (the co-partitioned variant measured ~40%
 SLOWER; see OPTIMIZATION_r13.md). Kept as the experiment record.
 
-OLD = queries/round5.py `_kmeans_final_assignment` as committed (after
+OLD = queries/similarity.py `_kmeans_final_assignment` as committed (after
 r13's lazy-checkpoint adoption).
 NEW = same algorithm, but the exploded matrix `xe` is hash-partitioned
 by vec_id ONCE before its localCheckpoint (checkpoint preserves
@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from caliper_poc_data_etl_spark.queries.registry import t
-from caliper_poc_data_etl_spark.queries.round5 import (
+from caliper_poc_data_etl_spark.queries.similarity import (
     KM_ITERS,
     KM_K,
     _kmeans_final_assignment,

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from caliper_poc_data_etl_spark.queries.registry import t
-from caliper_poc_data_etl_spark.queries.round7 import (
+from caliper_poc_data_etl_spark.queries.curation import (
     PHON_LEV_MAX,
     PHON_ROUNDS,
     _soundex_sql,

@@ -38,10 +38,7 @@ def main() -> int:
     from pyspark.sql.window import Window as W
 
     from caliper_poc_data_etl_spark.queries import QUERIES
-    from caliper_poc_data_etl_spark.queries.round6 import (
-        IVFPQ_NQ,
-        IVFPQ_TOPK,
-    )
+    from caliper_poc_data_etl_spark.queries.similarity import IVFPQ_NQ, IVFPQ_TOPK
     from caliper_poc_data_etl_spark.session import get_spark
     from tools.scale_smoke import tile_tables
 
@@ -83,7 +80,7 @@ def main() -> int:
             .select("qid", "nid", "rn")
         )
 
-    from caliper_poc_data_etl_spark.queries.round6 import (
+    from caliper_poc_data_etl_spark.queries.similarity import (
         IVFPQ_CELLS,
         IVFPQ_PROBE,
         IVFPQ_SHORTLIST,

@@ -52,17 +52,17 @@ EXPECTED_NLJ = {
     # Deliberate broadcast NLJ: the exact-ground-truth side joins the
     # corpus to a broadcast NQ-row query SAMPLE on vec_id != query_id —
     # the same sanctioned sample-bounded shape as sim_cosine_topk
-    # (round9.py:124 docstring). Cost is |corpus|×NQ, not |corpus|²;
+    # (sim_ivfpq_recall_vs_exact docstring, similarity.py). Cost is |corpus|×NQ, not |corpus|²;
     # NQ is fixed (recall-monitoring sample), so it stays broadcastable
     # at 100 TB.
     "sim_ivfpq_recall_vs_exact",
-    # Label-grid construction (round10.py): the r×c contingency grid is
+    # Label-grid construction (ml.py): the r×c contingency grid is
     # the cross join of the two per-label marginal aggregates (r and c
     # are CATEGORY cardinalities — single-digit here, bounded by the
     # domain at any data size), needed so structural-zero cells
     # contribute their (0−E)²/E chi² term. |r|×|c| rows, broadcast.
     "ml_cramers_v",
-    # Semantic decontamination (round13.py): corpus x broadcast
+    # Semantic decontamination (dedup.py): corpus x broadcast
     # EVAL-SUITE scoring — the sanctioned sim_cosine_topk shape; the
     # eval side is a fixed held-out sample at any corpus scale, so the
     # NLJ cost is |corpus| x |eval|, linear in the corpus.
@@ -137,12 +137,12 @@ EXPECTED_NLJ.add("er_blocking_quality_report")
 # broadcast 1-row series-length + observed-mean scalars.
 EXPECTED_SCALAR_BNLJ.add("ml_bootstrap_ci_mean")
 # broadcast 1-row true-total-weight scalar for the priority-sampling
-# estimator denominator (round12.py): multiplies the bounded k-row
+# estimator denominator (curation.py): multiplies the bounded k-row
 # sample by 1 row — the tfidf_top_terms shape.
 EXPECTED_SCALAR_BNLJ.add("sample_weighted_reservoir")
 # bounded-calendar daily series × broadcast 8-row lag table.
 EXPECTED_NLJ.add("ts_xcorr_lag_scan")
-# KLL-class quantile sketch (round16.py): one broadcast 1-row
+# KLL-class quantile sketch (relational.py): one broadcast 1-row
 # (n_rows, level) scalar onto the value scan (the
 # sample_weighted_reservoir shape), plus the bounded ~k-row survivor
 # frame × broadcast 9-row decile table joined on a rank expression —

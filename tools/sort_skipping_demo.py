@@ -119,7 +119,7 @@ def main() -> int:
     # Z-order layout: Morton-interleave (day, price) — the
     # fn_zorder_key primitive — so row groups stay narrow in BOTH
     # dimensions; the zkey is dropped after the write sort.
-    from caliper_poc_data_etl_spark.queries.round8 import (
+    from caliper_poc_data_etl_spark.queries.scalars import (
         ZORDER_BITS,
         _z_expr,
         _z_spark,
@@ -144,7 +144,7 @@ def main() -> int:
     # Hilbert layout: same (day, price) dimensions through the graded
     # fn_hilbert_key stages (16 chained div/mod projections); the hkey
     # is dropped after the write sort, exactly like the zkey.
-    from caliper_poc_data_etl_spark.queries.round11 import (
+    from caliper_poc_data_etl_spark.queries.scalars import (
         HILBERT_BITS,
         _hilbert_stage_exprs,
     )
