@@ -27,19 +27,14 @@ def _assessment_event(action: str):
     reference ``etl-assessment-level.js:125-147``)."""
     return make_event(
         "ASSESSMENT_EVENT",
-        values={"action": F.lit(action)},
+        values={"action": f"'{action}'"},
         top={
-            "actor": id_entity(F.col("identity_id")),
-            "object": F.struct(
-                F.col("assessment_id").alias("id"),
-                F.col("assessment_version").alias("version"),
-            ),
-            "generated": F.struct(
-                F.col("attempt_id").alias("id"),
-                # `+this.attemptCount` — the reference's only cast
-                # (etl-assessment-level.js:91).
-                F.col("attemptnumber").cast("int").alias("count"),
-            ),
+            "actor": id_entity("identity_id"),
+            "object": "named_struct('id', assessment_id, 'version', assessment_version)",
+            # `+this.attemptCount` — the reference's only cast
+            # (etl-assessment-level.js:91).
+            "generated": "named_struct('id', attempt_id, "
+            "'count', CAST(attemptnumber AS INT))",
         },
     )
 
@@ -50,25 +45,19 @@ def _assessment_outcome_event():
     return make_event(
         "ASSESSMENT_OUTCOME_EVENT",
         values={
-            "action": F.lit("GRADED"),
-            "actor": id_entity(F.col("identity_id")),
-            "organization": id_entity(F.col("school_id")),
-            "assessment": F.struct(
-                F.col("assessment_id").alias("id"),
-                F.col("assessment_version").alias("version"),
-            ),
-            "object": F.struct(
-                F.col("attempt_id").alias("id"),
-                F.col("attemptnumber").cast("int").alias("count"),
-            ),
-            "generated": F.struct(
-                # SURVEY.md F3: this pipeline SWAPS the mapping vs
-                # etl.js — score_posible → normalScore, score_earned →
-                # totalScore (etl-assessment-level.js:71-72,101-106).
-                # Preserved: it defines this script's output contract.
-                F.col("score_posible").alias("normalScore"),
-                F.col("score_earned").alias("totalScore"),
-            ),
+            "action": "'GRADED'",
+            "actor": id_entity("identity_id"),
+            "organization": id_entity("school_id"),
+            "assessment": "named_struct('id', assessment_id, "
+            "'version', assessment_version)",
+            "object": "named_struct('id', attempt_id, "
+            "'count', CAST(attemptnumber AS INT))",
+            # SURVEY.md F3: this pipeline SWAPS the mapping vs
+            # etl.js — score_posible → normalScore, score_earned →
+            # totalScore (etl-assessment-level.js:71-72,101-106).
+            # Preserved: it defines this script's output contract.
+            "generated": "named_struct('normalScore', score_posible, "
+            "'totalScore', score_earned)",
         },
     )
 

@@ -1,10 +1,18 @@
-"""Shared event-struct construction against the superset schema.
+"""Shared event construction against the superset schema.
 
 The reference emits three envelope shapes into one output stream
 (SURVEY.md F4); the engine unifies them under one nullable superset
 ``StructType`` (:data:`caliper_poc_data_etl_spark.schemas.EVENT_SCHEMA`)
 so heterogeneous events can live in one column / array / sink. Absent
-fields are typed NULLs, pruned at JSON write via ``ignoreNullFields``.
+fields are NULLs, pruned at JSON write via ``ignoreNullFields``.
+
+An event renders as ONE SQL expression, ``CAST(named_struct(...) AS
+<EVENT_SCHEMA>)``: the driver parses one string instead of making a
+py4j call per field, and the single superset cast gives every event
+exactly the type ``EVENT_SCHEMA`` (struct casts are positional, so it
+also renames fields, e.g. the ``arrays_zip`` field to ``id``).
+
+:func:`collect_in_order` is the pipelines' ordered list-aggregate.
 """
 
 from __future__ import annotations
@@ -15,33 +23,25 @@ from pyspark.sql import types as T
 
 from caliper_poc_data_etl_spark.schemas import EVENT_SCHEMA, EVENT_TYPES
 
-
-def _null(dtype: T.DataType) -> Column:
-    return F.lit(None).cast(dtype)
+_EVENT_DDL = EVENT_SCHEMA.simpleString()
 
 
-def _fill(struct_type: T.StructType, provided: dict[str, Column]) -> Column:
-    """Build ``struct_type`` from ``provided`` columns, NULL-filling the rest.
-
-    Every provided column is cast to the target field type so that all
-    events share one exact Spark type (required for ``F.array`` of
-    heterogeneous envelopes).
-    """
-    unknown = set(provided) - {f.name for f in struct_type.fields}
+def _named_struct(struct_type: T.StructType, provided: dict[str, str]) -> str:
+    """``named_struct`` over every field of ``struct_type``, in schema
+    order, from the ``provided`` SQL fragments; absent fields are NULL."""
+    unknown = set(provided) - set(struct_type.names)
     if unknown:
         raise KeyError(f"fields not in event schema: {sorted(unknown)}")
-    cols = []
-    for field in struct_type.fields:
-        col = provided.get(field.name)
-        col = _null(field.dataType) if col is None else col.cast(field.dataType)
-        cols.append(col.alias(field.name))
-    return F.struct(*cols)
+    args = ", ".join(
+        f"'{f.name}', {provided.get(f.name, 'NULL')}" for f in struct_type.fields
+    )
+    return f"named_struct({args})"
 
 
 def make_event(
     event_type: str,
-    values: dict[str, Column] | None = None,
-    top: dict[str, Column] | None = None,
+    values: dict[str, str] | None = None,
+    top: dict[str, str] | None = None,
 ) -> Column:
     """Construct one event struct (superset schema).
 
@@ -52,20 +52,36 @@ def make_event(
     ``values`` populates the nested ``values`` struct; ``top``
     populates the top-level envelope-variant fields (``actor`` /
     ``object`` / ``generated`` as siblings of ``values`` — the
-    ``AssessmentEvent`` shape, SURVEY.md F4).
+    ``AssessmentEvent`` shape, SURVEY.md F4). Both map a field name to
+    a Spark SQL fragment (e.g. ``"named_struct('id', attempt_id,
+    'count', 1)"``); a nested struct fragment lists its fields in
+    schema order, and each value is cast to its schema type. Fragments
+    are pasted into the expression verbatim, so they must come from
+    code, never from data.
     """
     if event_type not in EVENT_TYPES:
         raise KeyError(f"unknown event type {event_type!r}; known: {sorted(EVENT_TYPES)}")
-    values_type = EVENT_SCHEMA["values"].dataType
-    provided: dict[str, Column] = {
-        "type": F.lit(EVENT_TYPES[event_type]),
-        "values": _fill(values_type, values or {}),
+    provided = {
+        "type": f"'{EVENT_TYPES[event_type]}'",
+        "values": _named_struct(EVENT_SCHEMA["values"].dataType, values or {}),
+        **(top or {}),
     }
-    for name, col in (top or {}).items():
-        provided[name] = col
-    return _fill(EVENT_SCHEMA, provided)
+    return F.expr(f"CAST({_named_struct(EVENT_SCHEMA, provided)} AS {_EVENT_DDL})")
 
 
-def id_entity(col: Column) -> Column:
-    """``{id: <col>}`` single-field entity struct (reference getActor etc.)."""
-    return F.struct(col.cast("string").alias("id"))
+def id_entity(sql: str) -> str:
+    """``{id: <sql>}`` single-field entity fragment (reference getActor etc.)."""
+    return f"named_struct('id', CAST({sql} AS STRING))"
+
+
+def collect_in_order(value: str, order: str = "_row_id") -> Column:
+    """``collect_list(value)`` ordered by ``order`` (unique per group).
+
+    Spark's ``collect_list`` gives no intra-group order; the reference
+    preserves input order (``etl.js:112``). ``sort_array`` on structs
+    orders by the leading field, so collecting ``(ord, value)`` pairs,
+    sorting them, and extracting ``value`` from the array of structs
+    restores the order without a per-element lambda.
+    """
+    pairs = F.collect_list(F.struct(F.col(order).alias("ord"), F.col(value)))
+    return F.sort_array(pairs).getField(value)

@@ -6,9 +6,12 @@ list-collection → partitioned JSON sink. Every step is a native
 Column/DataFrame op (no Python UDFs); the only shuffle is the group-by.
 
 Plan shape (100 TB posture): the scan is splittable CSV with explicit
-schema; projection prunes to the 8 consumed columns at the scan; the
-group-by is a hash aggregate with map-side partial ``collect_list``;
-AQE coalesces the post-shuffle partitions.
+schema; projection prunes to the 8 consumed columns at the scan; each
+row's event is one SQL expression (``pipelines.events.make_event``)
+serialized to JSON before the shuffle; the group-by is a hash
+aggregate with map-side partial ``collect_list``, ordered by
+``sort_array`` with no higher-order lambda anywhere in the plan; AQE
+coalesces the post-shuffle partitions.
 """
 
 from __future__ import annotations
@@ -16,7 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from caliper_poc_data_etl_spark.pipelines.events import id_entity, make_event
+from caliper_poc_data_etl_spark.pipelines.events import (
+    collect_in_order,
+    id_entity,
+    make_event,
+)
 from caliper_poc_data_etl_spark.schemas import ASSESSMENT_ITEMS_FIDELITY
 from caliper_poc_data_etl_spark.sinks import write_grouped_json
 from caliper_poc_data_etl_spark.sources import read_csv
@@ -47,33 +54,23 @@ def outcome_event_column(multi_lo: str = "intent"):
     N>1 (F2); use :func:`reference_conformance_filter` +
     ``multi_lo='reference'`` for strict parity.
     """
-    learning_objectives = F.transform(
-        F.split(F.coalesce(F.col("masterobjectivesid"), F.lit("")), ";"),
-        lambda x: F.struct(x.alias("id")),
-    )
     return make_event(
         "OUTCOME_EVENT",
         values={
-            "action": F.lit("GRADED"),
-            "actor": id_entity(F.col("identity_id")),
-            "target": F.struct(
-                F.col("assmtitem_id").alias("id"),
-                learning_objectives.alias("learningObjectives"),
-            ),
-            "object": F.struct(
-                F.col("attempt_id").alias("id"), F.lit(1).alias("count")
-            ),
-            "generated": F.struct(
-                # etl.js:97-99: score_earned → normalScore,
-                # score_posible → totalScore (note: the *other* pipeline
-                # swaps these — SURVEY.md F3; preserved per-pipeline).
-                F.col("score_earned").alias("normalScore"),
-                F.col("score_posible").alias("totalScore"),
-            ),
-            "assessment": F.struct(
-                F.col("assessment_id").alias("id"),
-                F.col("assessment_version").alias("version"),
-            ),
+            "action": "'GRADED'",
+            "actor": id_entity("identity_id"),
+            # arrays_zip wraps each id in a 1-field struct; the event
+            # cast names that field ``id``.
+            "target": "named_struct('id', assmtitem_id, 'learningObjectives', "
+            "arrays_zip(split(coalesce(masterobjectivesid, ''), ';')))",
+            "object": "named_struct('id', attempt_id, 'count', 1)",
+            # etl.js:97-99: score_earned → normalScore,
+            # score_posible → totalScore (note: the *other* pipeline
+            # swaps these — SURVEY.md F3; preserved per-pipeline).
+            "generated": "named_struct('normalScore', score_earned, "
+            "'totalScore', score_posible)",
+            "assessment": "named_struct('id', assessment_id, "
+            "'version', assessment_version)",
         },
     )
 
@@ -97,22 +94,10 @@ def item_outcome_events(items: DataFrame, *, multi_lo: str = "intent") -> DataFr
 
 
 def items_grouped_by_attempt(events: DataFrame) -> DataFrame:
-    """``GROUP BY attempt_id, collect_list(event)`` with stable order.
-
-    Spark's ``collect_list`` gives no intra-group order; the reference
-    preserves input order (``etl.js:112``). Fix is plan-level: collect
-    ``(ord, event)`` pairs and ``array_sort`` them — ``array_sort`` on
-    structs orders by leading field, so the pair puts ``ord`` first.
-    """
+    """``GROUP BY attempt_id, collect_list(event)`` in input order
+    (``etl.js:112``; see :func:`collect_in_order`)."""
     return events.groupBy("attempt_id").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col("_row_id").alias("ord"), F.col("event").alias("event"))
-                )
-            ),
-            lambda pair: pair["event"],
-        ).alias("events")
+        collect_in_order("event").alias("events")
     )
 
 
@@ -121,6 +106,7 @@ def items_grouped_json_by_attempt(
 ) -> DataFrame:
     """Grouped events pre-serialized: ``(attempt_id, value: string)``
     where ``value`` is the JSON array the reference writes per group.
+    This is the form :func:`run_items_pipeline` writes and returns.
 
     ``with_first_seen=True`` additionally emits ``_first_rid`` =
     ``min(_row_id)`` per group — the group's first-occurrence position
@@ -136,30 +122,17 @@ def items_grouped_json_by_attempt(
     measured 3-4× slower end-to-end at 1M rows than this form, which
     serializes each event BEFORE the shuffle (1M small conversions
     spread across every scan task) and reassembles the group by string
-    join after ``array_sort``. Byte-identical output (verified against
-    the struct path), same single shuffle, and the shuffle payload is
-    the final JSON bytes instead of wide structs.
+    join after the ordered collect (:func:`collect_in_order`, no
+    lambda). Byte-identical output (verified against the struct path),
+    same single shuffle, and the shuffle payload is the final JSON
+    bytes instead of wide structs.
     """
     pre = events.select(
         "attempt_id", "_row_id", F.to_json(F.col("event")).alias("ej")
     )
     aggs = [
         F.concat(
-            F.lit("["),
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                F.col("_row_id").alias("ord"), F.col("ej").alias("ej")
-                            )
-                        )
-                    ),
-                    lambda pair: pair["ej"],
-                ),
-                ",",
-            ),
-            F.lit("]"),
+            F.lit("["), F.array_join(collect_in_order("ej"), ","), F.lit("]")
         ).alias("value")
     ]
     if with_first_seen:
@@ -184,18 +157,22 @@ def run_items_pipeline(
     policy + multi-LO support (engine default).
     ``group_ordinal=True`` (reference layout only) names each group
     file with the reference's first-occurrence ordinal (S15,
-    etl.js:56-58,116). Returns the grouped DataFrame.
+    etl.js:56-58,116). Returns the DataFrame it wrote: the
+    pre-serialized ``(attempt_id, value)`` groups of
+    :func:`items_grouped_json_by_attempt`.
     """
     if mode == "reference":
         items = read_items_fidelity(spark, csv_path)
     else:
         items = read_csv(spark, csv_path, ASSESSMENT_ITEMS_FIDELITY, mode="permissive")
-    events = item_outcome_events(items, multi_lo=mode)
+    grouped = items_grouped_json_by_attempt(
+        item_outcome_events(items, multi_lo=mode), with_first_seen=group_ordinal
+    )
     write_grouped_json(
-        items_grouped_json_by_attempt(events, with_first_seen=group_ordinal),
+        grouped,
         target,
         key="attempt_id",
         layout=layout,
         group_ordinal=group_ordinal,
     )
-    return items_grouped_by_attempt(events)
+    return grouped

@@ -13,7 +13,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from caliper_poc_data_etl_spark.pipelines.events import id_entity, make_event
+from caliper_poc_data_etl_spark.pipelines.events import (
+    collect_in_order,
+    id_entity,
+    make_event,
+)
 from caliper_poc_data_etl_spark.queries.registry import query, t
 
 
@@ -152,29 +156,19 @@ def outcome_events_nested(spark, sf_dir):
     ordered list-agg.
     """
     li = t(spark, sf_dir, "lineitem")
+    # Every value below is cast to its string/int schema type by the
+    # event's superset cast.
     event = make_event(
         "OUTCOME_EVENT",
         values={
-            "action": F.lit("GRADED"),
-            "actor": id_entity(F.col("l_suppkey")),
-            "target": F.struct(
-                F.col("l_partkey").cast("string").alias("id"),
-                F.array(
-                    F.struct(F.col("l_partkey").cast("string").alias("id"))
-                ).alias("learningObjectives"),
-            ),
-            "object": F.struct(
-                F.col("l_orderkey").cast("string").alias("id"),
-                F.lit(1).alias("count"),
-            ),
-            "generated": F.struct(
-                F.col("l_quantity").cast("string").alias("normalScore"),
-                F.col("l_extendedprice").cast("string").alias("totalScore"),
-            ),
-            "assessment": F.struct(
-                F.col("l_orderkey").cast("string").alias("id"),
-                F.lit("1.0").alias("version"),
-            ),
+            "action": "'GRADED'",
+            "actor": id_entity("l_suppkey"),
+            "target": "named_struct('id', l_partkey, "
+            "'learningObjectives', array(named_struct('id', l_partkey)))",
+            "object": "named_struct('id', l_orderkey, 'count', 1)",
+            "generated": "named_struct('normalScore', l_quantity, "
+            "'totalScore', l_extendedprice)",
+            "assessment": "named_struct('id', l_orderkey, 'version', '1.0')",
         },
     )
     return (
@@ -184,14 +178,7 @@ def outcome_events_nested(spark, sf_dir):
             event.alias("event"),
         )
         .groupBy("attempt_key")
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("seq"), F.col("event")))
-                ),
-                lambda pair: pair["event"],
-            ).alias("events")
-        )
+        .agg(collect_in_order("event", order="seq").alias("events"))
         .select(
             F.col("attempt_key").cast("string").alias("attempt_id"),
             F.size("events").alias("n_events"),

@@ -162,10 +162,12 @@ def write_grouped_json(
     so the upstream's full task width carves the partition directories
     in parallel; the conf is restored afterwards.
 
-    Input forms: ``(key, events: array<struct>)`` (struct form) or
-    ``(key, value: string)`` from
-    ``pipelines.items.items_grouped_json_by_attempt`` (pre-serialized
-    form — measured 3-4× faster end-to-end at 1M rows because events
+    Input forms: ``(key, events: array<struct>)`` (struct form: the
+    attempt pipeline's 3-event arrays, or
+    ``pipelines.items.items_grouped_by_attempt``) or ``(key, value:
+    string)`` from ``pipelines.items.items_grouped_json_by_attempt``
+    (pre-serialized form, the one ``run_items_pipeline`` writes —
+    measured 3-4× faster end-to-end at 1M rows because events
     serialize before the shuffle; see that function's docstring).
     """
     pre_serialized = dict(df.dtypes).get("value") == "string"

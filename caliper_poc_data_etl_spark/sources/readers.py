@@ -13,6 +13,8 @@ Reference parity notes:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -159,9 +161,10 @@ def normalize_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-# Parquet schema cache, keyed on the table path. METADATA only — the
-# stand-in for the table schemas a real deployment declares in its
-# metastore instead of re-inferring from footers on every query.
+# Parquet schema cache, keyed on the table path and the file's
+# modification time and size (see :func:`schema_cache_key`). METADATA
+# only — the stand-in for the table schemas a real deployment declares
+# in its metastore instead of re-inferring from footers on every query.
 # ``spark.read.parquet(path)`` runs a driver-side footer-read job per
 # call (~85 ms/table here), paid by EVERY bench trial and correctness
 # run; with the schema supplied, resolution is pure plan construction
@@ -170,7 +173,20 @@ def normalize_ts(df: DataFrame) -> DataFrame:
 # parquet bytes — and the cache dies with the process. The cached
 # schema is exactly what inference produced for that path under the
 # fixture confs, so read semantics are identical by construction.
-_SCHEMA_CACHE: dict[str, T.StructType] = {}
+_SCHEMA_CACHE: dict[tuple, T.StructType] = {}
+
+
+def schema_cache_key(path: str) -> tuple:
+    """``(path, st_mtime_ns, st_size)``: a file rewritten in place (e.g.
+    with an added column) gets a new key, so its schema is inferred
+    again instead of served stale. One ``os.stat`` per lookup. A path
+    ``os.stat`` cannot reach (a remote URI, or a missing path that the
+    read itself then reports) is keyed on the path alone."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return (path, None, None)
+    return (path, st.st_mtime_ns, st.st_size)
 
 
 def sf_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -180,10 +196,11 @@ def sf_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (:func:`apply_fixture_confs`)."""
     apply_fixture_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
-    schema = _SCHEMA_CACHE.get(path)
+    key = schema_cache_key(path)
+    schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
+        _SCHEMA_CACHE[key] = df.schema
     else:
         df = spark.read.schema(schema).parquet(path)
     return normalize_ts(df)

@@ -79,16 +79,18 @@ def read_event_stream(
         _SCHEMA_CACHE,
         apply_fixture_confs,
         normalize_ts,
+        schema_cache_key,
     )
 
     apply_fixture_confs(spark)
-    # Same per-path schema cache as the batch reader (metadata only) —
-    # skips the footer-inference job on every replay construction.
+    # Same schema cache as the batch reader (metadata only) — skips
+    # the footer-inference job on every replay construction.
     path = f"{sf_dir}/events.parquet"
-    schema = _SCHEMA_CACHE.get(path)
+    key = schema_cache_key(path)
+    schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         schema = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[path] = schema
+        _SCHEMA_CACHE[key] = schema
     # The streaming file source requires a directory; select just the
     # events table out of the scale-factor dir with a glob filter.
     # ``glob`` widens the filter for tests that stage the events as

@@ -20,6 +20,7 @@ from caliper_poc_data_etl_spark.pipelines import (
 from caliper_poc_data_etl_spark.schemas import (
     ASSESSMENT_ITEMS_FIDELITY,
     ASSESSMENTS_FIDELITY,
+    EVENT_SCHEMA,
 )
 from caliper_poc_data_etl_spark.sources import read_csv
 
@@ -147,6 +148,30 @@ class TestItemsPipeline:
 
         total = grouped.agg(F.sum(F.size("events"))).collect()[0][0]
         assert total == 3
+
+
+class TestPlanShape:
+    """Every event has exactly the superset type, and the item ETL's
+    plan carries no per-element higher-order lambda."""
+
+    def test_item_event_type_is_event_schema(self, spark, items_csv):
+        items = read_csv(spark, items_csv, ASSESSMENT_ITEMS_FIDELITY)
+        assert item_outcome_events(items).schema["event"].dataType == EVENT_SCHEMA
+
+    def test_assessment_event_type_is_event_schema(self, spark, assessments_csv):
+        df = read_csv(spark, assessments_csv, ASSESSMENTS_FIDELITY)
+        events = assessment_attempt_events(df, exploded=True)
+        assert events.schema["event"].dataType == EVENT_SCHEMA
+
+    def test_grouped_json_plan_has_no_lambda(self, spark, items_csv):
+        from caliper_poc_data_etl_spark.pipelines.items import (
+            items_grouped_json_by_attempt,
+        )
+
+        items = read_csv(spark, items_csv, ASSESSMENT_ITEMS_FIDELITY)
+        grouped = items_grouped_json_by_attempt(item_outcome_events(items))
+        plan = grouped._jdf.queryExecution().optimizedPlan().toString()
+        assert "lambdafunction" not in plan.lower()
 
 
 class TestAssessmentsPipeline:

@@ -116,3 +116,20 @@ def test_compact_files_merges_small_files(spark, orders, tmp_path):
     assert 1 <= n_dst < n_src / 4
     # Zero loss, identical data.
     assert _rows(spark.read.parquet(dst)) == _rows(orders)
+
+
+def test_sf_table_sees_rewritten_file_schema(spark, tmp_path):
+    """The parquet schema cache must not serve a stale schema after the
+    table file is rewritten in place with an added column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from caliper_poc_data_etl_spark.sources import sf_table
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"k": [1, 2]}), path)
+    assert sf_table(spark, str(tmp_path), "t").columns == ["k"]
+    pq.write_table(pa.table({"k": [1, 2], "v": ["a", "b"]}), path)
+    got = sf_table(spark, str(tmp_path), "t")
+    assert got.columns == ["k", "v"]
+    assert _rows(got) == [(1, "a"), (2, "b")]
