@@ -22,6 +22,12 @@ from caliper_poc_data_etl_spark.sources import read_csv
 from caliper_poc_data_etl_spark.sources.fidelity import read_assessments_fidelity
 
 
+# `+this.attemptCount` — the reference's only cast
+# (etl-assessment-level.js:91); see assessment_attempt_events for the
+# non-numeric case.
+_ATTEMPT_COUNT = "TRY_CAST(attemptnumber AS INT)"
+
+
 def _assessment_event(action: str):
     """Top-level-envelope ``AssessmentEvent`` (SURVEY.md F4;
     reference ``etl-assessment-level.js:125-147``)."""
@@ -31,10 +37,8 @@ def _assessment_event(action: str):
         top={
             "actor": id_entity("identity_id"),
             "object": "named_struct('id', assessment_id, 'version', assessment_version)",
-            # `+this.attemptCount` — the reference's only cast
-            # (etl-assessment-level.js:91).
-            "generated": "named_struct('id', attempt_id, "
-            "'count', CAST(attemptnumber AS INT))",
+            "generated": "named_struct('id', attempt_id, 'count', "
+            f"{_ATTEMPT_COUNT})",
         },
     )
 
@@ -50,8 +54,7 @@ def _assessment_outcome_event():
             "organization": id_entity("school_id"),
             "assessment": "named_struct('id', assessment_id, "
             "'version', assessment_version)",
-            "object": "named_struct('id', attempt_id, "
-            "'count', CAST(attemptnumber AS INT))",
+            "object": f"named_struct('id', attempt_id, 'count', {_ATTEMPT_COUNT})",
             # SURVEY.md F3: this pipeline SWAPS the mapping vs
             # etl.js — score_posible → normalScore, score_earned →
             # totalScore (etl-assessment-level.js:71-72,101-106).
@@ -75,6 +78,12 @@ def assessment_attempt_events(
     ``(.+)``×13 regex drops any row with an empty field
     (``etl-assessment-level.js:18``) — expressed here as ``na.drop`` on
     all 13 columns (CSV empty fields read as NULL).
+
+    ``count`` is ``TRY_CAST(attemptnumber AS INT)``: a non-numeric
+    ``attemptnumber`` gives NULL and the field is pruned like every
+    other null field, where the reference evaluates ``+this.attemptCount``
+    to ``NaN`` and writes ``"count":null``. A plain ``CAST`` would fail
+    the whole run under Spark's ANSI default.
 
     Returns ``(attempt_id, events: array<event>)`` — one row per input
     row, mirroring the reference's one-file-per-row layout — or, with
@@ -115,6 +124,8 @@ def run_assessments_pipeline(
     Unlike the reference, the sink cannot silently lose files — Spark's
     task-commit protocol replaces the unbounded async writes that
     dropped 80% of output at 100k rows (SURVEY.md F5).
+    Returns the DataFrame it wrote: ``(attempt_id, value)``, each row's
+    three events serialized as one JSON array (``to_json(events)``).
     """
     if mode == "reference":
         df = read_assessments_fidelity(spark, csv_path)
@@ -123,5 +134,6 @@ def run_assessments_pipeline(
     else:
         df = read_csv(spark, csv_path, ASSESSMENTS_FIDELITY, mode="permissive")
         events = assessment_attempt_events(df, limit=limit)
-    write_grouped_json(events, target, key="attempt_id", layout=layout)
-    return events
+    docs = events.select("attempt_id", F.to_json("events").alias("value"))
+    write_grouped_json(docs, target, key="attempt_id", layout=layout)
+    return docs

@@ -50,35 +50,13 @@ def _with_group_ordinal(df: DataFrame, *, order_col: str) -> DataFrame:
     )
 
 
-def _write_reference_ordinal(df: DataFrame, target: str, *, key: str) -> None:
-    """Reference filename-ordinal layout (S15 opt-in): ONE flat file
-    per group named ``events-{ordinal}-{key}.txt``, ordinal = the
-    group's first-occurrence order in the input — the deterministic
-    stand-in for the reference's ``events-{i}-{Date.now()}`` (etl.js:116;
-    the timestamp suffix is inherently non-deterministic and declared
-    non-semantic, SURVEY §7.3 — the ORDINAL is the reproducible part
-    and is what this layout reproduces). Same executor-direct POSIX
-    writer semantics as :func:`_write_reference_direct` — synchronous
-    writes, any I/O error fails the task loudly."""
-    shutil.rmtree(target, ignore_errors=True)
-    os.makedirs(target, exist_ok=True)
+def _write_direct(df: DataFrame, target: str, relpath) -> None:
+    """Executor-direct file-per-row writer (reference layout).
 
-    def _write_partition(rows) -> None:
-        for row in rows:
-            name = f"events-{row['_ord']}-{row[key]}.txt"
-            with open(os.path.join(target, name), "w") as fh:
-                fh.write(row["value"])
-                fh.write("\n")
-
-    df.foreachPartition(_write_partition)
-
-
-def _write_reference_direct(df: DataFrame, target: str, *, key: str) -> None:
-    """Direct executor-side file-per-group writer (reference layout).
-
-    Input is the pre-serialized ``(key, value: string)`` form; each row
-    becomes one ``{key}=<k>/part-<task>-<seq>.txt`` file written with
-    plain POSIX I/O from the task — no Hadoop committer. Measured
+    Each ``(…, value: string)`` row becomes one file at
+    ``target/relpath(row, part)``, holding ``value`` and a newline;
+    ``part`` is the writing task's unique ``part-<task>-<seq>`` stem.
+    Plain POSIX I/O from the task — no Hadoop committer. Measured
     motivation: the committer path costs ~2 metadata operations per
     file (temp write + commit rename) plus a job-commit listing over
     every partition directory; at 5,000 one-file groups that overhead
@@ -104,16 +82,14 @@ def _write_reference_direct(df: DataFrame, target: str, *, key: str) -> None:
 
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
-        seq = 0
-        for row in rows:
-            d = os.path.join(target, f"{key}={row[0]}")
-            os.makedirs(d, exist_ok=True)
-            with open(os.path.join(d, f"part-{pid:05d}-{seq:05d}.txt"), "w") as fh:
-                fh.write(row[1])
+        for seq, row in enumerate(rows):
+            path = os.path.join(target, relpath(row, f"part-{pid:05d}-{seq:05d}"))
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            with open(path, "w") as fh:
+                fh.write(row["value"])
                 fh.write("\n")
-            seq += 1
 
-    df.select(F.col(key).cast("string"), "value").foreachPartition(_write_partition)
+    df.foreachPartition(_write_partition)
 
 
 def write_grouped_json(
@@ -126,23 +102,40 @@ def write_grouped_json(
 ) -> None:
     """Write one JSON document stream per group key.
 
+    Input is ``(key, value: string)``: ``value`` is the group's events
+    already serialized as one JSON array, as
+    ``pipelines.items.items_grouped_json_by_attempt`` builds it and as
+    the attempt pipeline's ``to_json(events)`` does. Serializing is
+    the caller's job, so every layout is a plain text write; a frame
+    without a string ``value`` column is rejected.
+
     - ``layout='spark'`` (default): ``partitionBy(key)`` JSON-lines —
       the idiomatic equivalent of the reference's file-per-group;
-      directory per key, null fields pruned.
-    - ``layout='reference'``: byte-parity content — each row's
-      ``events`` array serialized as ONE JSON-array text line per
-      group, matching the reference's ``JSON.stringify(events)`` files
-      (file *naming* is declared non-semantic, SURVEY.md §7.3).
-      Written executor-direct, bypassing the Hadoop committer — see
-      :func:`_write_reference_direct` for the measured rationale and
-      trade-offs.
-    - ``layout='bulk'``: JSON-lines of ``(key, events)`` with NO per-key
-      directories — the 100 TB layout. Any file-per-group layout costs
-      O(distinct keys) filesystem metadata operations (measured ≈1 ms
-      per file even for a raw serial writer); bulk keeps file count =
-      task count and the grouping travels IN the data. Use this when
-      keys number in the millions and a downstream consumer can filter
-      by key (or re-partition coarsely) instead of addressing files.
+      directory per key, each line ``{"events": [...]}``.
+    - ``layout='reference'``: byte-parity content — each group's
+      ``value`` as ONE JSON-array text line, matching the reference's
+      ``JSON.stringify(events)`` files (file *naming* is declared
+      non-semantic, SURVEY.md §7.3), one ``{key}=<k>/`` directory per
+      key. Written executor-direct, bypassing the Hadoop committer —
+      see :func:`_write_direct` for the measured rationale and
+      trade-offs. ``group_ordinal=True`` (S15, this layout only)
+      instead names each group's flat file ``events-{ordinal}-{key}.txt``,
+      ordinal = the group's first-occurrence order in the input — the
+      deterministic stand-in for the reference's
+      ``events-{i}-{Date.now()}`` (etl.js:116; the timestamp suffix is
+      non-semantic, the ordinal is the reproducible part). It needs
+      the ``_first_rid`` column of
+      ``items_grouped_json_by_attempt(with_first_seen=True)``.
+    - ``layout='bulk'``: JSON-lines ``{key: ..., "events": [...]}``
+      with NO per-key directories — the 100 TB layout. Any
+      file-per-group layout costs O(distinct keys) filesystem metadata
+      operations (measured ≈1 ms per file even for a raw serial
+      writer); bulk keeps file count = task count and the grouping
+      travels IN the data. The key is JSON-escaped by serializing a
+      1-field struct and splicing the events array into it, so
+      arbitrary key strings stay valid JSON. Use this when keys number
+      in the millions and a downstream consumer can filter by key (or
+      re-partition coarsely) instead of addressing files.
 
     Partitioning strategy: REUSE the input's existing distribution. The
     callers' group-by / per-key projection already hash-partitions (or
@@ -161,129 +154,71 @@ def write_grouped_json(
     Instead, AQE partition coalescing is disabled just for this write,
     so the upstream's full task width carves the partition directories
     in parallel; the conf is restored afterwards.
-
-    Input forms: ``(key, events: array<struct>)`` (struct form: the
-    attempt pipeline's 3-event arrays, or
-    ``pipelines.items.items_grouped_by_attempt``) or ``(key, value:
-    string)`` from ``pipelines.items.items_grouped_json_by_attempt``
-    (pre-serialized form, the one ``run_items_pipeline`` writes —
-    measured 3-4× faster end-to-end at 1M rows because events
-    serialize before the shuffle; see that function's docstring).
     """
-    pre_serialized = dict(df.dtypes).get("value") == "string"
+    if layout not in ("spark", "reference", "bulk"):
+        raise ValueError(
+            f"layout must be 'spark', 'reference' or 'bulk', got {layout!r}"
+        )
+    if dict(df.dtypes).get("value") != "string":
+        raise ValueError(
+            "write_grouped_json takes (key, value: string) rows: serialize "
+            "the events first, e.g. with to_json or "
+            "items_grouped_json_by_attempt"
+        )
+    if group_ordinal:
+        if layout != "reference":
+            raise ValueError(
+                "group_ordinal is a reference-layout filename parity "
+                f"feature; got layout={layout!r}"
+            )
+        if "_first_rid" not in df.columns:
+            raise ValueError(
+                "group_ordinal needs the grouped form with _first_rid "
+                "(with_first_seen=True)"
+            )
     spark = df.sparkSession
     coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
     old = spark.conf.get(coalesce_key, None)
     spark.conf.set(coalesce_key, "false")
     try:
         if group_ordinal:
-            # S15 opt-in: filename ordinal by first-occurrence order.
-            # Requires the pre-serialized form carrying _first_rid
-            # (items_grouped_json_by_attempt(with_first_seen=True)).
-            if layout != "reference":
-                raise ValueError(
-                    "group_ordinal is a reference-layout filename parity "
-                    f"feature; got layout={layout!r}"
-                )
-            if not (pre_serialized and "_first_rid" in df.columns):
-                raise ValueError(
-                    "group_ordinal needs the pre-serialized grouped form "
-                    "with _first_rid (with_first_seen=True)"
-                )
-            _write_reference_ordinal(
+            _write_direct(
                 _with_group_ordinal(df, order_col="_first_rid"),
                 target,
-                key=key,
+                lambda row, _part: f"events-{row['_ord']}-{row[key]}.txt",
             )
-        elif pre_serialized:
-            _write_pre_serialized(df, target, key=key, layout=layout)
         elif layout == "reference":
-            _write_reference_direct(
-                df.select(F.col(key), F.to_json(F.col("events")).alias("value")),
+            _write_direct(
+                df.select(F.col(key).cast("string").alias("k"), "value"),
                 target,
-                key=key,
+                lambda row, part: f"{key}={row['k']}/{part}.txt",
             )
         elif layout == "spark":
             (
-                df.write.mode("overwrite")
-                .option("ignoreNullFields", True)
+                df.select(
+                    F.col(key),
+                    F.concat(F.lit('{"events":'), F.col("value"), F.lit("}")).alias(
+                        "value"
+                    ),
+                )
+                .write.mode("overwrite")
                 .partitionBy(key)
-                .json(target)
-            )
-        elif layout == "bulk":
-            (
-                df.write.mode("overwrite")
-                .option("ignoreNullFields", True)
-                .json(target)
+                .text(target)
             )
         else:
-            raise ValueError(
-                f"layout must be 'spark', 'reference' or 'bulk', got {layout!r}"
+            head = F.to_json(F.struct(F.col(key)))
+            line = F.concat(
+                F.substring(head, 1, F.length(head) - 1),
+                F.lit(',"events":'),
+                F.col("value"),
+                F.lit("}"),
             )
+            df.select(line.alias("value")).write.mode("overwrite").text(target)
     finally:
         if old is None:
             spark.conf.unset(coalesce_key)
         else:
             spark.conf.set(coalesce_key, old)
-
-
-def _write_pre_serialized(
-    df: DataFrame, target: str, *, key: str, layout: str
-) -> None:
-    """Sink the ``(key, value: string)`` form — text writes only, no
-    datasource re-serialization.
-
-    - reference: same bytes/partition-dirs as the struct path.
-    - spark: partition-dir per key, JSON-lines ``{"events": [...]}``
-      (field order differs from the struct path; same data).
-    - bulk: single flat JSON-lines file set with the key inlined —
-      the key is JSON-escaped by serializing a 1-field struct and
-      splicing the events array into it, so arbitrary key strings
-      stay valid JSON.
-    """
-    if layout == "reference":
-        _write_reference_direct(df, target, key=key)
-    elif layout == "spark":
-        (
-            df.select(
-                F.col(key),
-                F.concat(F.lit('{"events":'), F.col("value"), F.lit("}")).alias(
-                    "value"
-                ),
-            )
-            .write.mode("overwrite")
-            .partitionBy(key)
-            .text(target)
-        )
-    elif layout == "bulk":
-        head = F.to_json(F.struct(F.col(key)))
-        line = F.concat(
-            F.substring(head, 1, F.length(head) - 1),
-            F.lit(',"events":'),
-            F.col("value"),
-            F.lit("}"),
-        )
-        df.select(line.alias("value")).write.mode("overwrite").text(target)
-    else:
-        raise ValueError(
-            f"layout must be 'spark', 'reference' or 'bulk', got {layout!r}"
-        )
-
-
-def write_parquet(
-    df: DataFrame,
-    target: str,
-    *,
-    partition_by: list[str] | None = None,
-    max_records_per_file: int | None = None,
-) -> None:
-    """Partitioned parquet sink with overwrite (generalized S18)."""
-    writer = df.write.mode("overwrite")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(target)
 
 
 def write_file(

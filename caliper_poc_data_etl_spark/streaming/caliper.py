@@ -60,8 +60,11 @@ def run_attempts_stream(
     *,
     available_now: bool = True,
 ):
-    """watch_dir CSVs → 3-event fan-out → exactly-once JSON sink,
-    partitioned by attempt like the batch sink's directory layout."""
+    """watch_dir CSVs → 3-event fan-out → exactly-once JSON sink.
+
+    Unpartitioned JSON-lines: one ``{"attempt_id", "value"}`` line per
+    event, ``value`` being that event's JSON string; unlike the batch
+    sink there is no per-attempt directory and no per-attempt array."""
     events = attempt_events_stream(read_assessments_stream(spark, watch_dir))
     flat = events.select("attempt_id", F.to_json("event").alias("value"))
     writer = (

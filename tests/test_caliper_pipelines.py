@@ -140,6 +140,18 @@ class TestItemsPipeline:
             assert json.dumps(l["events"]) is not None
             assert [e for e in l["events"]]
 
+    def test_sink_rejects_struct_form(self, spark, items_csv, tmp_path):
+        """The sink takes only pre-serialized ``(key, value: string)``
+        rows; struct-form groups must be serialized by the caller."""
+        from caliper_poc_data_etl_spark.sinks import write_grouped_json
+
+        items = read_csv(spark, items_csv, ASSESSMENT_ITEMS_FIDELITY)
+        grouped = items_grouped_by_attempt(item_outcome_events(items))
+        for layout in ("spark", "bulk", "reference"):
+            with pytest.raises(ValueError, match="items_grouped_json_by_attempt"):
+                write_grouped_json(grouped, str(tmp_path / layout), layout=layout)
+        assert not list(tmp_path.iterdir())
+
     def test_group_sizes_invariant(self, spark, items_csv):
         """Σ group sizes == surviving rows (FIXTURES.md §4 invariant)."""
         items = read_csv(spark, items_csv, ASSESSMENT_ITEMS_FIDELITY)
@@ -234,6 +246,33 @@ class TestAssessmentsPipeline:
         assert len(files) == 3
         payloads = [json.loads(f.read_text().strip()) for f in files]
         assert all(len(p) == 3 for p in payloads)
+
+    @pytest.mark.parametrize("mode", ["intent", "reference"])
+    def test_non_numeric_attemptnumber_omits_count(self, spark, tmp_path, mode):
+        """``+"x1"`` is NaN in the reference, which still writes the
+        event (``"count":null``); the engine writes it with ``count``
+        pruned instead of failing the whole run on an ANSI cast."""
+        csv = tmp_path / "a.csv"
+        csv.write_text(
+            ASSESSMENTS_CSV.split("\n", 2)[0]
+            + "\nstu-1,login-1,sch-9,asmt-01,1.0,2016-01-15,5,QUIZ,att-100,1,true,70,100"
+            + "\nstu-2,login-2,sch-9,asmt-01,1.0,2016-01-16,5,QUIZ,att-200,x1,false,55,100\n"
+        )
+        target = tmp_path / "t"
+        run_assessments_pipeline(
+            spark, str(csv), str(target), mode=mode, layout="reference"
+        )
+        docs = {
+            f.parent.name: json.loads(f.read_text())
+            for f in target.glob("attempt_id=*/*.txt")
+        }
+        assert set(docs) == {"attempt_id=att-100", "attempt_id=att-200"}
+        started, _, graded = docs["attempt_id=att-200"]
+        assert started["generated"] == {"id": "att-200"}
+        assert graded["values"]["object"] == {"id": "att-200"}
+        started, _, graded = docs["attempt_id=att-100"]
+        assert started["generated"] == {"id": "att-100", "count": 1}
+        assert graded["values"]["object"] == {"id": "att-100", "count": 1}
 
 
 class TestGroupOrdinal:

@@ -55,7 +55,11 @@ def test_items_100k_no_event_loss(spark, big_items_csv, tmp_path):
     items = read_csv(spark, big_items_csv, ASSESSMENT_ITEMS_FIDELITY)
     grouped = items_grouped_by_attempt(item_outcome_events(items))
     target = str(tmp_path / "out")
-    write_grouped_json(grouped, target, layout="reference")
+    write_grouped_json(
+        grouped.select("attempt_id", F.to_json("events").alias("value")),
+        target,
+        layout="reference",
+    )
 
     # Σ group sizes == input rows — nothing lost before the sink.
     sizes = grouped.select(F.size("events").alias("n")).agg(F.sum("n")).first()[0]
