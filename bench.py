@@ -239,13 +239,7 @@ def _caliper_throughput(
     scale layout (JSON-lines, file count = task count, grouping carried
     in the data). Input generation is excluded from the timing.
     Returns (wall_sec, rows_per_sec)."""
-    from caliper_poc_data_etl_spark.pipelines.items import (
-        item_outcome_events,
-        items_grouped_json_by_attempt,
-    )
-    from caliper_poc_data_etl_spark.schemas import ASSESSMENT_ITEMS_FIDELITY
-    from caliper_poc_data_etl_spark.sinks import write_grouped_json
-    from caliper_poc_data_etl_spark.sources import read_csv
+    from caliper_poc_data_etl_spark.pipelines.items import run_items_pipeline
 
     if csv_path is None:
         csv_path = _caliper_csv(n_rows)
@@ -262,9 +256,9 @@ def _caliper_throughput(
         spark.conf.set(sp_key, str(sp_new))
     try:
         t0 = time.perf_counter()
-        items = read_csv(spark, csv_path, ASSESSMENT_ITEMS_FIDELITY)
-        grouped = items_grouped_json_by_attempt(item_outcome_events(items))
-        write_grouped_json(grouped, f"{workdir}/out_{layout}{tag}", layout=layout)
+        run_items_pipeline(
+            spark, csv_path, f"{workdir}/out_{layout}{tag}", layout=layout
+        )
         wall = time.perf_counter() - t0
     finally:
         spark.conf.set(sp_key, sp_old)

@@ -937,13 +937,13 @@ def fn_zorder_key(spark, sf_dir):
     dimensions into one 32-bit sort key, the primitive behind
     Delta/Iceberg Z-ORDER clustering: sorting by zkey keeps rows
     close in BOTH dimensions physically adjacent, so parquet min/max
-    row-group pruning (tools/sort_skipping_demo.py measures the
-    single-column version) works for predicates on EITHER column —
-    the multi-dimensional generalization of the sorted layout. Pure
-    bit arithmetic (32 shift-mask-shift terms, unrolled identically
-    on both engines); the layout write itself is
-    ``repartitionByRange(zkey) + sortWithinPartitions`` exactly as
-    the demo does for the date key."""
+    row-group pruning (NOTES_r05 "Sort-order data-skipping demo"
+    measured the single-column version) works for predicates on
+    EITHER column — the multi-dimensional generalization of the
+    sorted layout. Pure bit arithmetic (32 shift-mask-shift terms,
+    unrolled identically on both engines); the layout write itself is
+    ``repartitionByRange(zkey) + sortWithinPartitions``, as that
+    measurement did for the date key."""
     o = t(spark, sf_dir, "orders")
     xy = o.select(
         "o_orderkey",

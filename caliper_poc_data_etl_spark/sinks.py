@@ -14,6 +14,11 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Directory/file name of a NULL group key: the name ``partitionBy``
+# gives it, so all three grouped layouts agree and a NULL never reads
+# as the string key "None".
+NULL_KEY = "__HIVE_DEFAULT_PARTITION__"
+
 
 def _with_group_ordinal(df: DataFrame, *, order_col: str) -> DataFrame:
     """Attach the reference's group ordinal (S15): ``_ord`` = 1-based
@@ -116,9 +121,10 @@ def write_grouped_json(
       ``value`` as ONE JSON-array text line, matching the reference's
       ``JSON.stringify(events)`` files (file *naming* is declared
       non-semantic, SURVEY.md §7.3), one ``{key}=<k>/`` directory per
-      key. Written executor-direct, bypassing the Hadoop committer —
-      see :func:`_write_direct` for the measured rationale and
-      trade-offs. ``group_ordinal=True`` (S15, this layout only)
+      key; a NULL key is named ``NULL_KEY``, as the ``spark`` layout
+      names it. Written executor-direct, bypassing the Hadoop
+      committer — see :func:`_write_direct` for the measured rationale
+      and trade-offs. ``group_ordinal=True`` (S15, this layout only)
       instead names each group's flat file ``events-{ordinal}-{key}.txt``,
       ordinal = the group's first-occurrence order in the input — the
       deterministic stand-in for the reference's
@@ -133,9 +139,10 @@ def write_grouped_json(
       writer); bulk keeps file count = task count and the grouping
       travels IN the data. The key is JSON-escaped by serializing a
       1-field struct and splicing the events array into it, so
-      arbitrary key strings stay valid JSON. Use this when keys number
-      in the millions and a downstream consumer can filter by key (or
-      re-partition coarsely) instead of addressing files.
+      arbitrary key strings stay valid JSON and a NULL key is written
+      as ``null``. Use this when keys number in the millions and a
+      downstream consumer can filter by key (or re-partition coarsely)
+      instead of addressing files.
 
     Partitioning strategy: REUSE the input's existing distribution. The
     callers' group-by / per-key projection already hash-partitions (or
@@ -180,18 +187,21 @@ def write_grouped_json(
     coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
     old = spark.conf.get(coalesce_key, None)
     spark.conf.set(coalesce_key, "false")
+    name = F.coalesce(F.col(key).cast("string"), F.lit(NULL_KEY))
     try:
         if group_ordinal:
             _write_direct(
-                _with_group_ordinal(df, order_col="_first_rid"),
+                _with_group_ordinal(
+                    df.withColumn("_k", name), order_col="_first_rid"
+                ),
                 target,
-                lambda row, _part: f"events-{row['_ord']}-{row[key]}.txt",
+                lambda row, _part: f"events-{row['_ord']}-{row['_k']}.txt",
             )
         elif layout == "reference":
             _write_direct(
-                df.select(F.col(key).cast("string").alias("k"), "value"),
+                df.select(name.alias("_k"), "value"),
                 target,
-                lambda row, part: f"{key}={row['k']}/{part}.txt",
+                lambda row, part: f"{key}={row['_k']}/{part}.txt",
             )
         elif layout == "spark":
             (
@@ -206,7 +216,7 @@ def write_grouped_json(
                 .text(target)
             )
         else:
-            head = F.to_json(F.struct(F.col(key)))
+            head = F.to_json(F.struct(F.col(key)), {"ignoreNullFields": "false"})
             line = F.concat(
                 F.substring(head, 1, F.length(head) - 1),
                 F.lit(',"events":'),

@@ -372,3 +372,70 @@ class TestGroupOrdinal:
                 layout="reference",
                 group_ordinal=True,
             )
+
+
+class TestNullGroupKey:
+    """An intent-mode item row with an empty ``attempt_id`` groups
+    under a NULL key. Every layout keeps the row (silent loss is the
+    reference's defining bug) and names the key the way ``partitionBy``
+    does, so a NULL never collides with a real key ``"None"``."""
+
+    _NULL_KEY_ROW = (
+        "stu-3,login-3,sch-9,asmt-01,1.0,,item-03,1,5,TRUEFALSE,12,5,4,"
+        "Algebra Basics,101,1.3\n"
+    )
+    _DIRS = [
+        "attempt_id=__HIVE_DEFAULT_PARTITION__",
+        "attempt_id=att-100",
+        "attempt_id=att-200",
+    ]
+
+    @pytest.fixture(scope="class")
+    def null_key_csv(self, tmp_path_factory):
+        p = tmp_path_factory.mktemp("null_key") / "items.csv"
+        p.write_text(ITEMS_CSV + self._NULL_KEY_ROW)
+        return str(p)
+
+    @staticmethod
+    def _item_ids(events) -> list[str]:
+        return [e["values"]["target"]["id"] for e in events]
+
+    def test_bulk_writes_null_key(self, spark, null_key_csv, tmp_path):
+        run_items_pipeline(spark, null_key_csv, str(tmp_path / "t"), layout="bulk")
+        lines = [
+            json.loads(ln)
+            for f in (tmp_path / "t").glob("part-*.txt")
+            for ln in f.read_text().splitlines()
+        ]
+        by_key = {ln["attempt_id"]: ln["events"] for ln in lines}
+        assert len(lines) == 3
+        assert set(by_key) == {"att-100", "att-200", None}
+        assert self._item_ids(by_key[None]) == ["item-03"]
+
+    def test_reference_names_null_key_like_partition_by(
+        self, spark, null_key_csv, tmp_path
+    ):
+        target = tmp_path / "t"
+        run_items_pipeline(spark, null_key_csv, str(target), layout="reference")
+        assert sorted(p.name for p in target.iterdir()) == self._DIRS
+        (f,) = list((target / self._DIRS[0]).glob("*.txt"))
+        assert self._item_ids(json.loads(f.read_text())) == ["item-03"]
+
+        ordinal = tmp_path / "ordinal"
+        run_items_pipeline(
+            spark, null_key_csv, str(ordinal), layout="reference", group_ordinal=True
+        )
+        names = sorted(p.name for p in ordinal.iterdir())
+        assert names == [
+            "events-1-att-100.txt",
+            "events-2-att-200.txt",
+            "events-3-__HIVE_DEFAULT_PARTITION__.txt",
+        ]
+
+    def test_spark_layout_keeps_null_key(self, spark, null_key_csv, tmp_path):
+        target = tmp_path / "t"
+        run_items_pipeline(spark, null_key_csv, str(target), layout="spark")
+        dirs = sorted(p.name for p in target.iterdir() if p.is_dir())
+        assert dirs == self._DIRS
+        (f,) = list((target / self._DIRS[0]).glob("part-*.txt"))
+        assert self._item_ids(json.loads(f.read_text())["events"]) == ["item-03"]
