@@ -143,8 +143,8 @@ def pagerank(
     dangling mass are 1-row aggregates folded into the plan as
     broadcast crossJoins — no ``collect()``/``count()`` scalars pulled
     to the driver. It is not one job per iteration:
-    ``tools/profile.py graph_pagerank`` counts 96 build-time jobs for
-    ``graph_pagerank``'s 10 iterations (sf0.1, ``local[4]``), because
+    ``tools/query_profile.py graph_pagerank`` counts 96 build-time jobs
+    for ``graph_pagerank``'s 10 iterations (sf0.1, ``local[4]``), because
     under AQE each shuffle stage of an eager checkpoint runs as its
     own job. At cluster scale an extra driver action per
     iteration doubles the iteration latency and serializes on the

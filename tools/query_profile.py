@@ -12,7 +12,8 @@ record per query, read from Spark's live trackers over py4j.
 - stage sums (``build`` / ``action``): stages that ran, tasks, run /
   CPU / GC seconds, input, shuffle-write, shuffle-read and spill bytes,
   from the status store's ``lastStageAttempt``; a stage counts once,
-  in the first phase that lists it.
+  in the first phase that lists it. ``stages_missing`` counts stage
+  ids the store had already evicted, which the sums therefore miss.
 - stream: for builders that replay a stream — batches, Σ
   ``durationMs`` per key, input rows, ``addbatch_s`` and
   ``overhead_s`` (build time outside ``addBatch``). Micro-batch jobs
@@ -25,8 +26,8 @@ runs ``bench.HEADLINE``; filters run every registered name containing
 one of them (``stream_`` = the stream ops, ``_`` = all queries).
 
 Usage:
-    python tools/profile.py [FILTER ...] [--json PATH] [--plans DIR] [--trials N]
-    SPARK_GRAFT_SF_DIR=DIR python tools/profile.py _    # default: bench.SF_DIR (sf0.1)
+    python tools/query_profile.py [FILTER ...] [--json PATH] [--plans DIR] [--trials N]
+    SPARK_GRAFT_SF_DIR=DIR python tools/query_profile.py _    # default: bench.SF_DIR (sf0.1)
 """
 
 from __future__ import annotations
@@ -42,6 +43,7 @@ from collections import Counter
 from py4j.protocol import Py4JJavaError
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 PLAN_NODES = (
     "Exchange", "Sort", "SortMergeJoin", "BroadcastHashJoin",
@@ -93,7 +95,9 @@ def _catalyst_ms(qe) -> dict[str, int]:
 def _phase(spark, group: str, fn, seen: set[int]):
     """Run ``fn()`` under job group ``group``: (result, seconds, jobs,
     stage sums). Stage ids already in ``seen`` are skipped, and every
-    id looked at is added to it."""
+    id looked at is added to it. ``stages_missing`` counts stage ids
+    the status store no longer holds: when it is non-zero, the sums
+    are incomplete."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     t0 = time.perf_counter()
@@ -103,7 +107,7 @@ def _phase(spark, group: str, fn, seen: set[int]):
     tracker = sc.statusTracker()
     store = sc._jsc.sc().statusStore()
     jobs = tracker.getJobIdsForGroup(group)
-    sums: dict = {"stages": 0, **dict.fromkeys(STAGE_SUMS, 0)}
+    sums: dict = {"stages": 0, "stages_missing": 0, **dict.fromkeys(STAGE_SUMS, 0)}
     for job in jobs:
         info = tracker.getJobInfo(job)
         for sid in info.stageIds if info else ():
@@ -112,7 +116,8 @@ def _phase(spark, group: str, fn, seen: set[int]):
             seen.add(sid)
             try:
                 stage = store.lastStageAttempt(sid)
-            except Py4JJavaError:  # gone: the store evicts skipped stages first
+            except Py4JJavaError:  # evicted (skipped stages go first)
+                sums["stages_missing"] += 1
                 continue
             if stage.numCompleteTasks() == 0:
                 continue
@@ -157,7 +162,7 @@ def _profile_one(spark, name, builder, sf_dir, trials, plans) -> dict:
     rec["plan_nodes"] = _plan_counts(plan)
     if plans:
         with open(os.path.join(plans, f"{name}.txt"), "w") as fh:
-            fh.write(plan)
+            fh.write(df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted"))
 
     rec["rows"], rec["action_s"], rec["action_jobs"], rec["action"] = _phase(
         spark, f"profile:{name}:action", df.count, seen
@@ -210,14 +215,10 @@ def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("filters", nargs="*", help="registered-name substrings")
     ap.add_argument("--json", help="write {sf_dir, master, records} to PATH")
-    ap.add_argument("--plans", help="write each executed plan to DIR/<name>.txt")
+    ap.add_argument("--plans", help="write explain('formatted') to DIR/<name>.txt")
     ap.add_argument("--trials", type=int, default=0, help="warm rebuild+count runs")
     args = ap.parse_args(argv)
 
-    # Run as a script, sys.path[0] is tools/, where this file would
-    # shadow the standard library's ``profile`` (cProfile imports it,
-    # pyspark imports cProfile): the repo root takes its place.
-    sys.path[0] = REPO
     # Python workers import the package too (UDF queries); they resolve
     # it through PYTHONPATH, not the driver's sys.path, so the tool
     # works from any directory only if the JVM inherits the repo root.
