@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from caliper_poc_data_etl_spark.queries.dedup import _NGRAM_ORACLE, dedup_ngram_jaccard
-from caliper_poc_data_etl_spark.queries.kernels import _TS_FMT_DUCK, _TS_FMT_SPARK
+from caliper_poc_data_etl_spark.queries.kernels import _TS_FMT_DUCK, _TS_FMT_SPARK, topk
 from caliper_poc_data_etl_spark.queries.registry import query, t
 
 # Parenthesized (group 1) so regexp_extract_all's default group works
@@ -224,19 +224,16 @@ STRATUM_SAMPLE_N = 10
 )
 def sample_stratified_lang(spark, sf_dir):
     """Stratified sample: exactly N documents per language, chosen by
-    hash order (deterministic reservoir). One hash-partitioned window
-    per stratum — the skew risk is a giant stratum, which AQE handles;
-    for top-N-per-huge-group a partial `rank <= N` pre-filter per
-    partition is the known refinement."""
-    from pyspark.sql import Window
-
+    hash order (deterministic reservoir). One per-stratum ``topk``: each
+    partition keeps at most N rows per stratum before the shuffle
+    (``WindowGroupLimit``), so a giant stratum never moves whole."""
     d = t(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang").orderBy(
-        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
-    )
-    return (
-        d.select("doc_id", "lang", F.row_number().over(w).alias("sample_rank"))
-        .filter(F.col("sample_rank") <= STRATUM_SAMPLE_N)
+    return topk(
+        d.select("doc_id", "lang"),
+        ["lang"],
+        [F.md5(F.col("doc_id").cast("string")), "doc_id"],
+        STRATUM_SAMPLE_N,
+        rank="sample_rank",
     )
 
 
@@ -628,12 +625,8 @@ def er_blocked_name_match(spark, sf_dir):
         .withColumn("dist", dist)
         .filter(F.col("dist") <= _ER_MAXDIST)
     )
-    rk = F.row_number().over(
-        W.partitionBy("dirty_id").orderBy("dist", "c_custkey")
-    )
     return (
-        scored.withColumn("rk", rk)
-        .filter(F.col("rk") == 1)
+        topk(scored, ["dirty_id"], ["dist", "c_custkey"], 1, rank="rk")
         .select(
             "dirty_id",
             F.col("c_custkey").alias("matched_key"),
@@ -1063,12 +1056,10 @@ def dq_snapshot_diff(spark, sf_dir):
     partitioning end to end."""
     e = t(spark, sf_dir, "events")
     cutoff = F.lit(SNAP_CUTOFF).cast("timestamp")
-    w = W.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
 
     def snapshot(df):
         return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
+            topk(df, ["user_id"], [F.desc("ts"), F.desc("event_id")], 1)
             .select(
                 "user_id",
                 "event_type",
@@ -1157,18 +1148,14 @@ def er_survivorship_golden_record(spark, sf_dir):
     the entity key, so the three branches co-partition and join
     without extra exchanges under AQE."""
     e = t(spark, sf_dir, "events")
-    wmode = W.partitionBy("user_id").orderBy(F.desc("cnt"), "event_type")
-    mode_t = (
-        e.groupBy("user_id", "event_type")
-        .agg(F.count("*").alias("cnt"))
-        .withColumn("rn", F.row_number().over(wmode))
-        .filter(F.col("rn") == 1)
-        .select("user_id", F.col("event_type").alias("mode_type"))
-    )
-    wlat = W.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
+    mode_t = topk(
+        e.groupBy("user_id", "event_type").agg(F.count("*").alias("cnt")),
+        ["user_id"],
+        [F.desc("cnt"), "event_type"],
+        1,
+    ).select("user_id", F.col("event_type").alias("mode_type"))
     latest = (
-        e.withColumn("rn", F.row_number().over(wlat))
-        .filter(F.col("rn") == 1)
+        topk(e, ["user_id"], [F.desc("ts"), F.desc("event_id")], 1)
         .select(
             "user_id",
             F.floor(F.col("value") * 100 + F.lit(0.5))
@@ -1467,20 +1454,16 @@ def sample_stratified_fixed_n(spark, sf_dir):
     source, chosen by md5-hash priority so the draw is deterministic,
     uniform within the stratum, and stable under re-runs and
     repartitioning — no rand(), no seed plumbing. Scale shape: one
-    hash projection + a per-stratum window; strata partition the
-    shuffle, and a production variant bounds state with per-partition
-    top-n heaps exactly like ``text_tokenize_vocab_ids``."""
+    hash projection + a per-stratum ``topk``, limited to n rows per
+    stratum in each partition before the shuffle."""
     d = t(spark, sf_dir, "documents")
-    rn = F.row_number().over(
-        W.partitionBy("source").orderBy(
-            F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
-        )
-    )
-    return (
-        d.select("doc_id", "source", rn.alias("rn"))
-        .filter(F.col("rn") <= STRAT_N)
-        .select("doc_id", "source", F.col("rn").cast("long").alias("rn"))
-    )
+    return topk(
+        d.select("doc_id", "source"),
+        ["source"],
+        [F.md5(F.col("doc_id").cast("string")), "doc_id"],
+        STRAT_N,
+        rank="rn",
+    ).select("doc_id", "source", F.col("rn").cast("long").alias("rn"))
 
 
 # ---------------------------------------------------------------------------
@@ -2615,7 +2598,7 @@ def sample_weighted_reservoir(spark, sf_dir):
     the estimator: Σ max(w, τ) over the sample vs the true Σ w, ≈1e6
     when the sketch is honest (pinned in tests). τ ~ W/k in
     expectation, so est_micro stays far inside BIGINT. Scale shape:
-    the top-(k+1) is orderBy+limit → TakeOrderedAndProject
+    the top-(k+1) is a global ``topk`` → TakeOrderedAndProject
     (per-partition top-k, merged on the driver — the corpus never
     globally sorts and never shuffles); the windows run over the
     bounded (k+1)-row frame; the true total is one map-side-combined
@@ -2642,12 +2625,12 @@ def sample_weighted_reservoir(spark, sf_dir):
             * float(_U52)
         ).alias("prio"),
     )
-    top = pr.orderBy(F.desc("prio"), "doc_id").limit(PRIORITY_SAMPLE_K + 1)
-    w_rank = W.orderBy(F.desc("prio"), "doc_id")
+    # The top k+1: the (k+1)-th row carries tau and is then dropped.
+    top = topk(pr, [], [F.desc("prio"), "doc_id"], PRIORITY_SAMPLE_K + 1, rank="rn")
     w_all = W.orderBy(F.desc("prio"), "doc_id").rowsBetween(
         W.unboundedPreceding, W.unboundedFollowing
     )
-    ranked = top.select("*", F.row_number().over(w_rank).alias("rn")).select(
+    ranked = top.select(
         "*",
         F.coalesce(
             F.max(
@@ -2783,14 +2766,14 @@ def sample_weighted_reservoir_per_source(spark, sf_dir):
             * float(_U52)
         ).alias("prio"),
     )
-    w_rank = W.partitionBy("source").orderBy(F.desc("prio"), "doc_id")
     w_src = (
         W.partitionBy("source")
         .orderBy(F.desc("prio"), "doc_id")
         .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
     )
-    ranked = pr.select("*", F.row_number().over(w_rank).alias("rn")).filter(
-        F.col("rn") <= PRIORITY_SAMPLE_K_SRC + 1
+    # The top k+1 per source: the (k+1)-th row carries tau and is then dropped.
+    ranked = topk(
+        pr, ["source"], [F.desc("prio"), "doc_id"], PRIORITY_SAMPLE_K_SRC + 1, rank="rn"
     )
     tq = ranked.select(
         "*",

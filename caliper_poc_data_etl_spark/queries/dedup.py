@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window as W
 
-from caliper_poc_data_etl_spark.queries.kernels import dot, dot_sql
+from caliper_poc_data_etl_spark.queries.kernels import dot, dot_sql, topk
 from caliper_poc_data_etl_spark.queries.registry import query, t
 
 JACCARD_THRESHOLD = 0.8
@@ -1228,9 +1228,10 @@ def dedup_cross_source_priority(spark, sf_dir):
     (priority, doc_id) argmin, and each kept row reports how many
     copies and distinct sources it beat — the provenance audit trail.
 
-    One shuffle on the dedup key; windows reuse the same partitioning
-    (single Exchange under AQE). Output only the groups where dedup
-    actually fired, so the table reads as an action log."""
+    The survivor is a per-key ``topk`` (limited before its shuffle);
+    the copy and source counts are one aggregate on the same key,
+    joined back. Output only the groups where dedup actually fired,
+    so the table reads as an action log."""
     d = t(spark, sf_dir, "documents")
     keyed = d.select(
         "doc_id",
@@ -1238,23 +1239,25 @@ def dedup_cross_source_priority(spark, sf_dir):
         F.substring("source", 4, 10).cast("int").alias("prio"),
         F.substring(F.lower(F.trim("text")), 1, _XSD_PREFIX).alias("pk"),
     )
-    wpk = W.partitionBy("pk")
-    ranked = keyed.select(
-        "doc_id",
-        "source",
-        "pk",
-        F.row_number()
-        .over(wpk.orderBy("prio", "doc_id"))
-        .alias("rn"),
-        F.count("*").over(wpk).alias("n_copies"),
-        F.size(F.collect_set("source").over(wpk)).alias("n_sources"),
+    groups = (
+        keyed.groupBy(F.col("pk").alias("g_pk"))
+        .agg(
+            F.count("*").alias("n_copies"),
+            F.size(F.collect_set("source")).alias("n_sources"),
+        )
+        .filter(F.col("n_copies") > 1)
     )
-    return ranked.filter((F.col("rn") == 1) & (F.col("n_copies") > 1)).select(
-        "pk",
-        F.col("doc_id").alias("kept_doc_id"),
-        F.col("source").alias("kept_source"),
-        F.col("n_copies").cast("long").alias("n_copies"),
-        F.col("n_sources").cast("long").alias("n_sources"),
+    # Null-safe: a NULL prefix is one duplicate group, as in the window form.
+    return (
+        topk(keyed, ["pk"], ["prio", "doc_id"], 1)
+        .join(groups, F.col("pk").eqNullSafe(F.col("g_pk")))
+        .select(
+            "pk",
+            F.col("doc_id").alias("kept_doc_id"),
+            F.col("source").alias("kept_source"),
+            F.col("n_copies").cast("long").alias("n_copies"),
+            F.col("n_sources").cast("long").alias("n_sources"),
+        )
     )
 
 
@@ -1842,21 +1845,12 @@ def decontam_minhash_crosscorpus(spark, sf_dir):
         )
         .filter(F.col("jacc_milli") >= DECONTAM_JACC_MILLI)
     )
-    w_rk = W.partitionBy("train_id").orderBy(
-        F.desc("jacc_milli"), "eval_id"
-    )
-    w_cnt = W.partitionBy("train_id").rowsBetween(
-        W.unboundedPreceding, W.unboundedFollowing
+    n_matches = verified.groupBy("train_id").agg(
+        F.count(F.lit(1)).alias("n_eval_matches")
     )
     return (
-        verified.select(
-            "train_id",
-            "eval_id",
-            "jacc_milli",
-            F.row_number().over(w_rk).alias("rk"),
-            F.count(F.lit(1)).over(w_cnt).alias("n_eval_matches"),
-        )
-        .filter(F.col("rk") == 1)
+        topk(verified, ["train_id"], [F.desc("jacc_milli"), "eval_id"], 1)
+        .join(n_matches, "train_id")
         .select(
             F.col("train_id").alias("doc_id"),
             F.col("n_eval_matches").cast("long").alias("n_eval_matches"),
@@ -1934,8 +1928,9 @@ def decontam_embedding_cosine(spark, sf_dir):
     at any corpus scale), so the NLJ is |corpus| x |eval| — linear in
     the corpus with a constant eval factor, map-only, no shuffle of
     the big side (the sanctioned ``sim_cosine_topk`` broadcast shape,
-    whitelisted in plan_audit). The per-train argmax windows run on
-    the post-threshold FLAGGED set only. The LSH-bucketed path for a
+    whitelisted in plan_audit). The per-train argmax (a ``topk``) and
+    the match count (an aggregate joined back) run on the
+    post-threshold FLAGGED set only. The LSH-bucketed path for a
     larger eval side exists in-family (``dedup_embedding_lsh``). Dot
     products via zip_with + fold — JVM-side, no UDF; float parity per
     the ``dedup_embedding_cosine`` recipe (identical IEEE expression
@@ -1978,19 +1973,10 @@ def decontam_embedding_cosine(spark, sf_dir):
         .select("train_id", "eval_id", cos.alias("cosine"))
         .filter(F.col("cosine") >= DECONTAM_COS_THRESHOLD)
     )
-    w_rk = W.partitionBy("train_id").orderBy(F.desc("cosine"), "eval_id")
-    w_cnt = W.partitionBy("train_id").rowsBetween(
-        W.unboundedPreceding, W.unboundedFollowing
-    )
+    n_matches = scored.groupBy("train_id").agg(F.count("*").alias("n_eval_matches"))
     return (
-        scored.select(
-            "train_id",
-            "eval_id",
-            "cosine",
-            F.row_number().over(w_rk).alias("rk"),
-            F.count("*").over(w_cnt).alias("n_eval_matches"),
-        )
-        .filter(F.col("rk") == 1)
+        topk(scored, ["train_id"], [F.desc("cosine"), "eval_id"], 1)
+        .join(n_matches, "train_id")
         .select(
             "train_id",
             F.col("n_eval_matches").cast("long").alias("n_eval_matches"),

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from caliper_poc_data_etl_spark.graph import truncate_lineage
+from caliper_poc_data_etl_spark.queries.kernels import topk
 from caliper_poc_data_etl_spark.queries.registry import query, t
 
 
@@ -222,11 +223,10 @@ def graph_label_propagation(spark, sf_dir):
             .groupBy(edges.src, "lab")
             .agg(F.count("*").alias("c"))
         )
-        wv = W.partitionBy("src").orderBy(F.desc("c"), "lab")
         labels = truncate_lineage(
-            votes.withColumn("rn", F.row_number().over(wv))
-            .filter(F.col("rn") == 1)
-            .select(F.col("src").alias("node"), "lab")
+            topk(votes, ["src"], [F.desc("c"), "lab"], 1).select(
+                F.col("src").alias("node"), "lab"
+            )
         )
     return init.select("node", F.col("lab").alias("l0")).join(
         labels, "node"

@@ -10,6 +10,7 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window as W
 
 # Timestamp rendering shared by Spark builders and their DuckDB twins:
 # outputs carry timestamps as strings with microsecond precision.
@@ -77,3 +78,32 @@ def fround(x):
     """Floor-rounding to 4 decimals, ``FLOOR(x * 1e4 + 0.5) / 1e4`` on the
     DuckDB side."""
     return F.floor(x * F.lit(1e4) + F.lit(0.5)) / F.lit(1e4)
+
+
+# Spark infers a group limit only for bounds below
+# spark.sql.optimizer.windowGroupLimitThreshold (default 1000).
+_GROUP_LIMIT_MAX = 1000
+
+
+def topk(df, by, order, k, *, rank=None):
+    """Keep the rows ranked 1..k by ``row_number()`` over ``order``
+    within each ``by`` group (``by=[]``: a global top-k). Ties break on
+    the trailing order key, so put a unique key last. ``rank=name``
+    keeps the rank column under that name; by default it is dropped.
+
+    This is the one shape Spark limits before the shuffle: a window
+    holding only the rank, filtered directly on the uncast rank with a
+    literal bound. Spark then plans a ``WindowGroupLimit`` (a partial
+    top-k per partition ahead of the exchange), or for a global top-k a
+    ``TakeOrderedAndProject``. Another function in the same window
+    (``count(*)``), a narrowing cast on the rank (``short``, ``string``)
+    or a column as the bound each silently drop the limit, and the whole
+    input is sorted; ``tools/plan_audit.py`` flags a rank filter left
+    without one."""
+    if isinstance(k, bool) or not isinstance(k, int) or not 0 < k < _GROUP_LIMIT_MAX:
+        raise ValueError(f"topk needs a literal 0 < k < {_GROUP_LIMIT_MAX}, got {k!r}")
+    name = rank or "_topk_rank"
+    ranked = df.withColumn(
+        name, F.row_number().over(W.partitionBy(*by).orderBy(*order))
+    ).filter(F.col(name) <= k)
+    return ranked if rank else ranked.drop(name)

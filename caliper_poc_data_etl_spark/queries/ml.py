@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from caliper_poc_data_etl_spark.queries.curation import _DRIFT_CUTOFF
-from caliper_poc_data_etl_spark.queries.kernels import fround, idot, milli
+from caliper_poc_data_etl_spark.queries.kernels import fround, idot, milli, topk
 from caliper_poc_data_etl_spark.queries.registry import query, t
 
 
@@ -182,12 +182,8 @@ def ml_naive_bayes_train(spark, sf_dir):
         .agg(F.count("*").alias("n_docs"))
         .select("lang", "n_docs", F.sum("n_docs").over(w_all).alias("n"))
     )
-    rn = F.row_number().over(
-        W.partitionBy("lang").orderBy(F.desc("cnt"), "token")
-    )
     return (
-        cnts.withColumn("rn", rn)
-        .filter(F.col("rn") <= NB_TOP)
+        topk(cnts, ["lang"], [F.desc("cnt"), "token"], NB_TOP)
         .join(F.broadcast(lang_tot), "lang")
         .join(F.broadcast(docs_tot), "lang")
         .crossJoin(F.broadcast(vocab))
@@ -743,18 +739,13 @@ def ml_ndcg_eval(spark, sf_dir):
         )
     )
     warr = F.array(*[F.lit(w) for w in ws])
-    topk = scored.withColumn(
-        "rnk",
-        F.row_number().over(
-            W.partitionBy("q_vec").orderBy(F.desc("dot"), "c_vec")
-        ),
-    ).filter(F.col("rnk") <= NDCG_K)
-    dcg = topk.groupBy("q_vec").agg(
+    top = topk(scored, ["q_vec"], [F.desc("dot"), "c_vec"], NDCG_K, rank="rnk")
+    dcg = top.groupBy("q_vec").agg(
         F.sum(
             F.col("rel") * F.element_at(warr, F.col("rnk").cast("int"))
         ).alias("dcg")
     )
-    ideal = topk.withColumn(
+    ideal = top.withColumn(
         "irnk",
         F.row_number().over(
             W.partitionBy("q_vec").orderBy(F.desc("rel"), "c_vec")

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from caliper_poc_data_etl_spark.queries.kernels import topk
 from caliper_poc_data_etl_spark.queries.registry import query, t
 
 # --------------------------------------------------------------------- scans
@@ -916,11 +917,8 @@ def agg_heavy_hitter_per_user(spark, sf_dir):
     relative to the raw events."""
     e = t(spark, sf_dir, "events")
     counts = e.groupBy("user_id", "event_type").agg(F.count("*").alias("cnt"))
-    w = W.partitionBy("user_id").orderBy(F.desc("cnt"), "event_type")
-    return (
-        counts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", F.col("event_type").alias("top_event_type"), "cnt")
+    return topk(counts, ["user_id"], [F.desc("cnt"), "event_type"], 1).select(
+        "user_id", F.col("event_type").alias("top_event_type"), "cnt"
     )
 
 
@@ -2939,33 +2937,13 @@ def agg_kmv_set_ops(spark, sf_dir):
     ha = e.filter(F.col("event_type") == KMV_A).select(hv.alias("hv")).distinct()
     hb = e.filter(F.col("event_type") == KMV_B).select(hv.alias("hv")).distinct()
     hu = ha.unionByName(hb).distinct()
-    ranked = hu.select(
-        "hv",
-        F.row_number().over(W.orderBy("hv")).alias("rn"),
-        F.count("*").over(W.partitionBy()).alias("nd"),
-    )
-    # bounded-by-construction: only the K smallest survive; the global
-    # window ranks |distinct hashes| rows, which a production sketch
-    # caps at K per partition before the merge.
-    uni = ranked.filter(F.col("rn") <= KMV_K)
-    kth = uni.filter(
-        F.col("rn")
-        == F.when(F.col("nd") < KMV_K, F.col("nd")).otherwise(F.lit(KMV_K))
-    ).select(
-        F.col("hv").alias("kth_hash"),
-        "nd",
-        F.when(F.col("nd") < KMV_K, F.col("nd"))
-        .otherwise(F.lit(KMV_K))
-        .alias("k_used"),
-    )
-    est = kth.select(
-        F.when(F.col("nd") <= KMV_K, F.col("nd"))
-        .otherwise(
-            F.expr(f"({KMV_K - 1} * CAST({_KMV_SPACE} AS BIGINT)) div kth_hash")
-        )
-        .alias("est_union"),
-        "k_used",
-    )
+    # The union sketch: the K smallest hashes, kept per partition before
+    # the merge. Its largest hash is the K-th (or the nd-th when nd < K),
+    # and its size is k_used; an empty union has no K-th hash.
+    uni = topk(hu, [], ["hv"], KMV_K)
+    kth = uni.agg(
+        F.max("hv").alias("kth_hash"), F.count("*").alias("k_used")
+    ).filter(F.col("k_used") > 0)
     matches = (
         uni.join(ha, "hv", "left_semi")
         .join(hb, "hv", "left_semi")
@@ -2981,9 +2959,17 @@ def agg_kmv_set_ops(spark, sf_dir):
             )
         )
     )
+    nd = F.col("exact_union")
+    est = kth.crossJoin(F.broadcast(exact)).select(
+        F.when(nd <= KMV_K, nd)
+        .otherwise(F.expr(f"({KMV_K - 1} * CAST({_KMV_SPACE} AS BIGINT)) div kth_hash"))
+        .alias("est_union"),
+        "k_used",
+        "exact_union",
+        "exact_inter",
+    )
     return (
         est.crossJoin(F.broadcast(matches))
-        .crossJoin(F.broadcast(exact))
         .select(
             F.col("est_union").cast("long").alias("est_union"),
             F.col("exact_union").cast("long").alias("exact_union"),
@@ -3191,16 +3177,12 @@ def agg_weighted_median(spark, sf_dir):
         F.sum("w").over(wcum).alias("cw"),
         F.sum("w").over(wall).alias("tw"),
     )
-    wpick = W.partitionBy("l_returnflag").orderBy("cw")
-    return (
-        cum.filter(2 * F.col("cw") >= F.col("tw"))
-        .withColumn("rn", F.row_number().over(wpick))
-        .filter(F.col("rn") == 1)
-        .select(
-            "l_returnflag",
-            F.col("price_centi").alias("wmedian_centi"),
-            F.col("tw").cast("long").alias("total_weight"),
-        )
+    return topk(
+        cum.filter(2 * F.col("cw") >= F.col("tw")), ["l_returnflag"], ["cw"], 1
+    ).select(
+        "l_returnflag",
+        F.col("price_centi").alias("wmedian_centi"),
+        F.col("tw").cast("long").alias("total_weight"),
     )
 
 
@@ -3648,15 +3630,10 @@ def agg_mode_pack(spark, sf_dir):
     counts = li.groupBy("l_returnflag", qty.alias("qty")).agg(
         F.count(F.lit(1)).alias("n")
     )
-    w = W.partitionBy("l_returnflag").orderBy(F.desc("n"), "qty")
-    mode = (
-        counts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "l_returnflag",
-            F.col("qty").alias("mode_qty"),
-            F.col("n").cast("long").alias("mode_n"),
-        )
+    mode = topk(counts, ["l_returnflag"], [F.desc("n"), "qty"], 1).select(
+        "l_returnflag",
+        F.col("qty").alias("mode_qty"),
+        F.col("n").cast("long").alias("mode_n"),
     )
     med = li.groupBy("l_returnflag").agg(
         F.median(qty).cast("double").alias("median_qty")

@@ -20,6 +20,7 @@ from caliper_poc_data_etl_spark.queries.kernels import (
     idot,
     isqdist,
     milli,
+    topk,
 )
 from caliper_poc_data_etl_spark.queries.registry import query, t
 
@@ -82,12 +83,9 @@ def sim_cosine_topk(spark, sf_dir):
         c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cos_raw", cos)
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_raw"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos_raw", 4).alias("cosine"), "rank")
-    )
+    return topk(
+        scored, ["query_id"], [F.desc("cos_raw"), "neighbor_id"], TOP_K, rank="rank"
+    ).select("query_id", "neighbor_id", F.round("cos_raw", 4).alias("cosine"), "rank")
 
 
 def _hyperplanes() -> list[list[float]]:
@@ -172,12 +170,9 @@ def sim_ann_lsh(spark, sf_dir):
         .select("query_id", "neighbor_id", cos.alias("cos_raw"))
         .distinct()
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_raw"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos_raw", 4).alias("cosine"), "rank")
-    )
+    return topk(
+        scored, ["query_id"], [F.desc("cos_raw"), "neighbor_id"], TOP_K, rank="rank"
+    ).select("query_id", "neighbor_id", F.round("cos_raw", 4).alias("cosine"), "rank")
 
 
 def _lsh_parity_oracle() -> str:
@@ -277,30 +272,27 @@ def sim_ivf_topk(spark, sf_dir):
     qs = e.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("embedding")
     )
-    wq = W.partitionBy("query_id").orderBy(F.desc("probe_cos"), "cell")
-    q_probes = (
-        qs.join(F.broadcast(cent))
-        .select(
+    q_probes = topk(
+        qs.join(F.broadcast(cent)).select(
             "query_id",
             F.col("embedding").alias("q_emb"),
             F.sqrt(dot("embedding", "embedding")).alias("q_norm"),
             "cell",
             cos_cent.alias("probe_cos"),
-        )
-        .withColumn("probe_rank", F.row_number().over(wq))
-        .filter(F.col("probe_rank") <= N_PROBE)
-        .select("query_id", "q_emb", "q_norm", "cell")
-    )
+        ),
+        ["query_id"],
+        [F.desc("probe_cos"), "cell"],
+        N_PROBE,
+    ).select("query_id", "q_emb", "q_norm", "cell")
     cos = dot("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm"))
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_raw"), "neighbor_id")
-    return (
+    scored = (
         corpus.join(F.broadcast(q_probes), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", cos.alias("cos_raw"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos_raw", 4).alias("cosine"), "rank")
     )
+    return topk(
+        scored, ["query_id"], [F.desc("cos_raw"), "neighbor_id"], TOP_K, rank="rank"
+    ).select("query_id", "neighbor_id", F.round("cos_raw", 4).alias("cosine"), "rank")
 
 
 @query(
@@ -350,20 +342,17 @@ def knn_label_vote(spark, sf_dir):
         F.sqrt(dot("embedding", "embedding")).alias("c_norm"),
     )
     cos = dot("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm"))
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_raw"), "neighbor_id")
-    knn = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", "label", cos.alias("cos_raw"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+    knn = topk(
+        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).select(
+            "query_id", "neighbor_id", "label", cos.alias("cos_raw")
+        ),
+        ["query_id"],
+        [F.desc("cos_raw"), "neighbor_id"],
+        TOP_K,
     )
-    wv = W.partitionBy("query_id").orderBy(F.desc("votes"), "label")
-    return (
-        knn.groupBy("query_id", "label")
-        .agg(F.count("*").alias("votes"))
-        .withColumn("vr", F.row_number().over(wv))
-        .filter(F.col("vr") == 1)
-        .select("query_id", F.col("label").alias("pred_label"), "votes")
+    votes = knn.groupBy("query_id", "label").agg(F.count("*").alias("votes"))
+    return topk(votes, ["query_id"], [F.desc("votes"), "label"], 1).select(
+        "query_id", F.col("label").alias("pred_label"), "votes"
     )
 
 
@@ -727,14 +716,12 @@ def sim_ivf_assign_parity(spark, sf_dir):
     score = dot("qv", "cv") / F.sqrt(
         dot("cv", "cv")
     )
-    w = W.partitionBy("vec_id").orderBy(F.desc("score"), "cell")
-    return (
-        q.join(F.broadcast(cent))
-        .select("vec_id", "cell", score.alias("score"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("cell").alias("assigned_cell"))
-    )
+    return topk(
+        q.join(F.broadcast(cent)).select("vec_id", "cell", score.alias("score")),
+        ["vec_id"],
+        [F.desc("score"), "cell"],
+        1,
+    ).select("vec_id", F.col("cell").alias("assigned_cell"))
 
 
 PQ_SUBSPACES = 8          # 64-dim → 8 × 8-dim subvectors
@@ -822,10 +809,7 @@ def sim_pq_code_parity(spark, sf_dir):
     )
     d2 = isqdist("sv", "cv")
     dists = subs.join(F.broadcast(cent), "sub").withColumn("d2", d2)
-    rn = F.row_number().over(
-        W.partitionBy("vec_id", "sub").orderBy("d2", "cell")
-    )
-    assigned = dists.withColumn("rn", rn).filter(F.col("rn") == 1)
+    assigned = topk(dists, ["vec_id", "sub"], ["d2", "cell"], 1)
     return assigned.groupBy("vec_id").agg(
         F.sum(F.col("cell") * F.expr("shiftleft(cast(1 as bigint), sub * 4)"))
         .cast("long")
@@ -1209,12 +1193,7 @@ def _kmeans_final_assignment(spark, sf_dir):
                 ).alias("d2")
             )
         )
-        wv = W.partitionBy("vec_id").orderBy("d2", "k")
-        return (
-            d.withColumn("rn", F.row_number().over(wv))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "k", "d2")
-        )
+        return topk(d, ["vec_id"], ["d2", "k"], 1).select("vec_id", "k", "d2")
 
     for _ in range(KM_ITERS):
         a = assign(c).select("vec_id", "k")
@@ -1412,19 +1391,10 @@ def embed_prefix_nn_fidelity(spark, sf_dir):
             lambda acc, x: acc + x,
         ).alias("d2_pre"),
     )
-    wf = W.partitionBy("qid").orderBy("d2_full", "cid")
-    wp = W.partitionBy("qid").orderBy("d2_pre", "cid")
-    ranked = pairs.select(
-        "qid",
-        "cid",
-        "d2_full",
-        F.row_number().over(wf).alias("rf"),
-        F.row_number().over(wp).alias("rp"),
-    )
-    nf = ranked.filter(F.col("rf") == 1).select(
+    nf = topk(pairs, ["qid"], ["d2_full", "cid"], 1).select(
         "qid", F.col("cid").alias("nn_full"), "d2_full"
     )
-    np_ = ranked.filter(F.col("rp") == 1).select(
+    np_ = topk(pairs, ["qid"], ["d2_pre", "cid"], 1).select(
         "qid", F.col("cid").alias("nn_prefix")
     )
     return nf.join(np_, "qid").select(
@@ -1589,12 +1559,7 @@ def sim_ivfpq_topk(spark, sf_dir):
     cd = xe.crossJoin(F.broadcast(cells)).select(
         "vec_id", "cell", d2full.alias("d2")
     )
-    wassign = W.partitionBy("vec_id").orderBy("d2", "cell")
-    assign = (
-        cd.withColumn("rn", F.row_number().over(wassign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cell")
-    )
+    assign = topk(cd, ["vec_id"], ["d2", "cell"], 1).select("vec_id", "cell")
     subs = xe.select(
         "vec_id",
         F.explode(
@@ -1613,14 +1578,12 @@ def sim_ivfpq_topk(spark, sf_dir):
         F.col("vec_id").alias("code"), "sub", F.col("sv").alias("cv")
     )
     d2sub = isqdist("sv", "cv")
-    wcode = W.partitionBy("vec_id", "sub").orderBy("d2s", "code")
-    codes = (
-        subs.join(F.broadcast(centpq), "sub")
-        .withColumn("d2s", d2sub)
-        .withColumn("rn", F.row_number().over(wcode))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "sub", "code")
-    )
+    codes = topk(
+        subs.join(F.broadcast(centpq), "sub").withColumn("d2s", d2sub),
+        ["vec_id", "sub"],
+        ["d2s", "code"],
+        1,
+    ).select("vec_id", "sub", "code")
     adc = (
         subs.filter(F.col("vec_id") < IVFPQ_NQ)
         .join(F.broadcast(centpq), "sub")
@@ -1631,12 +1594,9 @@ def sim_ivfpq_topk(spark, sf_dir):
             d2sub.alias("d2q"),
         )
     )
-    qprobes = (
-        cd.filter(F.col("vec_id") < IVFPQ_NQ)
-        .withColumn("rn", F.row_number().over(wassign))
-        .filter(F.col("rn") <= IVFPQ_PROBE)
-        .select(F.col("vec_id").alias("query_id"), "cell")
-    )
+    qprobes = topk(
+        cd.filter(F.col("vec_id") < IVFPQ_NQ), ["vec_id"], ["d2", "cell"], IVFPQ_PROBE
+    ).select(F.col("vec_id").alias("query_id"), "cell")
     cand = (
         assign.join(F.broadcast(qprobes), "cell")
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -1651,12 +1611,7 @@ def sim_ivfpq_topk(spark, sf_dir):
         .groupBy("query_id", "cid")
         .agg(F.sum("d2q").alias("adc_d2"))
     )
-    wshort = W.partitionBy("query_id").orderBy("adc_d2", "cid")
-    short = (
-        adcd.withColumn("rn", F.row_number().over(wshort))
-        .filter(F.col("rn") <= IVFPQ_SHORTLIST)
-        .select("query_id", "cid", "adc_d2")
-    )
+    short = topk(adcd, ["query_id"], ["adc_d2", "cid"], IVFPQ_SHORTLIST)
     qv_side = xe.select(F.col("vec_id").alias("query_id"), F.col("qv").alias("qqv"))
     cv_side = xe.select(F.col("vec_id").alias("cid"), F.col("qv").alias("cqv"))
     d2exact = isqdist("qqv", "cqv")
@@ -1665,10 +1620,8 @@ def sim_ivfpq_topk(spark, sf_dir):
         .join(cv_side, "cid")
         .select("query_id", "cid", "adc_d2", d2exact.alias("d2"))
     )
-    wfin = W.partitionBy("query_id").orderBy("d2", "cid")
     return (
-        rer.withColumn("rn", F.row_number().over(wfin))
-        .filter(F.col("rn") <= IVFPQ_TOPK)
+        topk(rer, ["query_id"], ["d2", "cid"], IVFPQ_TOPK, rank="rn")
         .select(
             "query_id",
             F.col("rn").cast("int").alias("rank"),
@@ -1753,19 +1706,15 @@ def sim_hard_negative_mining(spark, sf_dir):
             dot.alias("dot"),
         )
     )
-    rnk = F.row_number().over(
-        W.partitionBy("q_vec").orderBy(F.col("dot").desc(), F.col("neg_vec"))
-    )
-    return (
-        scored.select(
-            "q_vec",
-            "q_label",
-            "neg_vec",
-            "neg_label",
-            rnk.cast("long").alias("neg_rank"),
-            "dot",
-        )
-        .filter(F.col("neg_rank") <= HNEG_K)
+    return topk(
+        scored, ["q_vec"], [F.col("dot").desc(), "neg_vec"], HNEG_K, rank="neg_rank"
+    ).select(
+        "q_vec",
+        "q_label",
+        "neg_vec",
+        "neg_label",
+        F.col("neg_rank").cast("long").alias("neg_rank"),
+        "dot",
     )
 
 
@@ -1995,14 +1944,14 @@ def sim_ivfpq_recall_vs_exact(spark, sf_dir):
         F.col("vec_id").alias("query_id"), F.col("qv").alias("qqv")
     )
     d2 = isqdist("qqv", "qv")
-    wexact = W.partitionBy("query_id").orderBy("d2", "cid")
-    exact = (
-        xe.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("cid"), d2.alias("d2"))
-        .withColumn("rn", F.row_number().over(wexact))
-        .filter(F.col("rn") <= IVFPQ_TOPK)
-        .select("query_id", "cid")
-    )
+    exact = topk(
+        xe.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
+            "query_id", F.col("vec_id").alias("cid"), d2.alias("d2")
+        ),
+        ["query_id"],
+        ["d2", "cid"],
+        IVFPQ_TOPK,
+    ).select("query_id", "cid")
     hits = (
         exact.join(
             approx,
@@ -2382,19 +2331,15 @@ def sim_rrf_fusion(spark, sf_dir):
     cos = dot("embedding", "q_emb") / (
         F.sqrt(dot("embedding", "embedding")) * F.col("q_nrm")
     )
-    dense = (
+    dense = topk(
         e.filter(F.col("vec_id") != _RRF_QUERY_VEC)
         .crossJoin(F.broadcast(q))
-        .select(F.col("vec_id").alias("doc_id"), cos.alias("cos_raw"))
-        .withColumn(
-            "rank_dense",
-            F.row_number()
-            .over(W.orderBy(F.desc("cos_raw"), "doc_id"))
-            .cast("int"),
-        )
-        .filter(F.col("rank_dense") <= _RRF_TOPN)
-        .select("doc_id", "rank_dense")
-    )
+        .select(F.col("vec_id").alias("doc_id"), cos.alias("cos_raw")),
+        [],
+        [F.desc("cos_raw"), "doc_id"],
+        _RRF_TOPN,
+        rank="rank_dense",
+    ).select("doc_id", "rank_dense")
     fused = lex.join(dense, "doc_id", "full_outer")
     # FLOOR(x*1e6+0.5) quantization, not ROUND — the
     # text_quality_classifier_score boundary lesson applied here too.
@@ -2556,9 +2501,6 @@ def sim_maxsim_late_interaction(spark, sf_dir):
         F.sum("maxsim_micro").cast("long").alias("score_micro"),
         F.count(F.lit(1)).cast("long").alias("n_q"),
     )
-    w = W.orderBy(F.desc("score_micro"), "doc_id")
-    return (
-        sc.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= _MAXSIM_TOPN)
-        .select("rank", "doc_id", "score_micro", "n_q")
-    )
+    return topk(
+        sc, [], [F.desc("score_micro"), "doc_id"], _MAXSIM_TOPN, rank="rank"
+    ).select("rank", "doc_id", "score_micro", "n_q")

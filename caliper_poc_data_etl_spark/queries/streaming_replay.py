@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from caliper_poc_data_etl_spark.queries.kernels import _TS_FMT_DUCK, _TS_FMT_SPARK
+from caliper_poc_data_etl_spark.queries.kernels import _TS_FMT_DUCK, _TS_FMT_SPARK, topk
 from caliper_poc_data_etl_spark.queries.registry import query, t
 from caliper_poc_data_etl_spark.queries.relational import (
     _hll_est_from_zs,
@@ -259,8 +259,6 @@ def stream_topk_per_window_replay(spark, sf_dir):
     a foreachBatch sink does per micro-batch at scale. Deterministic
     tiebreak (count desc, type asc) keeps the top-3 stable under
     re-ordering of arrivals."""
-    from pyspark.sql.window import Window as W
-
     from caliper_poc_data_etl_spark.streaming import (
         read_event_stream,
         replay_to_df,
@@ -269,12 +267,12 @@ def stream_topk_per_window_replay(spark, sf_dir):
 
     events = read_event_stream(spark, sf_dir)
     counts = replay_to_df(tumbling_counts(events), mode="complete")
-    rk = F.row_number().over(
-        W.partitionBy("window_start").orderBy(F.desc("n"), "event_type")
-    )
-    return (
-        counts.select("window_start", "event_type", "n", rk.alias("rk"))
-        .filter(F.col("rk") <= 3)
+    return topk(
+        counts.select("window_start", "event_type", "n"),
+        ["window_start"],
+        [F.desc("n"), "event_type"],
+        3,
+        rank="rk",
     )
 
 
@@ -319,8 +317,6 @@ def _foreachbatch_upsert(
     makes this sink exactly-once-equivalent under retries."""
     import tempfile
 
-    from pyspark.sql.window import Window as W
-
     from caliper_poc_data_etl_spark.streaming import read_event_stream
 
     app = spark.sparkContext.applicationId.replace("-", "_")
@@ -334,14 +330,9 @@ def _foreachbatch_upsert(
     shutil.rmtree(base_dir, ignore_errors=True)
 
     def merge_batch(batch_df, batch_id):
-        w = W.partitionBy("user_id").orderBy(
-            F.desc("ts"), F.desc("event_id")
-        )
-        latest = (
-            batch_df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("user_id", "ts", "event_id", "event_type", "value")
-        )
+        latest = topk(
+            batch_df, ["user_id"], [F.desc("ts"), F.desc("event_id")], 1
+        ).select("user_id", "ts", "event_id", "event_type", "value")
         try:
             state = batch_df.sparkSession.read.parquet(state_dir)
         except Exception:

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from caliper_poc_data_etl_spark.queries.kernels import fround
+from caliper_poc_data_etl_spark.queries.kernels import fround, topk
 from caliper_poc_data_etl_spark.queries.registry import query, t
 
 FMT_S = "yyyy-MM-dd HH:mm:ss"
@@ -810,12 +810,15 @@ def ts_ewma_smoothing(spark, sf_dir):
     DECIMAL(38,0). term·1e12 < 2.8e14 ≪ 2⁵³, so every step is
     IEEE-identical across engines."""
     e = t(spark, sf_dir, "events")
-    wdesc = W.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
     kept = (
-        e.select("user_id", "value", F.row_number().over(wdesc).alias("rfrom_end"))
-        .filter(F.col("rfrom_end") <= EWMA_LOOKBACK)
+        topk(
+            e,
+            ["user_id"],
+            [F.col("ts").desc(), F.col("event_id").desc()],
+            EWMA_LOOKBACK,
+            rank="rfrom_end",
+        )
+        .select("user_id", "value", "rfrom_end")
         .withColumn("m", F.count("*").over(W.partitionBy("user_id")))
     )
     kept = kept.withColumn(
@@ -909,16 +912,12 @@ def ts_cusum_changepoint(spark, sf_dir):
     dev = F.abs(
         (F.col("n") * F.col("c") - F.col("i") * F.col("total")).cast("double")
     )
-    rk = F.row_number().over(wt.orderBy(F.desc("dev"), "day"))
-    return (
-        cum.withColumn("dev", dev)
-        .withColumn("rk", rk)
-        .filter(F.col("rk") == 1)
-        .select(
-            "event_type",
-            F.date_format("day", "yyyy-MM-dd").alias("change_day"),
-            F.round("dev", 2).alias("max_abs_dev"),
-        )
+    return topk(
+        cum.withColumn("dev", dev), ["event_type"], [F.desc("dev"), "day"], 1
+    ).select(
+        "event_type",
+        F.date_format("day", "yyyy-MM-dd").alias("change_day"),
+        F.round("dev", 2).alias("max_abs_dev"),
     )
 
 
@@ -1574,17 +1573,12 @@ def ts_lttb_downsample(spark, sf_dir):
     tie_key = F.when(
         F.col("bkt") == F.col("max_bkt"), -F.col("event_id")
     ).otherwise(F.col("event_id"))
-    wpick = W.partitionBy("user_id", "bkt").orderBy(order_key, tie_key)
-    return (
-        scored.withColumn("rn", F.row_number().over(wpick))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            F.col("bkt").cast("long").alias("bkt"),
-            "event_id",
-            F.col("x").cast("long").alias("x_epoch"),
-            F.col("y").alias("y_centi"),
-        )
+    return topk(scored, ["user_id", "bkt"], [order_key, tie_key], 1).select(
+        "user_id",
+        F.col("bkt").cast("long").alias("bkt"),
+        "event_id",
+        F.col("x").cast("long").alias("x_epoch"),
+        F.col("y").alias("y_centi"),
     )
 
 
@@ -2662,10 +2656,9 @@ def funnel_path_topk(spark, sf_dir):
     total (count, path) order, so ties at rank {PATH_TOPK} resolve
     identically on both engines."""
     ev = t(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    ranked = ev.select(
-        "user_id", "event_type", F.row_number().over(w).alias("rn")
-    ).filter(F.col("rn") <= PATH_LEN)
+    ranked = topk(ev, ["user_id"], ["ts", "event_id"], PATH_LEN, rank="rn").select(
+        "user_id", "event_type", "rn"
+    )
     paths = ranked.groupBy("user_id").agg(
         F.array_join(
             F.transform(

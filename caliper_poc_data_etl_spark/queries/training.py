@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 from pyspark.sql.window import Window as W
 
-from caliper_poc_data_etl_spark.queries.kernels import _TS_FMT_SPARK
+from caliper_poc_data_etl_spark.queries.kernels import _TS_FMT_SPARK, topk
 from caliper_poc_data_etl_spark.queries.registry import query, t
 
 CHUNK_SIZE = 200
@@ -245,14 +245,13 @@ def tfidf_top_terms(spark, sf_dir):
     tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     n = d.agg(F.count("*").alias("n_docs"))
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("tf").desc(), F.col("df").asc(), F.col("term").asc()
-    )
     return (
-        tf.join(F.broadcast(df), "term")
-        .join(F.broadcast(n))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
+        topk(
+            tf.join(F.broadcast(df), "term").join(F.broadcast(n)),
+            ["doc_id"],
+            [F.col("tf").desc(), F.col("df").asc(), F.col("term").asc()],
+            3,
+        )
         .select(
             "doc_id",
             "term",
@@ -390,13 +389,10 @@ def upsert_latest_state(spark, sf_dir):
     event acts as a tombstone that deletes the key from the state
     table. One window per key partition — the standard incremental-
     view compaction, shuffle bounded by key cardinality."""
-    from pyspark.sql import Window
-
     e = t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
     return (
-        e.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("event_type") != "error"))
+        topk(e, ["user_id"], [F.desc("ts"), F.desc("event_id")], 1)
+        .filter(F.col("event_type") != "error")
         .select(
             "user_id",
             F.date_format("ts", _TS_FMT_SPARK).alias("last_ts"),
@@ -426,18 +422,16 @@ def sample_cap_per_source(spark, sf_dir):
     """Per-domain document cap (the crawl-curation guard against one
     domain dominating the corpus): keep at most N docs per source,
     chosen by deterministic hash order so the cap is stable across
-    runs and engines. Same shape as stratified sampling; the skew
-    refinement for a giant source is a per-partition pre-rank filter
-    before the window."""
-    from pyspark.sql import Window
-
+    runs and engines. Same shape as stratified sampling: a per-source
+    ``topk``, so a giant source is cut to N rows per partition before
+    the shuffle."""
     d = t(spark, sf_dir, "documents")
-    w = Window.partitionBy("source").orderBy(
-        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
-    )
-    return (
-        d.select("doc_id", "source", F.row_number().over(w).alias("sample_rank"))
-        .filter(F.col("sample_rank") <= _CAP_PER_SOURCE)
+    return topk(
+        d.select("doc_id", "source"),
+        ["source"],
+        [F.md5(F.col("doc_id").cast("string")), "doc_id"],
+        _CAP_PER_SOURCE,
+        rank="sample_rank",
     )
 
 

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 NULL_KEY = "__HIVE_DEFAULT_PARTITION__"
 
 
-def _with_group_ordinal(df: DataFrame, *, order_col: str) -> DataFrame:
+def _with_group_ordinal(df: DataFrame, *, order_col: str) -> tuple[DataFrame, DataFrame]:
     """Attach the reference's group ordinal (S15): ``_ord`` = 1-based
     rank of ``order_col`` (the group's first-occurrence row id,
     etl.js:56-58 Map-insertion order).
@@ -32,7 +32,8 @@ def _with_group_ordinal(df: DataFrame, *, order_col: str) -> DataFrame:
     #partitions-row cumulative-count table — no single partition ever
     holds all groups, so the ordinal stays computable at any group
     cardinality. The ranked frame is persisted so the count branch and
-    the output branch see the SAME physical range boundaries."""
+    the output branch see the SAME physical range boundaries; it is
+    returned second, for the caller to unpersist once written."""
     from pyspark.sql.window import Window as W
 
     w_pid = W.partitionBy("_pid").orderBy(order_col)
@@ -48,11 +49,12 @@ def _with_group_ordinal(df: DataFrame, *, order_col: str) -> DataFrame:
         "_pid",
         F.coalesce(F.sum("_cnt").over(w_off), F.lit(0)).cast("long").alias("_off"),
     )
-    return (
+    out = (
         ranked.join(F.broadcast(offsets), "_pid")
         .withColumn("_ord", F.col("_off") + F.col("_rn_in"))
         .drop("_pid", "_rn_in", "_off", order_col)
     )
+    return out, ranked
 
 
 def _write_direct(df: DataFrame, target: str, relpath) -> None:
@@ -188,12 +190,14 @@ def write_grouped_json(
     old = spark.conf.get(coalesce_key, None)
     spark.conf.set(coalesce_key, "false")
     name = F.coalesce(F.col(key).cast("string"), F.lit(NULL_KEY))
+    ranked = None
     try:
         if group_ordinal:
+            ordered, ranked = _with_group_ordinal(
+                df.withColumn("_k", name), order_col="_first_rid"
+            )
             _write_direct(
-                _with_group_ordinal(
-                    df.withColumn("_k", name), order_col="_first_rid"
-                ),
+                ordered,
                 target,
                 lambda row, _part: f"events-{row['_ord']}-{row['_k']}.txt",
             )
@@ -225,6 +229,8 @@ def write_grouped_json(
             )
             df.select(line.alias("value")).write.mode("overwrite").text(target)
     finally:
+        if ranked is not None:
+            ranked.unpersist()
         if old is None:
             spark.conf.unset(coalesce_key)
         else:

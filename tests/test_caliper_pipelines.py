@@ -328,6 +328,19 @@ class TestGroupOrdinal:
         assert sorted(by_ord) == list(range(1, len(first_seen) + 1))
         assert [by_ord[i] for i in sorted(by_ord)] == first_seen
 
+    def test_run_leaves_no_cached_frame(self, spark, ordinal_csv, tmp_path):
+        # The ordinal's ranked frame is persisted for the write only.
+        spark.catalog.clearCache()
+        run_items_pipeline(
+            spark,
+            ordinal_csv,
+            str(tmp_path / "target"),
+            mode="reference",
+            layout="reference",
+            group_ordinal=True,
+        )
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
     def test_content_matches_plain_reference_layout(
         self, spark, ordinal_csv, tmp_path
     ):

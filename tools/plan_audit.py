@@ -11,10 +11,16 @@ where possible) and reports:
   hot path (ArrowEvalPython / mapInPandas are the sanctioned Python);
 - CartesianProduct / BroadcastNestedLoopJoin nodes (quadratic unless
   deliberate — theta/range joins are flagged as expected);
+- a rank filter with a literal bound (``rn <= k``, ``rn = 1``) over a
+  ranking Window that Spark did not limit before the shuffle: no
+  WindowGroupLimit or TakeOrderedAndProject as the Window's first
+  non-Sort child (``queries/kernels.topk`` renders the shape that gets
+  one);
 - number of Exchange (shuffle) nodes;
 - WholeStageCodegen coverage.
 
 Usage: python tools/plan_audit.py [name-substring ...]
+Exits 1 when any query is flagged or fails to build.
 """
 
 from __future__ import annotations
@@ -150,12 +156,72 @@ EXPECTED_NLJ.add("ts_xcorr_lag_scan")
 EXPECTED_NLJ.add("agg_kll_quantile_sketch")
 EXPECTED_NLJ |= EXPECTED_SCALAR_BNLJ
 
+# Queries whose literal-bound rank filter may run without a group
+# limit, each with the reason. Empty: every such filter gets one.
+UNLIMITED_RANK_FILTER: dict[str, str] = {}
+
 # Driver-action carve-out (documented, not flagged here): the ONLY
 # iterative collect() in the engine is connected_components'
 # per-iteration convergence scalar (graph.py) — a fixed-point loop
 # must observe convergence on the driver, and the payload is one
 # aggregated row. pagerank (fixed iteration count) runs with zero
 # driver scalars; anything else pulling rows per iteration is a bug.
+
+
+_NODE_START = re.compile(r"[^ :|+-]")
+_RANK_DEF = re.compile(
+    r"\b(?:row_number|rank|dense_rank)\([^)]*\) windowspecdefinition\(.*?\) AS (\w+#\d+)"
+)
+# ``rn#7 <= 3``, also through casts: ``cast(rn#7 as smallint) <= 3``.
+_LITERAL_BOUND = re.compile(
+    r"(?:cast\()*(\w+#\d+)(?: as [a-z]+(?:\(\d+,\d+\))?\))* (?:<=|<|=) -?\d[\d.]*[A-Z]?\)"
+)
+
+
+def _plan_tree(plan: str) -> list[tuple[str, list[int]]]:
+    """Parse a plan's tree string into ``[(node text, child indices)]``;
+    a node's depth is the column its text starts at."""
+    nodes: list[tuple[str, list[int]]] = []
+    stack: list[tuple[int, int]] = []  # (column, node index)
+    for line in plan.splitlines():
+        m = _NODE_START.search(line)
+        if not m or line[m.start():].startswith("=="):
+            continue
+        col = m.start()
+        while stack and stack[-1][0] >= col:
+            stack.pop()
+        if stack:
+            nodes[stack[-1][1]][1].append(len(nodes))
+        stack.append((col, len(nodes)))
+        nodes.append((line[col:], []))
+    return nodes
+
+
+def unlimited_rank_filters(plan: str) -> list[str]:
+    """Rank attributes that a Filter bounds by a literal although the
+    Window computing them has no WindowGroupLimit or
+    TakeOrderedAndProject as its first non-Sort child, i.e. Spark sorts
+    the whole input to rank it."""
+    nodes = _plan_tree(plan.split("== Initial Plan ==")[0])
+    defined = {}  # rank attribute -> index of its Window node
+    for i, (text, _) in enumerate(nodes):
+        if text.startswith("Window ["):
+            for attr in _RANK_DEF.findall(text):
+                defined[attr] = i
+    bad = []
+    for text, _ in nodes:
+        if not re.match(r"(\*\(\d+\) )?Filter ", text):
+            continue
+        for attr in _LITERAL_BOUND.findall(text):
+            if attr not in defined or attr in bad:
+                continue
+            below = nodes[defined[attr]][1]
+            while len(below) == 1 and re.match(r"(\*\(\d+\) )?Sort ", nodes[below[0]][0]):
+                below = nodes[below[0]][1]
+            first = nodes[below[0]][0] if len(below) == 1 else ""
+            if not first.startswith(("WindowGroupLimit", "TakeOrderedAndProject")):
+                bad.append(attr)
+    return bad
 
 
 def audit(name: str, df) -> list[str]:
@@ -184,6 +250,12 @@ def audit(name: str, df) -> list[str]:
     nlj = ("CartesianProduct" in plan) or ("BroadcastNestedLoopJoin" in plan)
     if nlj and name not in EXPECTED_NLJ:
         notes.append("unexpected nested-loop/cartesian join")
+    unlimited = unlimited_rank_filters(plan)
+    if unlimited and name not in UNLIMITED_RANK_FILTER:
+        notes.append(
+            f"rank filter without a group limit on {', '.join(unlimited)}"
+            " (use queries.kernels.topk)"
+        )
     scans = re.findall(r"FileScan parquet[^\n]*", plan)
     n_pushed = sum(
         1
@@ -219,7 +291,7 @@ def main() -> int:
             bad += 1
         print("\n".join(lines))
     print(f"\n{bad} queries flagged")
-    return 0
+    return 1 if bad else 0
 
 
 if __name__ == "__main__":
