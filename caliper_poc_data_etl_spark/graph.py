@@ -1,4 +1,4 @@
-"""Distributed graph primitives: connected components and PageRank.
+"""Distributed graph primitives and the fixpoint kernel they run on.
 
 The engine's global fuzzy-dedup path needs *transitive* duplicate
 groups: if A~B and B~C then {A,B,C} must collapse to one keeper even
@@ -12,12 +12,15 @@ fixed point). Per iteration: one equi-join edges⋈labels + one
 group-by — both hash-shuffles on node id, no quadratic work. The
 iteration count is bounded by the graph diameter, which for near-dup
 clusters is tiny (dup groups are near-cliques); a `max_iter` guard
-caps pathological chains. Convergence is detected with a cheap
-`sum(comp)` action (the label vector is monotonically non-increasing,
-so an unchanged sum means a fixed point).
+caps pathological chains. Convergence is counted by the round itself:
+every label is non-increasing, and an `Observation` of the labels
+that dropped is filled by the round's own checkpoint job, so the test
+costs no driver action (:func:`iterate`).
 
-`localCheckpoint` truncates lineage each round so the plan does not
-grow with iterations (Spark's iterative-algorithm idiom).
+Every round loop in the engine — these two and the iterative query
+builders — runs through :func:`iterate`, which truncates lineage each
+round so the plan does not grow with iterations (Spark's
+iterative-algorithm idiom).
 
 Fault-tolerance posture (:func:`truncate_lineage`): localCheckpoint
 stores the per-round blocks in EXECUTOR storage only — fast (no
@@ -33,7 +36,9 @@ instead — same values, one extra write barrier per round.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 
 def truncate_lineage(df: DataFrame, *, eager: bool = True) -> DataFrame:
@@ -68,6 +73,48 @@ def truncate_lineage(df: DataFrame, *, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
+def iterate(
+    step: Callable[[DataFrame, int], DataFrame],
+    state: DataFrame,
+    rounds: int,
+    *,
+    changed: Column | None = None,
+    eager: bool = True,
+) -> DataFrame:
+    """The fixpoint kernel: ``state = step(state, r)`` for rounds
+    ``r = 1..rounds``, each round's frame checkpointed through
+    :func:`truncate_lineage` (``eager`` as there, so the reliable
+    posture applies unchanged). A loop that also yields a second frame
+    per round keeps it in a list its ``step`` appends to.
+
+    ``changed``, a boolean Column over the step's output, makes the
+    loop stop after the first round in which no row is ``changed``.
+    The count rides the round's own checkpoint job as an
+    ``Observation`` of ``count_if(changed)``, so the test costs no
+    extra job. It is read as zero vs nonzero only: a retried task
+    counted twice cannot turn one into the other. A lazy checkpoint
+    completes its Observation empty, so ``changed`` needs
+    ``eager=True`` (``ValueError`` otherwise)."""
+    if changed is not None and not eager:
+        raise ValueError(
+            "iterate: a convergence test needs eager rounds; a lazy "
+            "checkpoint completes its Observation empty"
+        )
+    for r in range(1, rounds + 1):
+        out = step(state, r)
+        if changed is None:
+            state = truncate_lineage(out, eager=eager)
+            continue
+        obs = Observation()
+        state = truncate_lineage(out.observe(obs, F.count_if(changed).alias("n")))
+        n = obs.get.get("n")
+        if n is None:
+            raise RuntimeError("iterate: the round's checkpoint left its Observation empty")
+        if n == 0:
+            break
+    return state
+
+
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
@@ -81,40 +128,35 @@ def connected_components(
 
     ``nodes``: one row per node (singletons keep comp = self).
     ``edges``: undirected edge list; either orientation is fine.
+
+    A round unions each node's own label (``prev`` = that label) with
+    its neighbors' labels (``prev`` = NULL) and keeps the minimum per
+    node, so ``prev`` carries the node's label into the round's output
+    and ``comp < prev`` marks the labels that dropped; the loop stops
+    at the first round where none did.
     """
     sym = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).union(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
     sym = truncate_lineage(sym.distinct())
 
-    labels = truncate_lineage(
-        nodes.select(F.col(node_col).alias("node"), F.col(node_col).alias("comp"))
-    )
-    # Driver-action discipline, CC carve-out: unlike pagerank (fixed
-    # iteration count — zero driver scalars, see its docstring), a
-    # FIXED-POINT loop must observe convergence somewhere, and that
-    # observation is inherently a driver decision. The payload is one
-    # aggregated row (sum of labels) per iteration — a control-flow
-    # scalar, not a data collect; tools/plan_audit.py whitelists
-    # exactly this pattern.
-    prev_sum = labels.agg(F.sum("comp")).collect()[0][0]
-
-    for _ in range(max_iter):
-        # Neighbor labels: for edge (src, dst), dst's current comp is a
-        # candidate label for src.
+    def step(labels, _r):
+        # For edge (src, dst), dst's current comp is a candidate label
+        # for src.
         neighbor = sym.join(
-            labels.withColumnRenamed("node", "dst"), "dst"
-        ).select(F.col("src").alias("node"), "comp")
-        labels = truncate_lineage(
-            labels.union(neighbor)
+            labels.select(F.col("node").alias("dst"), "comp"), "dst"
+        ).select(F.col("src").alias("node"), "comp", F.lit(None).alias("prev"))
+        return (
+            labels.select("node", "comp", F.col("comp").alias("prev"))
+            .union(neighbor)
             .groupBy("node")
-            .agg(F.min("comp").alias("comp"))
+            .agg(F.min("comp").alias("comp"), F.max("prev").alias("prev"))
         )
-        new_sum = labels.agg(F.sum("comp")).collect()[0][0]
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    return labels
+
+    labels = nodes.select(F.col(node_col).alias("node"), F.col(node_col).alias("comp"))
+    return iterate(
+        step, labels, max_iter, changed=F.col("comp") < F.col("prev")
+    ).select("node", "comp")
 
 
 def pagerank(
@@ -136,8 +178,7 @@ def pagerank(
     on dst + a left join back to nodes for dangling mass — all
     hash-shuffles on node id, each reusing the same partitioning.
     Dangling nodes (no out-links) redistribute their mass uniformly,
-    so total rank stays 1 (asserted in tests). ``localCheckpoint``
-    truncates lineage per round.
+    so total rank stays 1 (asserted in tests).
 
     Driver-action discipline: the node count and per-iteration
     dangling mass are 1-row aggregates folded into the plan as
@@ -170,7 +211,7 @@ def pagerank(
         .join(out_deg.withColumnRenamed("src", "node"), "node", "left_anti")
     )
 
-    for _ in range(n_iter):
+    def step(ranks, _r):
         contrib = (
             e.join(ranks.withColumnRenamed("node", "src"), "src")
             .select(F.col("dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
@@ -182,7 +223,7 @@ def pagerank(
         dang = ranks.join(dangling_nodes, "node", "left_semi").agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling_mass")
         )
-        ranks = (
+        return (
             ranks.select("node")
             .join(contrib, "node", "left")
             .crossJoin(F.broadcast(dang))
@@ -199,5 +240,5 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        ranks = truncate_lineage(ranks)
-    return ranks
+
+    return iterate(step, ranks, n_iter)

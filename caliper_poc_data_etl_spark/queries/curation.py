@@ -1755,18 +1755,18 @@ def er_phonetic_cluster_cc(spark, sf_dir):
     """The full fuzzy-ER composition as ONE declared operator:
     phonetic blocking (portable Soundex) → Levenshtein verify on the
     block candidates (≤ {PHON_LEV_MAX}) → connected components over
-    the verified match graph via {PHON_ROUNDS} fixed rounds of
-    min-label propagation — the blocking/verify/cluster pipeline
-    every MDM dedup deploys, with cluster id = lexicographic-min
-    member so labels are engine-portable strings. Fixed rounds keep
-    both engines on an identical schedule (the convergence-loop
-    variant is ``dedup_cluster_cc`` with its documented driver
-    scalar); the pytest asserts the fixpoint is reached within the
-    rounds on this corpus. The 8th iterative operator (CC, PageRank,
-    power iteration, k-means, SSSP, label propagation, k-core, this).
-    Scale shape: candidates form per soundex block (Σ block², never
-    n²); each round is one join + one min-groupBy, all
-    hash-partitioned on the word key."""
+    the verified match graph by min-label propagation — the
+    blocking/verify/cluster pipeline every MDM dedup deploys, with
+    cluster id = lexicographic-min member so labels are
+    engine-portable strings. The clustering is
+    :func:`graph.connected_components`, capped at the oracle's
+    {PHON_ROUNDS} rounds: it stops early once a round changes no
+    label, and the pytest asserts the fixpoint is reached within the
+    cap on this corpus, so both engines end on the same labels. The
+    8th iterative operator (CC, PageRank, power iteration, k-means,
+    SSSP, label propagation, k-core, this). Scale shape: candidates
+    form per soundex block (Σ block², never n²); each round is one
+    join + one min-groupBy, all hash-partitioned on the word key."""
     docs = t(spark, sf_dir, "documents").select(
         F.explode(F.split(F.col("text"), " ")).alias("w")
     )
@@ -1783,43 +1783,16 @@ def er_phonetic_cluster_cc(spark, sf_dir):
         .filter(F.levenshtein("w1", "w2") <= PHON_LEV_MAX)
         .select("w1", "w2")
     )
-    from caliper_poc_data_etl_spark.graph import truncate_lineage
+    from caliper_poc_data_etl_spark.graph import connected_components
 
-    edges = truncate_lineage(
-        matched.unionByName(
-            matched.select(F.col("w2").alias("w1"), F.col("w1").alias("w2"))
-        )
+    labels = connected_components(
+        vocab, matched, node_col="w", src_col="w1", dst_col="w2", max_iter=PHON_ROUNDS
     )
-    labels = vocab.select("w", F.col("w").alias("lbl"))
-    for _ in range(PHON_ROUNDS):
-        nbr = (
-            edges.join(labels, edges.w2 == labels.w)
-            .groupBy(F.col("w1").alias("w"))
-            .agg(F.min("lbl").alias("nlbl"))
-        )
-        labels = (
-            labels.join(nbr, "w", "left")
-            .select(
-                "w",
-                F.least(
-                    F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))
-                ).alias("lbl"),
-            )
-        )
-        # Lazy checkpoint: still truncates lineage and dedupes
-        # the two per-round references so each round executes once
-        # (pinned by tests/test_checkpoint_posture.py's accumulator
-        # counter), but without an eager job barrier per round —
-        # measured 2.06 → 1.86 s median at sf0.1, value-identical.
-        # Value-safe under any cache race: min-label rounds are
-        # order-independent. truncate_lineage honors the reliable-
-        # checkpoint posture switch (graph.py docstring).
-        labels = truncate_lineage(labels, eager=False)
     return labels.select(
-        "w",
-        F.col("lbl").alias("cluster_label"),
+        F.col("node").alias("w"),
+        F.col("comp").alias("cluster_label"),
         F.count(F.lit(1))
-        .over(W.partitionBy("lbl"))
+        .over(W.partitionBy("comp"))
         .cast("long")
         .alias("cluster_size"),
     )

@@ -1845,17 +1845,19 @@ def decontam_minhash_crosscorpus(spark, sf_dir):
         )
         .filter(F.col("jacc_milli") >= DECONTAM_JACC_MILLI)
     )
-    n_matches = verified.groupBy("train_id").agg(
-        F.count(F.lit(1)).alias("n_eval_matches")
-    )
+    # One aggregate scores each pair once: the match count and the
+    # argmax, which breaks Jaccard ties to the smallest eval id.
     return (
-        topk(verified, ["train_id"], [F.desc("jacc_milli"), "eval_id"], 1)
-        .join(n_matches, "train_id")
+        verified.groupBy("train_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_eval_matches"),
+            F.max(F.struct("jacc_milli", (-F.col("eval_id")).alias("neg_id"))).alias("best"),
+        )
         .select(
             F.col("train_id").alias("doc_id"),
             F.col("n_eval_matches").cast("long").alias("n_eval_matches"),
-            F.col("eval_id").alias("best_eval_id"),
-            F.col("jacc_milli").cast("long").alias("best_jacc_milli"),
+            (-F.col("best.neg_id")).alias("best_eval_id"),
+            F.col("best.jacc_milli").cast("long").alias("best_jacc_milli"),
         )
     )
 
@@ -1928,10 +1930,10 @@ def decontam_embedding_cosine(spark, sf_dir):
     at any corpus scale), so the NLJ is |corpus| x |eval| — linear in
     the corpus with a constant eval factor, map-only, no shuffle of
     the big side (the sanctioned ``sim_cosine_topk`` broadcast shape,
-    whitelisted in plan_audit). The per-train argmax (a ``topk``) and
-    the match count (an aggregate joined back) run on the
-    post-threshold FLAGGED set only. The LSH-bucketed path for a
-    larger eval side exists in-family (``dedup_embedding_lsh``). Dot
+    whitelisted in plan_audit). The per-train argmax and the match
+    count are one aggregate over the post-threshold FLAGGED set. The
+    LSH-bucketed path for a larger eval side exists in-family
+    (``dedup_embedding_lsh``). Dot
     products via zip_with + fold — JVM-side, no UDF; float parity per
     the ``dedup_embedding_cosine`` recipe (identical IEEE expression
     shape both engines).
@@ -1973,15 +1975,19 @@ def decontam_embedding_cosine(spark, sf_dir):
         .select("train_id", "eval_id", cos.alias("cosine"))
         .filter(F.col("cosine") >= DECONTAM_COS_THRESHOLD)
     )
-    n_matches = scored.groupBy("train_id").agg(F.count("*").alias("n_eval_matches"))
+    # One aggregate scores each pair once: the match count and the
+    # argmax, which breaks cosine ties to the smallest eval id.
     return (
-        topk(scored, ["train_id"], [F.desc("cosine"), "eval_id"], 1)
-        .join(n_matches, "train_id")
+        scored.groupBy("train_id")
+        .agg(
+            F.count("*").alias("n_eval_matches"),
+            F.max(F.struct("cosine", (-F.col("eval_id")).alias("neg_id"))).alias("best"),
+        )
         .select(
             "train_id",
             F.col("n_eval_matches").cast("long").alias("n_eval_matches"),
-            F.col("eval_id").alias("best_eval_id"),
-            F.round("cosine", 4).alias("best_cosine"),
+            (-F.col("best.neg_id")).alias("best_eval_id"),
+            F.round("best.cosine", 4).alias("best_cosine"),
         )
     )
 

@@ -1,17 +1,50 @@
 """Graph operators over the driver tables: shortest paths, label
 propagation, k-core, random walks, HITS, personalized PageRank, link
 prediction, clustering coefficients, modularity, bipartite projection
-and the affine synthetic edge lists they share. Every iterative round
-truncates lineage through :func:`graph.truncate_lineage`."""
+and the affine synthetic edge lists they share. Every round loop
+runs through :func:`graph.iterate`."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from functools import reduce
+
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window as W
 
-from caliper_poc_data_etl_spark.graph import truncate_lineage
+from caliper_poc_data_etl_spark.graph import iterate, pagerank, truncate_lineage
 from caliper_poc_data_etl_spark.queries.kernels import topk
 from caliper_poc_data_etl_spark.queries.registry import query, t
+from caliper_poc_data_etl_spark.queries.training import _BFS_EDGES_SQL
+
+
+# ---------------------------------------------------------------------------
+# The affine synthetic link graph
+# ---------------------------------------------------------------------------
+
+_LP_GEN = [(7, 1), (13, 2), (29, 3)]
+
+
+def _affine_edges(nodes: DataFrame, id_col: str, *, symmetric: bool = False) -> DataFrame:
+    """Directed (src, dst) edges over ``nodes``' ids: every node links
+    to ``(id * a + b) % n`` for each ``(a, b)`` in ``_LP_GEN``,
+    self-loops and duplicates removed; ``symmetric`` adds each edge's
+    reverse before the dedupe. The node count n rides as a broadcast
+    1-row aggregate, not a driver count."""
+    nn = nodes.agg(F.count("*").alias("n"))
+    base = nodes.select(F.col(id_col).alias("id")).crossJoin(F.broadcast(nn))
+    gen = reduce(
+        DataFrame.unionByName,
+        [
+            base.select(
+                F.col("id").alias("src"),
+                ((F.col("id") * a + b) % F.col("n")).alias("dst"),
+            )
+            for a, b in _LP_GEN
+        ],
+    ).filter(F.col("src") != F.col("dst"))
+    if symmetric:
+        gen = gen.unionByName(gen.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    return gen.distinct()
 
 
 # ---------------------------------------------------------------------------
@@ -83,43 +116,27 @@ def graph_sssp_bellman_ford(spark, sf_dir):
     scalars). At 100 TB the edge list is the big side and the
     distance frame rides broadcast or co-partitioning, exactly like
     dedup_cluster_cc."""
-    d = t(spark, sf_dir, "documents")
-    nn = d.agg(F.count("*").alias("n"))
-    base = d.select("doc_id").crossJoin(F.broadcast(nn))
-    gen = [(7, 1), (13, 2), (29, 3)]
-    parts = [
-        base.select(
-            F.col("doc_id").alias("src"),
-            ((F.col("doc_id") * a + b) % F.col("n")).alias("dst"),
-        )
-        for a, b in gen
-    ]
-    edges = parts[0]
-    for p in parts[1:]:
-        edges = edges.unionByName(p)
+    d = t(spark, sf_dir, "documents").select("doc_id")
     edges = truncate_lineage(
-        edges.filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .select(
+        _affine_edges(d, "doc_id").select(
             "src",
             "dst",
             ((F.col("src") * 31 + F.col("dst") * 17) % 97 + 1).alias("w"),
         )
     )
-    dist = spark.range(1).select(
-        F.lit(SSSP_SOURCE).cast("long").alias("node"),
-        F.lit(0).cast("long").alias("dist"),
-    )
-    for _ in range(SSSP_ROUNDS):
+
+    def relax(dist, _r):
         relaxed = (
             dist.join(edges, dist.node == edges.src)
             .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
         )
-        dist = truncate_lineage(
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-        )
+        return dist.unionByName(relaxed).groupBy("node").agg(F.min("dist").alias("dist"))
+
+    dist = spark.range(1).select(
+        F.lit(SSSP_SOURCE).cast("long").alias("node"),
+        F.lit(0).cast("long").alias("dist"),
+    )
+    dist = iterate(relax, dist, SSSP_ROUNDS)
     return dist.select("node", F.col("dist").cast("long").alias("dist"))
 
 
@@ -128,33 +145,15 @@ def graph_sssp_bellman_ford(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 LP_ROUNDS = 3
-_LP_GEN = [(7, 1), (13, 2), (29, 3)]
 
 
 def _affine_undirected_edges(spark, sf_dir):
     """The shared synthetic similarity graph over embedding ids:
-    three affine generators per node, symmetrized, self-loops and
-    duplicates removed, localCheckpoint'ed (it anchors iterative
-    loops). Used by label propagation, k-core, and the clustering
-    coefficient; mirrors the SSSP/CC generator on documents."""
-    e = t(spark, sf_dir, "embeddings")
-    nn = e.agg(F.count("*").alias("n"))
-    base = e.select(F.col("vec_id").alias("id")).crossJoin(F.broadcast(nn))
-    parts = [
-        base.select(
-            F.col("id").alias("src"),
-            ((F.col("id") * a + b) % F.col("n")).alias("dst"),
-        )
-        for a, b in _LP_GEN
-    ]
-    gen = parts[0]
-    for p in parts[1:]:
-        gen = gen.unionByName(p)
-    gen = gen.filter(F.col("src") != F.col("dst"))
+    :func:`_affine_edges` symmetrized, localCheckpoint'ed (it anchors
+    iterative loops). Used by label propagation, k-core, and the
+    clustering coefficient."""
     return truncate_lineage(
-        gen.unionByName(
-            gen.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct()
+        _affine_edges(t(spark, sf_dir, "embeddings"), "vec_id", symmetric=True)
     )
 
 
@@ -215,19 +214,19 @@ def graph_label_propagation(spark, sf_dir):
     schedule so the oracle is exact."""
     edges = _affine_undirected_edges(spark, sf_dir)
     e = t(spark, sf_dir, "embeddings")
-    labels = e.select(F.col("vec_id").alias("node"), F.col("label").alias("lab"))
-    init = labels
-    for _ in range(LP_ROUNDS):
+    init = e.select(F.col("vec_id").alias("node"), F.col("label").alias("lab"))
+
+    def vote(labels, _r):
         votes = (
             edges.join(labels, edges.dst == labels.node)
             .groupBy(edges.src, "lab")
             .agg(F.count("*").alias("c"))
         )
-        labels = truncate_lineage(
-            topk(votes, ["src"], [F.desc("c"), "lab"], 1).select(
-                F.col("src").alias("node"), "lab"
-            )
+        return topk(votes, ["src"], [F.desc("c"), "lab"], 1).select(
+            F.col("src").alias("node"), "lab"
         )
+
+    labels = iterate(vote, init, LP_ROUNDS)
     return init.select("node", F.col("lab").alias("l0")).join(
         labels, "node"
     ).select(
@@ -289,8 +288,8 @@ def graph_kcore_decompose(spark, sf_dir):
     {KCORE_K}-core — the densest-region extractor used for community
     seeding and spam/bot subgraph mining. Like the other iterative
     operators the round count is FIXED so both engines run the
-    identical schedule (a convergence loop would need the CC-style
-    driver scalar); on this graph the peel converges within the fixed
+    identical schedule as the oracle's chained CTEs; on this graph
+    the peel converges within the fixed
     rounds at every test SF, which the pytest asserts by checking
     every reported degree ≥ {KCORE_K} and that one more peel changes
     nothing.
@@ -298,18 +297,19 @@ def graph_kcore_decompose(spark, sf_dir):
     Each round: one degree groupBy + two semi-joins to keep edges
     between survivors — all hash-partitioned on node ids,
     localCheckpoint truncating lineage per round."""
-    edges = _affine_undirected_edges(spark, sf_dir)
-    for _ in range(KCORE_ROUNDS):
+
+    def peel(edges, _r):
         keep = (
             edges.groupBy("src")
             .agg(F.count("*").alias("deg"))
             .filter(F.col("deg") >= KCORE_K)
             .select(F.col("src").alias("node"))
         )
-        edges = truncate_lineage(
-            edges.join(keep.select(F.col("node").alias("src")), "src", "left_semi")
-            .join(keep.select(F.col("node").alias("dst")), "dst", "left_semi")
-        )
+        return edges.join(
+            keep.select(F.col("node").alias("src")), "src", "left_semi"
+        ).join(keep.select(F.col("node").alias("dst")), "dst", "left_semi")
+
+    edges = iterate(peel, _affine_undirected_edges(spark, sf_dir), KCORE_ROUNDS)
     return edges.groupBy(F.col("src").alias("vec_id")).agg(
         F.count("*").cast("long").alias("core_degree")
     )
@@ -735,56 +735,35 @@ def graph_hits_scores(spark, sf_dir):
     1-row max scalar as a broadcast plan node (never a driver
     collect) — the Pregel message/combine shape at |V| rows."""
 
-    emb = t(spark, sf_dir, "embeddings")
-    nodes = emb.select(F.col("vec_id").alias("node"))
-    n_df = nodes.agg(F.count(F.lit(1)).alias("n"))
-    gen = None
-    for a_c, b_c in _LP_GEN:
-        g = nodes.crossJoin(F.broadcast(n_df)).select(
-            F.col("node").alias("src"),
-            ((F.col("node") * a_c + b_c) % F.col("n")).alias("dst"),
-        )
-        gen = g if gen is None else gen.unionByName(g)
-    edges = truncate_lineage(
-        gen.filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    nodes = t(spark, sf_dir, "embeddings").select(F.col("vec_id").alias("node"))
+    edges = truncate_lineage(_affine_edges(nodes, "node"))
 
-    def _norm(df):
+    def half_round(score, key, other):
+        """Σ of ``score`` over each node's ``other``-side neighbors,
+        zero-filled and max-normalized."""
+        raw = (
+            edges.join(score.withColumnRenamed("node", key), key)
+            .groupBy(F.col(other).alias("node"))
+            .agg(F.sum("v").alias("v"))
+        )
+        df = nodes.join(raw, "node", "left").select(
+            "node", F.coalesce("v", F.lit(0)).alias("v")
+        )
         m = df.agg(F.max("v").alias("m"))
         return df.crossJoin(F.broadcast(m)).select(
             "node", F.expr(f"v * {HITS_SCALE} div m").alias("v")
         )
 
+    auth = []
+
+    def hits_round(h, _r):
+        auth.append(truncate_lineage(half_round(h, "src", "dst")))
+        return half_round(auth[-1], "dst", "src")
+
     h = nodes.select("node", F.lit(HITS_SCALE).cast("long").alias("v"))
-    a = None
-    for _ in range(HITS_ROUNDS):
-        a_raw = (
-            edges.join(h.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("v").alias("v"))
-        )
-        a = truncate_lineage(
-            _norm(
-                nodes.join(a_raw, "node", "left").select(
-                    "node", F.coalesce("v", F.lit(0)).alias("v")
-                )
-            )
-        )
-        h_raw = (
-            edges.join(a.withColumnRenamed("node", "dst"), "dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("v").alias("v"))
-        )
-        h = truncate_lineage(
-            _norm(
-                nodes.join(h_raw, "node", "left").select(
-                    "node", F.coalesce("v", F.lit(0)).alias("v")
-                )
-            )
-        )
+    h = iterate(hits_round, h, HITS_ROUNDS)
     return h.select(F.col("node").alias("vec_id"), F.col("v").alias("hub_micro")).join(
-        a.select(F.col("node").alias("vec_id"), F.col("v").alias("auth_micro")),
+        auth[-1].select(F.col("node").alias("vec_id"), F.col("v").alias("auth_micro")),
         "vec_id",
     )
 
@@ -859,28 +838,11 @@ def graph_personalized_pagerank(spark, sf_dir):
     nodes — the Pregel shape at |V| rows; 3 fixed rounds, zero driver
     scalars."""
 
-    emb = t(spark, sf_dir, "embeddings")
-    nodes = emb.select(F.col("vec_id").alias("node"))
-    n_df = nodes.agg(
-        F.count(F.lit(1)).alias("n"), F.min("node").alias("s")
-    )
-    base = nodes.crossJoin(F.broadcast(n_df))
-    gen = None
-    for a_c, b_c in _LP_GEN:
-        g = base.select(
-            F.col("node").alias("src"),
-            ((F.col("node") * a_c + b_c) % F.col("n")).alias("dst"),
-        )
-        gen = g if gen is None else gen.unionByName(g)
-    edges = truncate_lineage(
-        gen.filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    nodes = t(spark, sf_dir, "embeddings").select(F.col("vec_id").alias("node"))
+    edges = truncate_lineage(_affine_edges(nodes, "node"))
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     ed = truncate_lineage(edges.join(deg, "src"))
-    seeded = base.select(
-        "node", F.col("s").alias("seed_id")
-    )
+    seeded = nodes.crossJoin(F.broadcast(nodes.agg(F.min("node").alias("seed_id"))))
     teleport = (
         F.when(
             F.col("node") == F.col("seed_id"),
@@ -889,7 +851,7 @@ def graph_personalized_pagerank(spark, sf_dir):
             ),
         ).otherwise(0)
     )
-    r = seeded.select(
+    ppr0 = seeded.select(
         "node",
         "seed_id",
         F.when(F.col("node") == F.col("seed_id"), PPR_SCALE)
@@ -897,30 +859,24 @@ def graph_personalized_pagerank(spark, sf_dir):
         .cast("long")
         .alias("v"),
     )
-    for _ in range(PPR_ROUNDS):
+
+    def propagate(ppr, _r):
         mass = (
-            ed.join(
-                r.select(F.col("node").alias("src"), "v"), "src"
-            )
+            ed.join(ppr.select(F.col("node").alias("src"), "v"), "src")
             .select("dst", F.expr("v div deg").alias("c"))
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("c").alias("mass"))
         )
-        r = truncate_lineage(
-            seeded.join(mass, "node", "left")
-            .select(
-                "node",
-                "seed_id",
-                (
-                    F.expr(
-                        f"({PPR_DAMP_NUM} * coalesce(mass, 0)) "
-                        f"div {PPR_DAMP_DEN}"
-                    )
-                    + teleport
-                ).cast("long").alias("v"),
-            )
+        return seeded.join(mass, "node", "left").select(
+            "node",
+            "seed_id",
+            (
+                F.expr(f"({PPR_DAMP_NUM} * coalesce(mass, 0)) div {PPR_DAMP_DEN}")
+                + teleport
+            ).cast("long").alias("v"),
         )
-    return r.select("node", "v").select(
+
+    return iterate(propagate, ppr0, PPR_ROUNDS).select(
         F.col("node").alias("vec_id"), F.col("v").alias("ppr_micro")
     )
 
@@ -1031,5 +987,245 @@ def graph_modularity_score(spark, sf_dir):
                 f"- pmod({MOD_MICRO} * (t * within_both - deg_sum * deg_sum),"
                 f" t * t)) div (t * t)"
             ).cast("long").alias("contrib_micro"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# The affine link graph over documents: PageRank, degrees, triangles,
+# common neighbors
+# ---------------------------------------------------------------------------
+
+_PR_ITER = 10
+_PR_DAMP = 0.85
+
+
+def _pagerank_oracle() -> str:
+    """Chained-CTE PageRank: one CTE level per iteration (fixed count,
+    so no recursive-aggregation restrictions). The synthetic link
+    graph (three affine out-links per doc, self-loops removed) has no
+    dangling nodes by construction, so the SQL needs no global-mass
+    term."""
+    # AS MATERIALIZED is load-bearing: each pr{i} is referenced twice
+    # (carrier + contribution subquery); DuckDB's default CTE inlining
+    # would duplicate the whole chain per level — 2^10 plan copies.
+    head = """
+    WITH nn AS (SELECT COUNT(*) AS n FROM documents),
+    edges AS MATERIALIZED (
+      SELECT DISTINCT src, dst FROM (
+        SELECT doc_id AS src, (doc_id * 7 + 1) % nn.n AS dst FROM documents, nn
+        UNION ALL
+        SELECT doc_id, (doc_id * 13 + 2) % nn.n FROM documents, nn
+        UNION ALL
+        SELECT doc_id, (doc_id * 29 + 3) % nn.n FROM documents, nn
+      ) WHERE src <> dst
+    ),
+    deg AS MATERIALIZED (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src),
+    pr0 AS MATERIALIZED (SELECT doc_id AS node, 1.0 / nn.n AS rank FROM documents, nn)
+    """
+    steps = []
+    for i in range(1, _PR_ITER + 1):
+        steps.append(
+            f"""pr{i} AS MATERIALIZED (
+      SELECT b.node,
+             (1.0 - {_PR_DAMP}) / (SELECT n FROM nn)
+               + {_PR_DAMP} * COALESCE(m.in_mass, 0.0) AS rank
+      FROM pr{i-1} b LEFT JOIN (
+        SELECT e.dst AS node, SUM(p.rank / deg.deg) AS in_mass
+        FROM edges e JOIN deg USING (src) JOIN pr{i-1} p ON p.node = e.src
+        GROUP BY e.dst
+      ) m USING (node)
+    )"""
+        )
+    return (
+        head
+        + ", "
+        + ",\n    ".join(steps)
+        + f"\n    SELECT node AS doc_id, ROUND(rank, 6) AS rank FROM pr{_PR_ITER}"
+    )
+
+
+@query("graph_pagerank", oracle=_pagerank_oracle())
+def graph_pagerank(spark, sf_dir):
+    """PageRank over a deterministic synthetic link graph (every doc
+    links to three affine-indexed docs) — link-derived document
+    authority as a corpus-quality prior, and the engine's second
+    iterative-algorithm operator next to connected components.
+
+    The Spark path is :func:`graph.pagerank` (join + group-by per
+    iteration, lineage truncated per round); the oracle replays the
+    identical 10 iterations as chained CTEs. Per-node in-degree is ~3,
+    so float summation-order divergence stays ~1 ulp per round and the
+    6-decimal rounding hash-matches."""
+    d = t(spark, sf_dir, "documents").select("doc_id")
+    ranks = pagerank(
+        d.select(F.col("doc_id").alias("node")),
+        _affine_edges(d, "doc_id"),
+        damping=_PR_DAMP,
+        n_iter=_PR_ITER,
+    )
+    return ranks.select(
+        F.col("node").alias("doc_id"), F.round("rank", 6).alias("rank")
+    )
+
+
+_GRAPH_EDGES_SQL = """
+    WITH n AS (SELECT COUNT(*) AS n_docs FROM documents),
+    links AS (
+      SELECT doc_id AS src, (doc_id * 7 + 1) % n.n_docs AS dst
+      FROM documents, n
+      UNION ALL
+      SELECT doc_id, (doc_id * 13 + 2) % n.n_docs FROM documents, n
+      UNION ALL
+      SELECT doc_id, (doc_id * 29 + 3) % n.n_docs FROM documents, n
+    ),
+    edges AS (SELECT DISTINCT src, dst FROM links WHERE src <> dst)
+"""
+
+
+@query(
+    "graph_degree_stats",
+    oracle=_GRAPH_EDGES_SQL
+    + """
+    SELECT d.doc_id,
+           CAST(COALESCE(o.odeg, 0) AS BIGINT) AS out_deg,
+           CAST(COALESCE(i.ideg, 0) AS BIGINT) AS in_deg
+    FROM documents d
+    LEFT JOIN (SELECT src, COUNT(*) AS odeg FROM edges GROUP BY src) o
+      ON o.src = d.doc_id
+    LEFT JOIN (SELECT dst, COUNT(*) AS ideg FROM edges GROUP BY dst) i
+      ON i.dst = d.doc_id
+    """,
+)
+def graph_degree_stats(spark, sf_dir):
+    """Per-node in/out degree over the link graph — the first graph
+    profile run before any propagation algorithm (degree skew decides
+    salting and orientation strategies). Two hash aggs on the edge
+    endpoints, left-joined back to the node table so isolated nodes
+    keep explicit zeros."""
+    d = t(spark, sf_dir, "documents").select("doc_id")
+    edges = _affine_edges(d, "doc_id")
+    odeg = edges.groupBy(F.col("src").alias("doc_id")).agg(
+        F.count("*").alias("out_deg")
+    )
+    ideg = edges.groupBy(F.col("dst").alias("doc_id")).agg(
+        F.count("*").alias("in_deg")
+    )
+    return (
+        d.join(odeg, "doc_id", "left")
+        .join(ideg, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
+            F.coalesce("in_deg", F.lit(0)).alias("in_deg"),
+        )
+    )
+
+
+@query(
+    "graph_triangle_count",
+    oracle=_GRAPH_EDGES_SQL
+    + """
+    , und AS (
+      SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
+      FROM edges
+    )
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_triangles
+    FROM und e1
+    JOIN und e2 ON e2.a = e1.b
+    JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b
+    """,
+)
+def graph_triangle_count(spark, sf_dir):
+    """Exact triangle count via the oriented (compact-forward) join:
+    undirected edges orient low→high, then (a,b)⋈(b,c)⋈(a,c) counts
+    each triangle exactly once — two equi-join shuffles on node ids,
+    never an all-pairs product. At 100 TB the orientation key becomes
+    (degree, id) instead of raw id so high-degree hubs sit on the
+    probe side (documented refinement; the join shape is identical).
+    Triangle density is the standard community-structure signal for
+    link-graph curation."""
+    edges = _affine_edges(t(spark, sf_dir, "documents"), "doc_id")
+    und = edges.select(
+        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+    ).distinct()
+    e1 = und.select(F.col("a").alias("x"), F.col("b").alias("y"))
+    e2 = und.select(F.col("a").alias("y"), F.col("b").alias("z"))
+    e3 = und.select(F.col("a").alias("x"), F.col("b").alias("z"))
+    return (
+        e1.join(e2, "y")
+        .join(e3, ["x", "z"])
+        .agg(F.count("*").alias("n_triangles"))
+    )
+
+
+@query(
+    "graph_common_neighbors",
+    oracle=f"""
+    WITH nn AS (SELECT COUNT(*) AS n FROM documents),
+    edges AS MATERIALIZED ({_BFS_EDGES_SQL}),
+    cn AS (
+      SELECT a.src AS node_a, b.src AS node_b, COUNT(*) AS n_common
+      FROM edges a JOIN edges b ON a.dst = b.dst AND a.src < b.src
+      GROUP BY 1, 2
+    ),
+    deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src)
+    SELECT cn.node_a, cn.node_b, CAST(cn.n_common AS BIGINT) AS n_common,
+           CAST(ROUND(cn.n_common * 1.0
+             / (da.deg + db.deg - cn.n_common), 4) AS DOUBLE) AS jaccard
+    FROM cn
+    JOIN deg da ON da.src = cn.node_a
+    JOIN deg db ON db.src = cn.node_b
+    WHERE cn.n_common >= 2
+    """,
+)
+def graph_common_neighbors(spark, sf_dir):
+    """Common-neighbors link prediction over the synthetic link graph:
+    node pairs sharing ≥2 out-neighbors, scored by neighborhood
+    Jaccard — the classic "you may also like" / related-documents
+    primitive, and the third graph operator next to PageRank and
+    triangle counting.
+
+    Plan: ONE self-equi-join of the edge list on dst (cost: Σ
+    in-degree² — the graph analog of the shingle join, never n²),
+    then two broadcast-sized degree joins. At 100 TB the in-degree
+    skew (celebrity nodes) is the hazard; AQE skew-join splits those
+    dst partitions."""
+    edges = _affine_edges(t(spark, sf_dir, "documents"), "doc_id")
+    a = edges.alias("a")
+    b = edges.alias("b")
+    cn = (
+        a.join(
+            b,
+            (F.col("a.dst") == F.col("b.dst"))
+            & (F.col("a.src") < F.col("b.src")),
+        )
+        .groupBy(
+            F.col("a.src").alias("node_a"), F.col("b.src").alias("node_b")
+        )
+        .agg(F.count("*").alias("n_common"))
+        .filter(F.col("n_common") >= 2)
+    )
+    deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
+    return (
+        cn.join(
+            F.broadcast(deg.select(F.col("src").alias("node_a"), F.col("deg").alias("da"))),
+            "node_a",
+        )
+        .join(
+            F.broadcast(deg.select(F.col("src").alias("node_b"), F.col("deg").alias("db"))),
+            "node_b",
+        )
+        .select(
+            "node_a",
+            "node_b",
+            F.col("n_common").cast("long").alias("n_common"),
+            F.round(
+                F.col("n_common")
+                / (F.col("da") + F.col("db") - F.col("n_common")),
+                4,
+            )
+            .cast("double")
+            .alias("jaccard"),
         )
     )

@@ -2829,32 +2829,33 @@ def agg_kmv_distinct_sketch(spark, sf_dir):
     Integer-exact estimator: hashes live in a 40-bit space so
     (K-1)*2^40 fits int64 and the estimate is one integer floor
     division — no floating point. Scale shape: the dedupe is a
-    map-side-combining groupBy on (group, hash); ranking then touches
-    only DISTINCT hashes. A production sketch bounds state at K per
-    partition (partial-agg top-K heaps, the ``text_tokenize_vocab_ids``
-    recipe); the exact dedupe here is what keeps the oracle twin
-    bit-exact while demonstrating the estimator math."""
+    map-side-combining groupBy on (group, hash); the sketch is a
+    per-group ``topk`` that keeps K hashes per group in each partition
+    before the shuffle, and the exact distinct count is a second
+    groupBy over the deduped hashes — the exact count is what keeps
+    the oracle twin bit-exact while demonstrating the estimator
+    math."""
     e = t(spark, sf_dir, "events")
     hv = F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 10), 16, 10).cast(
         "long"
     )
     h = e.select("event_type", hv.alias("hv")).distinct()
-    wn = W.partitionBy("event_type").orderBy("hv")
-    wall = W.partitionBy("event_type")
-    ranked = h.select(
-        "event_type",
-        "hv",
-        F.row_number().over(wn).alias("rn"),
-        F.count("*").over(wall).alias("nd"),
+    # The sketch: each group's K smallest hashes, kept per partition
+    # before the shuffle. Its largest hash is the K-th (the nd-th when
+    # nd < K); nd comes from a groupBy, not a window beside the rank.
+    kth = (
+        topk(h, ["event_type"], ["hv"], KMV_K)
+        .groupBy("event_type")
+        .agg(F.max("hv").alias("kth_hash"))
     )
-    kth = F.when(F.col("nd") < KMV_K, F.col("nd")).otherwise(F.lit(KMV_K))
+    nd = h.groupBy("event_type").agg(F.count("*").alias("nd"))
     est = F.when(F.col("nd") <= KMV_K, F.col("nd")).otherwise(
-        F.expr(f"({KMV_K - 1} * CAST({_KMV_SPACE} AS BIGINT)) div hv")
+        F.expr(f"({KMV_K - 1} * CAST({_KMV_SPACE} AS BIGINT)) div kth_hash")
     )
-    return ranked.filter(F.col("rn") == kth).select(
+    return kth.join(nd, "event_type").select(
         "event_type",
         F.col("nd").cast("long").alias("n_exact"),
-        F.col("hv").cast("long").alias("kth_hash"),
+        F.col("kth_hash").cast("long").alias("kth_hash"),
         est.cast("long").alias("est_distinct"),
     )
 

@@ -13,7 +13,7 @@ import random
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from caliper_poc_data_etl_spark.graph import truncate_lineage
+from caliper_poc_data_etl_spark.graph import iterate, truncate_lineage
 from caliper_poc_data_etl_spark.queries.kernels import (
     dot,
     dot_sql,
@@ -928,11 +928,8 @@ def embed_top_pc_power_iter(spark, sf_dir):
             .alias("d")
         )
     )
-    m = truncate_lineage(
-        spark.range(1, 65)
-        .select(F.col("id").alias("j"), F.lit(1000).cast("long").alias("m"))
-    )
-    for _ in range(PI_ITERS):
+
+    def power_step(m, _r):
         s = (
             xe.join(F.broadcast(m), "j")
             .groupBy("vec_id")
@@ -985,15 +982,18 @@ def embed_top_pc_power_iter(spark, sf_dir):
                 )
             ).alias("nrm")
         )
-        m = truncate_lineage(
-            wr.crossJoin(F.broadcast(nrm))
-            .select(
-                "j",
-                F.floor(1000 * F.col("wr") / F.col("nrm") + F.lit(0.5))
-                .cast("long")
-                .alias("m"),
-            )
+        return wr.crossJoin(F.broadcast(nrm)).select(
+            "j",
+            F.floor(1000 * F.col("wr") / F.col("nrm") + F.lit(0.5))
+            .cast("long")
+            .alias("m"),
         )
+
+    m = truncate_lineage(
+        spark.range(1, 65)
+        .select(F.col("id").alias("j"), F.lit(1000).cast("long").alias("m"))
+    )
+    m = iterate(power_step, m, PI_ITERS)
     top_sign = (
         m.orderBy(F.abs(F.col("m")).desc(), "j")
         .limit(1)
@@ -1149,7 +1149,7 @@ def _kmeans_final_assignment(spark, sf_dir):
     (vec_id, k, d2) assignment after KM_ITERS exact integer rounds.
     See embed_kmeans_assign for semantics and scale posture.
 
-    Lazy checkpoints throughout (the phonetic-CC lesson): lineage
+    Lazy checkpoints throughout (``iterate(eager=False)``): lineage
     still truncates, but the per-round job barrier goes
     away — the 4-round DAG runs as one job with each checkpointed
     round cached at first materialization. Interleaved A/B at sf0.1:
@@ -1195,28 +1195,26 @@ def _kmeans_final_assignment(spark, sf_dir):
         )
         return topk(d, ["vec_id"], ["d2", "k"], 1).select("vec_id", "k", "d2")
 
-    for _ in range(KM_ITERS):
+    def update(c, _r):
         a = assign(c).select("vec_id", "k")
         m = (
             a.join(xe, "vec_id")
             .groupBy("k", "j")
             .agg(F.sum("x").alias("s"), F.count("*").alias("cnt"))
         )
-        c = truncate_lineage(
-            c.join(m, ["k", "j"], "left").select(
-                "k",
-                "j",
-                F.coalesce(
-                    (
-                        F.when(F.col("s") < 0, -1).otherwise(1)
-                        * F.expr("div(2 * abs(s) + cnt, 2 * cnt)")
-                    ).cast("long"),
-                    F.col("c"),
-                ).alias("c"),
-            ),
-            eager=False,
+        return c.join(m, ["k", "j"], "left").select(
+            "k",
+            "j",
+            F.coalesce(
+                (
+                    F.when(F.col("s") < 0, -1).otherwise(1)
+                    * F.expr("div(2 * abs(s) + cnt, 2 * cnt)")
+                ).cast("long"),
+                F.col("c"),
+            ).alias("c"),
         )
-    return assign(c)
+
+    return assign(iterate(update, c, KM_ITERS, eager=False))
 
 
 @query("embed_kmeans_assign", oracle=_kmeans_oracle())
@@ -1827,20 +1825,20 @@ def sim_mmr_select(spark, sf_dir):
         .orderBy(F.desc("score"), "vec_id")
         .limit(1)
     )
-    for r in range(2, MMR_K + 1):
+
+    def pick_next(picked, r):
         seln = picked.select(F.col("vec_id").alias("ib"))
         msim = (
             pair.join(F.broadcast(seln), "ib")
             .groupBy("ia")
             .agg(F.max("s").alias("ms"))
         )
-        cand = relc.join(
-            picked.select("vec_id"), "vec_id", "left_anti"
-        )
+        cand = relc.join(picked.select("vec_id"), "vec_id", "left_anti")
         pick = (
             cand.join(msim, cand.vec_id == msim.ia)
             .select(
-                F.lit(r).cast("long").alias("sel_rank"),
+                # round r picks the (r + 1)-th vector
+                F.lit(r + 1).cast("long").alias("sel_rank"),
                 cand.vec_id.alias("vec_id"),
                 "rel",
                 (
@@ -1851,8 +1849,9 @@ def sim_mmr_select(spark, sf_dir):
             .orderBy(F.desc("score"), "vec_id")
             .limit(1)
         )
-        picked = truncate_lineage(picked.unionByName(pick))
-    return picked
+        return picked.unionByName(pick)
+
+    return iterate(pick_next, picked, MMR_K - 1)
 
 
 # ---------------------------------------------------------------------------

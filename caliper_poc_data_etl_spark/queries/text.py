@@ -7,10 +7,12 @@ whole-stage codegen at 100 TB; no Python in the hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from functools import reduce
+
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window as W
 
-from caliper_poc_data_etl_spark.graph import truncate_lineage
+from caliper_poc_data_etl_spark.graph import iterate, truncate_lineage
 from caliper_poc_data_etl_spark.queries.registry import query, t
 
 # A compact multi-language stopword table for the n-gram/stopword
@@ -1439,8 +1441,9 @@ def text_bpe_train_merges(spark, sf_dir):
         .filter(F.trim("s") != "")
         .repartition(n_part, "doc_id")
     )
-    merges = None
-    for r in range(1, BPE_TRAIN_ROUNDS + 1):
+    merges = []
+
+    def merge_round(docs, r):
         sy = F.split(F.trim(F.col("s")), " ")
         n_sy = F.size(sy)
         # Adjacent pairs as arrays_zip of two shifted slices — plain
@@ -1474,15 +1477,18 @@ def text_bpe_train_merges(spark, sf_dir):
         repl = F.concat(F.lit(" "), F.col("a"), F.col("b"), F.lit(" "))
         for _ in range(_BPE_TRAIN_SWEEPS):
             s = F.replace(s, search, repl)
-        docs = truncate_lineage(applied.select("doc_id", s.alias("s")))
-        m = top.select(
-            F.col("rank").cast("long").alias("rank"),
-            F.col("a").alias("left_sym"),
-            F.col("b").alias("right_sym"),
-            F.col("n").cast("long").alias("n"),
+        merges.append(
+            top.select(
+                F.col("rank").cast("long").alias("rank"),
+                F.col("a").alias("left_sym"),
+                F.col("b").alias("right_sym"),
+                F.col("n").cast("long").alias("n"),
+            )
         )
-        merges = m if merges is None else merges.unionByName(m)
-    return merges
+        return applied.select("doc_id", s.alias("s"))
+
+    iterate(merge_round, docs, BPE_TRAIN_ROUNDS)
+    return reduce(DataFrame.unionByName, merges)
 
 
 # ---------------------------------------------------------------------------

@@ -435,93 +435,6 @@ def sample_cap_per_source(spark, sf_dir):
     )
 
 
-_PR_ITER = 10
-_PR_DAMP = 0.85
-
-
-def _pagerank_oracle() -> str:
-    """Chained-CTE PageRank: one CTE level per iteration (fixed count,
-    so no recursive-aggregation restrictions). The synthetic link
-    graph (three affine out-links per doc, self-loops removed) has no
-    dangling nodes by construction, so the SQL needs no global-mass
-    term."""
-    # AS MATERIALIZED is load-bearing: each pr{i} is referenced twice
-    # (carrier + contribution subquery); DuckDB's default CTE inlining
-    # would duplicate the whole chain per level — 2^10 plan copies.
-    head = """
-    WITH nn AS (SELECT COUNT(*) AS n FROM documents),
-    edges AS MATERIALIZED (
-      SELECT DISTINCT src, dst FROM (
-        SELECT doc_id AS src, (doc_id * 7 + 1) % nn.n AS dst FROM documents, nn
-        UNION ALL
-        SELECT doc_id, (doc_id * 13 + 2) % nn.n FROM documents, nn
-        UNION ALL
-        SELECT doc_id, (doc_id * 29 + 3) % nn.n FROM documents, nn
-      ) WHERE src <> dst
-    ),
-    deg AS MATERIALIZED (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src),
-    pr0 AS MATERIALIZED (SELECT doc_id AS node, 1.0 / nn.n AS rank FROM documents, nn)
-    """
-    steps = []
-    for i in range(1, _PR_ITER + 1):
-        steps.append(
-            f"""pr{i} AS MATERIALIZED (
-      SELECT b.node,
-             (1.0 - {_PR_DAMP}) / (SELECT n FROM nn)
-               + {_PR_DAMP} * COALESCE(m.in_mass, 0.0) AS rank
-      FROM pr{i-1} b LEFT JOIN (
-        SELECT e.dst AS node, SUM(p.rank / deg.deg) AS in_mass
-        FROM edges e JOIN deg USING (src) JOIN pr{i-1} p ON p.node = e.src
-        GROUP BY e.dst
-      ) m USING (node)
-    )"""
-        )
-    return (
-        head
-        + ", "
-        + ",\n    ".join(steps)
-        + f"\n    SELECT node AS doc_id, ROUND(rank, 6) AS rank FROM pr{_PR_ITER}"
-    )
-
-
-@query("graph_pagerank", oracle=_pagerank_oracle())
-def graph_pagerank(spark, sf_dir):
-    """PageRank over a deterministic synthetic link graph (every doc
-    links to three affine-indexed docs) — link-derived document
-    authority as a corpus-quality prior, and the engine's second
-    iterative-algorithm operator next to connected components.
-
-    The Spark path is :func:`graph.pagerank` (join + group-by per
-    iteration, lineage truncated per round); the oracle replays the
-    identical 10 iterations as chained CTEs. Per-node in-degree is ~3,
-    so float summation-order divergence stays ~1 ulp per round and the
-    6-decimal rounding hash-matches."""
-    from caliper_poc_data_etl_spark.graph import pagerank as _pagerank
-
-    d = t(spark, sf_dir, "documents").select("doc_id")
-    # Corpus size as a broadcast 1-row aggregate (module convention) —
-    # no driver-side count().
-    n_df = d.agg(F.count("*").alias("n_docs"))
-    base = d.crossJoin(F.broadcast(n_df))
-    links = None
-    for mult, add in ((7, 1), (13, 2), (29, 3)):
-        part = base.select(
-            F.col("doc_id").alias("src"),
-            ((F.col("doc_id") * mult + add) % F.col("n_docs")).alias("dst"),
-        )
-        links = part if links is None else links.union(part)
-    edges = links.filter(F.col("src") != F.col("dst")).distinct()
-    ranks = _pagerank(
-        d.select(F.col("doc_id").alias("node")),
-        edges,
-        damping=_PR_DAMP,
-        n_iter=_PR_ITER,
-    )
-    return ranks.select(
-        F.col("node").alias("doc_id"), F.round("rank", 6).alias("rank")
-    )
-
-
 _HIST_WIDTH = 50_000
 
 
@@ -819,113 +732,6 @@ def funnel_time_to_convert(spark, sf_dir):
     )
 
 
-_GRAPH_EDGES_SQL = """
-    WITH n AS (SELECT COUNT(*) AS n_docs FROM documents),
-    links AS (
-      SELECT doc_id AS src, (doc_id * 7 + 1) % n.n_docs AS dst
-      FROM documents, n
-      UNION ALL
-      SELECT doc_id, (doc_id * 13 + 2) % n.n_docs FROM documents, n
-      UNION ALL
-      SELECT doc_id, (doc_id * 29 + 3) % n.n_docs FROM documents, n
-    ),
-    edges AS (SELECT DISTINCT src, dst FROM links WHERE src <> dst)
-"""
-
-
-def _graph_edges(spark, sf_dir):
-    """The synthetic affine link graph shared with graph_pagerank
-    (training.py::graph_pagerank) — every doc links to three
-    affine-indexed docs; n_docs rides as a broadcast 1-row aggregate,
-    not a driver count."""
-    d = t(spark, sf_dir, "documents").select("doc_id")
-    n_df = d.agg(F.count("*").alias("n_docs"))
-    base = d.crossJoin(F.broadcast(n_df))
-    links = None
-    for mult, add in ((7, 1), (13, 2), (29, 3)):
-        part = base.select(
-            F.col("doc_id").alias("src"),
-            ((F.col("doc_id") * mult + add) % F.col("n_docs")).alias("dst"),
-        )
-        links = part if links is None else links.union(part)
-    return d, links.filter(F.col("src") != F.col("dst")).distinct()
-
-
-@query(
-    "graph_degree_stats",
-    oracle=_GRAPH_EDGES_SQL
-    + """
-    SELECT d.doc_id,
-           CAST(COALESCE(o.odeg, 0) AS BIGINT) AS out_deg,
-           CAST(COALESCE(i.ideg, 0) AS BIGINT) AS in_deg
-    FROM documents d
-    LEFT JOIN (SELECT src, COUNT(*) AS odeg FROM edges GROUP BY src) o
-      ON o.src = d.doc_id
-    LEFT JOIN (SELECT dst, COUNT(*) AS ideg FROM edges GROUP BY dst) i
-      ON i.dst = d.doc_id
-    """,
-)
-def graph_degree_stats(spark, sf_dir):
-    """Per-node in/out degree over the link graph — the first graph
-    profile run before any propagation algorithm (degree skew decides
-    salting and orientation strategies). Two hash aggs on the edge
-    endpoints, left-joined back to the node table so isolated nodes
-    keep explicit zeros."""
-    d, edges = _graph_edges(spark, sf_dir)
-    odeg = edges.groupBy(F.col("src").alias("doc_id")).agg(
-        F.count("*").alias("out_deg")
-    )
-    ideg = edges.groupBy(F.col("dst").alias("doc_id")).agg(
-        F.count("*").alias("in_deg")
-    )
-    return (
-        d.join(odeg, "doc_id", "left")
-        .join(ideg, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
-            F.coalesce("in_deg", F.lit(0)).alias("in_deg"),
-        )
-    )
-
-
-@query(
-    "graph_triangle_count",
-    oracle=_GRAPH_EDGES_SQL
-    + """
-    , und AS (
-      SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-      FROM edges
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_triangles
-    FROM und e1
-    JOIN und e2 ON e2.a = e1.b
-    JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b
-    """,
-)
-def graph_triangle_count(spark, sf_dir):
-    """Exact triangle count via the oriented (compact-forward) join:
-    undirected edges orient low→high, then (a,b)⋈(b,c)⋈(a,c) counts
-    each triangle exactly once — two equi-join shuffles on node ids,
-    never an all-pairs product. At 100 TB the orientation key becomes
-    (degree, id) instead of raw id so high-degree hubs sit on the
-    probe side (documented refinement; the join shape is identical).
-    Triangle density is the standard community-structure signal for
-    link-graph curation."""
-    _, edges = _graph_edges(spark, sf_dir)
-    und = edges.select(
-        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).distinct()
-    e1 = und.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    e2 = und.select(F.col("a").alias("y"), F.col("b").alias("z"))
-    e3 = und.select(F.col("a").alias("x"), F.col("b").alias("z"))
-    return (
-        e1.join(e2, "y")
-        .join(e3, ["x", "z"])
-        .agg(F.count("*").alias("n_triangles"))
-    )
-
-
 _CMS_ROWS = 4
 _CMS_WIDTH = 64
 
@@ -1101,78 +907,6 @@ def sql_recursive_cte_bfs(spark, sf_dir):
                MIN(node) AS min_node, MAX(node) AS max_node
         FROM mind GROUP BY dist
         """
-    )
-
-
-@query(
-    "graph_common_neighbors",
-    oracle=f"""
-    WITH nn AS (SELECT COUNT(*) AS n FROM documents),
-    edges AS MATERIALIZED ({_BFS_EDGES_SQL}),
-    cn AS (
-      SELECT a.src AS node_a, b.src AS node_b, COUNT(*) AS n_common
-      FROM edges a JOIN edges b ON a.dst = b.dst AND a.src < b.src
-      GROUP BY 1, 2
-    ),
-    deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src)
-    SELECT cn.node_a, cn.node_b, CAST(cn.n_common AS BIGINT) AS n_common,
-           CAST(ROUND(cn.n_common * 1.0
-             / (da.deg + db.deg - cn.n_common), 4) AS DOUBLE) AS jaccard
-    FROM cn
-    JOIN deg da ON da.src = cn.node_a
-    JOIN deg db ON db.src = cn.node_b
-    WHERE cn.n_common >= 2
-    """,
-)
-def graph_common_neighbors(spark, sf_dir):
-    """Common-neighbors link prediction over the synthetic link graph:
-    node pairs sharing ≥2 out-neighbors, scored by neighborhood
-    Jaccard — the classic "you may also like" / related-documents
-    primitive, and the third graph operator next to PageRank and
-    triangle counting.
-
-    Plan: ONE self-equi-join of the edge list on dst (cost: Σ
-    in-degree² — the graph analog of the shingle join, never n²),
-    then two broadcast-sized degree joins. At 100 TB the in-degree
-    skew (celebrity nodes) is the hazard; AQE skew-join splits those
-    dst partitions."""
-    _, edges = _graph_edges(spark, sf_dir)
-    a = edges.alias("a")
-    b = edges.alias("b")
-    cn = (
-        a.join(
-            b,
-            (F.col("a.dst") == F.col("b.dst"))
-            & (F.col("a.src") < F.col("b.src")),
-        )
-        .groupBy(
-            F.col("a.src").alias("node_a"), F.col("b.src").alias("node_b")
-        )
-        .agg(F.count("*").alias("n_common"))
-        .filter(F.col("n_common") >= 2)
-    )
-    deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    return (
-        cn.join(
-            F.broadcast(deg.select(F.col("src").alias("node_a"), F.col("deg").alias("da"))),
-            "node_a",
-        )
-        .join(
-            F.broadcast(deg.select(F.col("src").alias("node_b"), F.col("deg").alias("db"))),
-            "node_b",
-        )
-        .select(
-            "node_a",
-            "node_b",
-            F.col("n_common").cast("long").alias("n_common"),
-            F.round(
-                F.col("n_common")
-                / (F.col("da") + F.col("db") - F.col("n_common")),
-                4,
-            )
-            .cast("double")
-            .alias("jaccard"),
-        )
     )
 
 

@@ -1,7 +1,7 @@
-"""Checkpoint-posture tests.
+"""Checkpoint-posture and fixpoint-kernel tests.
 
 Pins the two claims the iterative operators' lazy localCheckpoints
-rest on:
+rest on, and the convergence test of :func:`graph.iterate`:
 
 1. **Once-per-round execution**: a lazy checkpoint dedupes its
    downstream references — each round's plan executes exactly once
@@ -14,15 +14,22 @@ rest on:
    :func:`graph.truncate_lineage` routes to reliable ``checkpoint()``,
    every iterative query truncates through it (the checkpoint dir is
    written), and the queries produce identical values.
+3. **Convergence on the checkpoint job**: ``iterate(changed=...)``
+   stops at the first round that changes nothing, in both postures,
+   with the values of a fixed-round run; a lazy round cannot carry
+   the test.
 """
 
 from __future__ import annotations
+
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from caliper_poc_data_etl_spark.graph import truncate_lineage
+from caliper_poc_data_etl_spark import graph
+from caliper_poc_data_etl_spark.graph import connected_components, iterate, truncate_lineage
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -107,7 +114,77 @@ def test_truncate_lineage_reliable_mode_value_identical(spark, tmp_path):
     assert ck_files, "reliable mode must write to the checkpoint dir"
 
 
+@pytest.fixture(params=["local", "reliable"])
+def posture(request, spark, tmp_path):
+    if request.param == "reliable":
+        spark.sparkContext.setCheckpointDir(str(tmp_path / "ck"))
+        spark.conf.set("spark.graft.checkpoint.reliable", "true")
+    try:
+        yield request.param
+    finally:
+        spark.conf.set("spark.graft.checkpoint.reliable", "false")
+        spark.catalog.clearCache()
+
+
+def _cc_chain(spark, monkeypatch, fixed_rounds=None):
+    """Connected components of the 6-node chain 0-1-...-5 with
+    ``max_iter=20``; returns (sorted labels, rounds run, jobs started
+    by the build). ``fixed_rounds`` drops the convergence test and
+    runs that many rounds."""
+    rounds = []
+
+    def counted(step, state, n, *, changed=None, eager=True):
+        def step_(s, r):
+            rounds.append(r)
+            return step(s, r)
+
+        if fixed_rounds is not None:
+            return iterate(step_, state, fixed_rounds, eager=eager)
+        return iterate(step_, state, n, changed=changed, eager=eager)
+
+    monkeypatch.setattr(graph, "iterate", counted)
+    sc = spark.sparkContext
+    group = f"cc-chain-{uuid.uuid4().hex}"
+    nodes = spark.createDataFrame([(i,) for i in range(6)], "node long")
+    chain = spark.createDataFrame([(i, i + 1) for i in range(5)], "src long, dst long")
+    sc.setJobGroup(group, "connected_components build")
+    try:
+        labels = connected_components(nodes, chain, max_iter=20)
+    finally:
+        sc._jsc.clearJobGroup()
+    # the status tracker is fed by the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return sorted(tuple(r) for r in labels.collect()), len(rounds), jobs
+
+
+def test_cc_stops_on_its_checkpoint_job(spark, posture, monkeypatch):
+    """Label 0 needs 5 rounds to reach node 5, and the 6th changes
+    nothing: the loop stops there instead of running all 20, with the
+    labels of a fixed 20-round run. The test rides each round's
+    checkpoint job: the build starts exactly the jobs of 6 fixed
+    rounds, where a driver-side ``collect()`` per round would add
+    jobs."""
+    got, rounds, jobs = _cc_chain(spark, monkeypatch)
+    want, all_rounds, _ = _cc_chain(spark, monkeypatch, fixed_rounds=20)
+    _, _, six_jobs = _cc_chain(spark, monkeypatch, fixed_rounds=6)
+    assert rounds == 6
+    assert all_rounds == 20
+    assert got == want == [(i, 0) for i in range(6)]
+    assert jobs == six_jobs
+
+
+def test_iterate_refuses_a_lazy_convergence_test(spark):
+    """A lazy checkpoint completes its Observation empty, so the
+    kernel must refuse the combination rather than read it."""
+    df = spark.range(3)
+    with pytest.raises(ValueError):
+        iterate(lambda s, r: s, df, 2, changed=F.col("id") > 0, eager=False)
+
+
 ITERATIVE_QUERIES = [
+    "dedup_cluster_cc",
+    "embed_kmeans_assign",
     "er_phonetic_cluster_cc",
     "graph_pagerank",
     "graph_sssp_bellman_ford",

@@ -100,3 +100,14 @@ def test_rule_flags_a_count_beside_the_rank(df, by):
     assert "WindowGroupLimit" not in plan
     assert "TakeOrderedAndProject" not in plan
     assert len(unlimited_rank_filters(plan)) == 1
+
+
+def test_kmv_sketch_plans_a_group_limit(spark, sf_dir):
+    """``agg_kmv_distinct_sketch`` keeps K hashes per group before the
+    shuffle: its distinct count comes from a groupBy, not from a count
+    window beside the rank."""
+    from caliper_poc_data_etl_spark.queries import QUERIES
+
+    plan = _executed_plan(QUERIES["agg_kmv_distinct_sketch"].spark(spark, sf_dir))
+    assert "WindowGroupLimit" in plan
+    assert unlimited_rank_filters(plan) == []

@@ -160,12 +160,11 @@ EXPECTED_NLJ |= EXPECTED_SCALAR_BNLJ
 # limit, each with the reason. Empty: every such filter gets one.
 UNLIMITED_RANK_FILTER: dict[str, str] = {}
 
-# Driver-action carve-out (documented, not flagged here): the ONLY
-# iterative collect() in the engine is connected_components'
-# per-iteration convergence scalar (graph.py) — a fixed-point loop
-# must observe convergence on the driver, and the payload is one
-# aggregated row. pagerank (fixed iteration count) runs with zero
-# driver scalars; anything else pulling rows per iteration is a bug.
+# Driver actions (documented, not flagged here): the engine has no
+# iterative collect(). Every round loop runs through graph.iterate, and
+# connected_components' convergence test is an Observation filled by
+# each round's own checkpoint job; anything pulling rows to the driver
+# per iteration is a bug.
 
 
 _NODE_START = re.compile(r"[^ :|+-]")
