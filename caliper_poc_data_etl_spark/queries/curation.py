@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from caliper_poc_data_etl_spark.queries.dedup import _NGRAM_ORACLE, dedup_ngram_jaccard
-from caliper_poc_data_etl_spark.queries.kernels import _TS_FMT_DUCK, _TS_FMT_SPARK, topk
+from caliper_poc_data_etl_spark.queries.kernels import _TS_FMT_DUCK, _TS_FMT_SPARK, md5_int, topk
 from caliper_poc_data_etl_spark.queries.registry import query, t
 
 # Parenthesized (group 1) so regexp_extract_all's default group works
@@ -446,8 +446,8 @@ def sample_bernoulli_hash(spark, sf_dir):
     seed to ship. The standard down-sampling primitive for corpus
     recipes and eval carve-outs."""
     d = t(spark, sf_dir, "documents")
-    h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-    return d.filter(h.cast("long") % 100 < 10).select("doc_id", "source")
+    h = md5_int(F.col("doc_id").cast("string"), 8)
+    return d.filter(h % 100 < 10).select("doc_id", "source")
 
 
 @query(
@@ -827,7 +827,7 @@ def dq_table_checksum(spark, sf_dir):
         F.date_format("o_orderdate", "yyyy-MM-dd"),
         F.col("o_orderpriority"),
     )
-    h = F.conv(F.substring(F.md5(row), 1, 15), 16, 10).cast("long")
+    h = md5_int(row, 15)
     return (
         o.select("o_orderstatus", h.alias("h"))
         .groupBy("o_orderstatus")
@@ -884,21 +884,14 @@ def sample_sequential_poisson(spark, sf_dir):
     ``ORDER BY rand() LIMIT N`` (non-reproducible, full sort) in
     production pipelines."""
     li = t(spark, sf_dir, "lineitem")
-    hv = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "-",
-                    F.col("l_orderkey").cast("string"),
-                    F.col("l_linenumber").cast("string"),
-                )
-            ),
-            1,
-            15,
+    hv = md5_int(
+        F.concat_ws(
+            "-",
+            F.col("l_orderkey").cast("string"),
+            F.col("l_linenumber").cast("string"),
         ),
-        16,
-        10,
-    ).cast("long")
+        15,
+    )
     keyed = li.select(
         "l_orderkey",
         F.col("l_linenumber").cast("int").alias("l_linenumber"),
@@ -2079,12 +2072,7 @@ def dq_ab_srm_check(spark, sf_dir):
     invalid. Plan: one distinct-projection, one groupBy per scope
     branch — integer end-to-end."""
     e = t(spark, sf_dir, "events")
-    is_a = (
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 10), 16, 10)
-        .cast("long")
-        % 100
-        < 50
-    ).cast("int")
+    is_a = (md5_int(F.col("user_id").cast("string"), 10) % 100 < 50).cast("int")
     per_type = (
         e.select("event_type", "user_id")
         .distinct()
@@ -2582,14 +2570,7 @@ def sample_weighted_reservoir(spark, sf_dir):
         F.size(F.split(F.trim(F.col("text")), "\\s+"))
         .cast("long")
         .alias("weight"),
-        (
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 13),
-                16,
-                10,
-            ).cast("long")
-            + 1
-        ).alias("u52"),
+        (md5_int(F.col("doc_id").cast("string"), 13) + 1).alias("u52"),
     )
     pr = wdocs.select(
         "*",
@@ -2723,14 +2704,7 @@ def sample_weighted_reservoir_per_source(spark, sf_dir):
         F.size(F.split(F.trim(F.col("text")), "\\s+"))
         .cast("long")
         .alias("weight"),
-        (
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 13),
-                16,
-                10,
-            ).cast("long")
-            + 1
-        ).alias("u52"),
+        (md5_int(F.col("doc_id").cast("string"), 13) + 1).alias("u52"),
     )
     pr = wdocs.select(
         "*",
@@ -2870,10 +2844,7 @@ def mix_importance_select(spark, sf_dir):
     Max ratio is 1e6 and scores are Σ n_toks·1e6, far inside BIGINT
     at any corpus scale."""
     d = t(spark, sf_dir, "documents")
-    fid = (
-        F.conv(F.substring(F.md5(F.col("tok")), 1, 13), 16, 10).cast("long")
-        % DSIR_BUCKETS
-    )
+    fid = md5_int(F.col("tok"), 13) % DSIR_BUCKETS
     toks = d.select(
         "doc_id",
         "lang",

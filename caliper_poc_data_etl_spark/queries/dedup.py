@@ -13,8 +13,9 @@ Five dedup families over ``documents`` / ``embeddings``:
 Scale posture: the exact-pairwise paths shuffle on shingle (bounded by
 posting-list sizes); the 100 TB path is MinHash/SimHash banding where
 candidate generation is a single groupBy on band keys — no quadratic
-blowup. Signatures are computed as K aggregate columns (no ×K row
-explosion).
+blowup. MinHash signatures are per-row ``array_min(transform(...))``
+expressions (no ×K row explosion); SimHash fingerprints are per-document
+vote aggregates.
 """
 
 from __future__ import annotations
@@ -22,7 +23,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window as W
 
-from caliper_poc_data_etl_spark.queries.kernels import dot, dot_sql, topk
+from caliper_poc_data_etl_spark.queries.kernels import (
+    bucket_pairs,
+    dot,
+    flip_probes,
+    md5_int,
+    sign_bits,
+    topk,
+    word_trigrams,
+)
 from caliper_poc_data_etl_spark.queries.registry import query, t
 
 JACCARD_THRESHOLD = 0.8
@@ -114,21 +123,11 @@ def _doc_shingle_sets(d: DataFrame) -> DataFrame:
     access (O(tokens²) regex work per row — measured 10×+ slowdown).
     CollapseProject keeps the materialized alias because it is
     referenced multiple times by non-cheap expressions."""
-    toks = F.col("toks")
-    shingles = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - 2),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(toks, i),
-            F.element_at(toks, i + 1),
-            F.element_at(toks, i + 2),
-        ),
-    )
     return (
         _spread(d)
         .select("doc_id", F.split(F.trim(F.col("text")), "\\s+").alias("toks"))
-        .filter(F.size(toks) >= 3)
-        .select("doc_id", F.array_distinct(shingles).alias("shset"))
+        .filter(F.size("toks") >= 3)
+        .select("doc_id", F.array_distinct(word_trigrams("toks")).alias("shset"))
     )
 
 
@@ -207,7 +206,9 @@ def dedup_ngram_jaccard(spark, sf_dir):
 def _minhash_coeffs() -> list[tuple[int, int]]:
     """The K universal-hash permutation constants, fixed-seed so every
     variant (xxhash64 production path, md5 parity path, its SQL
-    oracle) draws the same family."""
+    oracle) draws the same family. Full-range: small sequential a_i
+    make a badly correlated linear family and measurably miss
+    borderline candidates."""
     import random
 
     rng = random.Random(20260813)
@@ -215,6 +216,55 @@ def _minhash_coeffs() -> list[tuple[int, int]]:
         (rng.randrange(1, MERSENNE_P), rng.randrange(0, MERSENNE_P))
         for _ in range(MINHASH_K)
     ]
+
+
+def _md5_base(s):
+    """The parity paths' engine-agnostic base hash: 60 bits of md5."""
+    return md5_int(s, 15)
+
+
+def _minhash(sets: DataFrame, base_hash) -> DataFrame:
+    """``sets`` with its ``shset`` column replaced by ``sig``: the
+    array<bigint> MinHash signature of the shingle set.
+
+    Each shingle is hashed ONCE by ``base_hash`` (xxhash64 in
+    production, :func:`_md5_base` on the parity paths) into a
+    materialized ``harr`` column, then the K universal-hash
+    permutations ``min((a_i * h + b_i) mod p)`` (p Mersenne-31, the
+    fixed-seed :func:`_minhash_coeffs`) render as ONE parsed
+    expression of K ``array_min(transform(...))`` terms: built as
+    Column lambdas they cost ~1 s of py4j round-trips per build.
+    ``harr`` is reduced with ``pmod`` (xxhash64 can be negative), so
+    every permutation input is non-negative and ``%`` agrees with
+    ``pmod`` there.
+
+    The whole signature computation is per-row — NO explode, NO
+    shuffle. At 100 TB this is a map-only stage pipelined with the
+    scan; the first exchange in an LSH plan is the band-bucket
+    group-by, which carries one (band, key, doc_id) row per band per
+    doc, never the shingle stream."""
+    keep = [c for c in sets.columns if c != "shset"]
+    harr = F.transform("shset", lambda s: F.pmod(base_hash(s), F.lit(MERSENNE_P)))
+    sig = "array(" + ", ".join(
+        f"array_min(transform(harr, h -> ({a} * h + {b}) % {MERSENNE_P}))"
+        for a, b in _minhash_coeffs()
+    ) + ")"
+    return sets.select(*keep, harr.alias("harr")).select(
+        *keep, F.expr(sig).alias("sig")
+    )
+
+
+def _band_keys(sig: str):
+    """The MINHASH_BANDS band keys of the signature column ``sig``: each
+    band's r = K/bands components joined with ',' (the oracles'
+    :func:`_band_key_sql`), as one parsed expression."""
+    r = MINHASH_K // MINHASH_BANDS
+    return F.expr(
+        "array(" + ", ".join(
+            f"concat_ws(',', CAST(slice({sig}, {i * r + 1}, {r}) AS ARRAY<STRING>))"
+            for i in range(MINHASH_BANDS)
+        ) + ")"
+    )
 
 
 def _minhash_md5_oracle() -> str:
@@ -250,73 +300,22 @@ def dedup_minhash_md5_parity(spark, sf_dir):
     prefix → bigint), hash-match graded against a DuckDB oracle that
     recomputes the identical K-permutation signatures in SQL.
 
-    Purpose: the production path (:func:`minhash_signatures` /
-    ``dedup_minhash_lsh``) uses xxhash64, which no other engine
-    reproduces, so it can only be rows-only graded; this variant
-    proves the MinHash math itself — shingling, base hashing,
-    universal-hash permutations, per-permutation minima — value-exact
-    across engines. Same permutation constants, same shingle
-    definition; only the base hash differs (md5 costs ~3× xxhash64,
-    which is why it is the parity path, not the production one).
+    Purpose: the production path (``dedup_minhash_lsh``) uses xxhash64,
+    which no other engine reproduces, so it can only be rows-only
+    graded; this variant proves the MinHash math itself — shingling,
+    base hashing, universal-hash permutations, per-permutation minima —
+    value-exact across engines. Both run :func:`_minhash`; only the base
+    hash differs (md5 costs ~3× xxhash64, which is why it is the parity
+    path, not the production one).
 
     The signature is emitted as a comma-joined STRING, not
     ``array<bigint>``: the grading driver canonicalizes results via
     pandas ``sort_values``, which cannot hash list cells (graded
     outputs must be scalar-typed on every column)."""
-    sets = _doc_shingle_sets(t(spark, sf_dir, "documents")).select(
-        "doc_id",
-        F.transform(
-            "shset",
-            lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-            % MERSENNE_P,
-        ).alias("harr"),
+    sigs = _minhash(_doc_shingle_sets(t(spark, sf_dir, "documents")), _md5_base)
+    return sigs.select(
+        "doc_id", F.concat_ws(",", F.col("sig").cast("array<string>")).alias("sig")
     )
-    # K permutation minima rendered as ONE parsed expression (build-cost
-    # fix; same Remainder arithmetic the Column loop built).
-    mins = [
-        f"array_min(transform(harr, h -> ({a} * h + {b}) % {MERSENNE_P}))"
-        for a, b in _minhash_coeffs()
-    ]
-    return sets.select(
-        "doc_id",
-        F.expr(
-            "concat_ws(',', " + ", ".join(f"CAST({m} AS STRING)" for m in mins) + ")"
-        ).alias("sig"),
-    )
-
-
-def minhash_signatures(spark, sf_dir) -> DataFrame:
-    """(doc_id, sig: array<bigint>) MinHash signatures.
-
-    Shingle set (per-row) → 64-bit hash per shingle (hashed ONCE into
-    a materialized ``harr`` column, not once per permutation) → K
-    universal-hash permutations ``min((a_i * h + b_i) mod p)`` as K
-    ``array_min(transform(...))`` expressions (p Mersenne-31; fixed
-    seed so runs are deterministic).
-
-    The whole signature computation is per-row — NO explode, NO
-    shuffle. At 100 TB this is a map-only stage pipelined with the
-    scan; the first exchange in the LSH plan is the band-bucket
-    group-by, which carries one (band, hash, doc_id) row per band per
-    doc, never the shingle stream.
-    """
-    sets = _doc_shingle_sets(t(spark, sf_dir, "documents")).select(
-        "doc_id",
-        F.transform(
-            "shset", lambda s: F.pmod(F.xxhash64(s), F.lit(MERSENNE_P))
-        ).alias("harr"),
-    )
-    # Full-range random coefficients (fixed seed → deterministic runs;
-    # _minhash_coeffs draws the identical sequence the inline loop
-    # did): small sequential a_i make a badly correlated linear family
-    # and measurably miss borderline candidates. The K minima render
-    # as ONE parsed expression — the 32-lambda Column loop cost ~1 s
-    # of py4j round-trips per build (value-identical pmod tree).
-    sig_sql = "array(" + ", ".join(
-        f"array_min(transform(harr, h -> pmod({a} * h + {b}, {MERSENNE_P})))"
-        for a, b in _minhash_coeffs()
-    ) + ")"
-    return sets.select("doc_id", F.expr(sig_sql).alias("sig"))
 
 
 @query("dedup_minhash_lsh", oracle=None)  # engine-specific hashing → rows-only
@@ -325,103 +324,64 @@ def dedup_minhash_lsh(spark, sf_dir):
     exact-Jaccard verification of candidates only.
 
     The 100 TB path: candidates come from a groupBy on (band, band
-    hash) — cost scales with bucket collisions, not n². Verification
-    re-joins only candidate pairs. Tests assert recall ≥ 0.9 vs the
-    exact `dedup_ngram_jaccard` result at this threshold."""
-    sig = minhash_signatures(spark, sf_dir)
-    r = MINHASH_K // MINHASH_BANDS
-    bands = sig.select(
+    hash) — cost scales with bucket collisions, not n². Each band key
+    is hashed to 8 bytes for that shuffle. Verification re-joins only
+    candidate pairs. Tests assert recall ≥ 0.9 vs the exact
+    `dedup_ngram_jaccard` result at this threshold."""
+    sets = _doc_shingle_sets(t(spark, sf_dir, "documents"))
+    bands = _minhash(sets, F.xxhash64).select(
         "doc_id",
-        F.posexplode(
-            F.expr(
-                "array(" + ", ".join(
-                    f"xxhash64(CAST(CAST(slice(sig, {i * r + 1}, {r}) "
-                    "AS ARRAY<STRING>) AS STRING))"
-                    for i in range(MINHASH_BANDS)
-                ) + ")"
-            )
-        ).alias("band", "band_hash"),
-    )
-    # Candidate pairs from bucket membership lists — ONE aggregation,
-    # no self-join (a self-join would recompute the whole signature
-    # pipeline on both sides). Pairs are generated inside each bucket
-    # array; cost scales with Σ bucket² (LSH's intrinsic cost), and a
-    # degenerate all-identical corpus is the only case where a single
-    # bucket array gets large.
-    buckets = (
-        bands.groupBy("band", "band_hash")
-        .agg(F.array_sort(F.collect_set("doc_id")).alias("docs"))
-        .filter(F.size("docs") >= 2)
-    )
-    docs = F.col("docs")
-    pair_arrays = F.transform(
-        docs,
-        lambda x, i: F.transform(
-            F.slice(docs, i + 2, F.size(docs)),
-            lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
+        F.posexplode(F.transform(_band_keys("sig"), lambda k: F.xxhash64(k))).alias(
+            "band", "band_hash"
         ),
     )
-    candidates = (
-        buckets.select(F.explode(F.flatten(pair_arrays)).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
+    candidates = bucket_pairs(bands, ["band", "band_hash"], "doc_id")
     # Exact verification restricted to candidates: per-doc shingle SETS
     # (bounded by document length, computed per-row with no shuffle)
     # + array_intersect per pair.
-    sets = _doc_shingle_sets(t(spark, sf_dir, "documents"))
     pairs = candidates.join(
-        sets.select(F.col("doc_id").alias("doc_a"), F.col("shset").alias("sh_a")),
-        "doc_a",
+        sets.select(F.col("doc_id").alias("a"), F.col("shset").alias("sh_a")), "a"
     ).join(
-        sets.select(F.col("doc_id").alias("doc_b"), F.col("shset").alias("sh_b")),
-        "doc_b",
+        sets.select(F.col("doc_id").alias("b"), F.col("shset").alias("sh_b")), "b"
     )
     i = F.size(F.array_intersect("sh_a", "sh_b"))
     jacc = i / (F.size("sh_a") + F.size("sh_b") - i)
-    return (
-        pairs.filter(jacc >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jacc, 4).alias("jaccard"))
+    return pairs.filter(jacc >= JACCARD_THRESHOLD).select(
+        F.col("a").alias("doc_a"),
+        F.col("b").alias("doc_b"),
+        F.round(jacc, 4).alias("jaccard"),
     )
 
 
-def simhash_fingerprints(d: DataFrame) -> DataFrame:
-    """(doc_id, simhash): 64-bit SimHash of the token multiset.
+def simhash_fingerprints(d: DataFrame, base_hash, bits: int) -> DataFrame:
+    """(doc_id, simhash): ``bits``-bit SimHash of the token multiset,
+    each token hashed by ``base_hash`` (xxhash64 with 64 bits in
+    production; :func:`_md5_base` with its 60 bits on the parity path).
 
     Per bit k: vote = #tokens with bit k set minus #tokens with it
     clear; bit k of the fingerprint = (vote > 0). Formulated as
-    explode(token hash) → hash aggregate with 64 SUM(±1) columns —
-    the same partial-aggregate shape as MinHash, which codegen
-    compiles an order of magnitude faster than 64 per-row array-filter
-    lambdas (measured 16 s → ~2 s at sf0.01). Map-side partial
-    aggregation means the shuffle carries one 64-column row per doc
-    per partition, not the token stream."""
+    explode(token hash) → hash aggregate with one SUM(±1) column per
+    bit, which codegen compiles an order of magnitude faster than
+    per-row array-filter lambdas (measured 16 s → ~2 s at sf0.01).
+    Map-side partial aggregation means the shuffle carries one row per
+    doc per partition, not the token stream. The votes and the bit
+    pack render as SQL strings — one py4j round-trip each instead of
+    ~6 per Column chain."""
     toks = (
         _spread(d)
         .select("doc_id", F.split(F.trim(F.col("text")), "\\s+").alias("toks"))
         .select("doc_id", F.explode("toks").alias("tok"))
-        .select("doc_id", F.xxhash64("tok").alias("h"))
+        .select("doc_id", base_hash(F.col("tok")).alias("h"))
     )
-    # Parsed-expression builders (the similarity.py recipe): the 64
-    # vote aggregates and the 64-bit pack render as SQL strings — one
-    # py4j round-trip each instead of ~6 per Column chain (~1100 total;
-    # the build cost is paid per bench trial / correctness run). The
-    # parsed trees are the same operators (CASE WHEN / & / <<), so the
-    # values are bit-identical.
     votes = [
         F.expr(
             f"sum(CASE WHEN (h & (CAST(1 AS BIGINT) << {k})) != 0 "
             "THEN 1 ELSE -1 END)"
         ).alias(f"v_{k}")
-        for k in range(64)
+        for k in range(bits)
     ]
-    voted = toks.groupBy("doc_id").agg(*votes)
-    fingerprint = " | ".join(
-        f"(CAST(CASE WHEN v_{k} > 0 THEN 1 ELSE 0 END AS BIGINT) << {k})"
-        for k in range(64)
-    )
-    return voted.select(
-        "doc_id", F.expr(f"CAST(({fingerprint}) AS BIGINT)").alias("simhash")
+    return toks.groupBy("doc_id").agg(*votes).select(
+        "doc_id", sign_bits([f"v_{k} > 0" for k in range(bits)]).alias("simhash")
     )
 
 
@@ -452,37 +412,11 @@ def dedup_simhash_md5_parity(spark, sf_dir):
     """SimHash fingerprints with the engine-agnostic md5 base hash
     (60-bit), hash-match graded against a DuckDB oracle recomputing
     the identical per-bit votes in SQL — parity evidence for the
-    SimHash mechanism itself (same vote/threshold/bit-pack math as the
-    xxhash64 production path in :func:`simhash_fingerprints`, which
-    stays rows-only because no other engine reproduces xxhash64)."""
-    d = t(spark, sf_dir, "documents")
-    toks = (
-        _spread(d)
-        .select("doc_id", F.split(F.trim(F.col("text")), "\\s+").alias("toks"))
-        .select("doc_id", F.explode("toks").alias("tok"))
-        .select(
-            "doc_id",
-            (
-                F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long")
-            ).alias("h"),
-        )
-    )
-    # Parsed-expression builders, as in :func:`simhash_fingerprints`
-    # (same operators after parsing — hash-graded values unchanged).
-    votes = [
-        F.expr(
-            f"sum(CASE WHEN (h & (CAST(1 AS BIGINT) << {k})) != 0 "
-            "THEN 1 ELSE -1 END)"
-        ).alias(f"v_{k}")
-        for k in range(_SIMHASH_MD5_BITS)
-    ]
-    voted = toks.groupBy("doc_id").agg(*votes)
-    fingerprint = " + ".join(
-        f"(CAST(CASE WHEN v_{k} > 0 THEN 1 ELSE 0 END AS BIGINT) << {k})"
-        for k in range(_SIMHASH_MD5_BITS)
-    )
-    return voted.select(
-        "doc_id", F.expr(f"CAST(({fingerprint}) AS BIGINT)").alias("simhash")
+    SimHash mechanism itself (:func:`simhash_fingerprints`, whose
+    xxhash64 production path stays rows-only because no other engine
+    reproduces xxhash64)."""
+    return simhash_fingerprints(
+        t(spark, sf_dir, "documents"), _md5_base, _SIMHASH_MD5_BITS
     )
 
 
@@ -491,7 +425,7 @@ def dedup_simhash(spark, sf_dir):
     """SimHash near-dup: 64-bit fingerprints, banded into 4×16-bit
     chunks (guarantees candidate coverage for Hamming distance ≤ 3),
     verified with bit_count(xor) ≤ 3."""
-    d = simhash_fingerprints(t(spark, sf_dir, "documents"))
+    d = simhash_fingerprints(t(spark, sf_dir, "documents"), F.xxhash64, 64)
     chunks = d.select(
         "doc_id",
         "simhash",
@@ -505,37 +439,18 @@ def dedup_simhash(spark, sf_dir):
             )
         ).alias("chunk_idx", "chunk"),
     )
-    # Bucket by chunk and pair up inside each bucket array (one
-    # aggregation — a self-join would recompute the fingerprint
-    # pipeline on both sides). The fingerprint rides along in the
-    # bucket so Hamming verification needs no re-join.
-    buckets = (
-        chunks.groupBy("chunk_idx", "chunk")
-        .agg(
-            F.array_sort(
-                F.collect_set(F.struct(F.col("doc_id"), F.col("simhash")))
-            ).alias("docs")
-        )
-        .filter(F.size("docs") >= 2)
+    # The fingerprint rides along in the bucket members, so Hamming
+    # verification needs no re-join.
+    pairs = bucket_pairs(
+        chunks, ["chunk_idx", "chunk"], F.struct("doc_id", "simhash")
     )
-    docs = F.col("docs")
-    pair_arrays = F.transform(
-        docs,
-        lambda x, i: F.transform(
-            F.slice(docs, i + 2, F.size(docs)),
-            lambda y: F.struct(
-                x["doc_id"].alias("doc_a"),
-                y["doc_id"].alias("doc_b"),
-                F.bit_count(x["simhash"].bitwiseXOR(y["simhash"])).alias("hamming"),
-            ),
+    return pairs.select(
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+        F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias(
+            "hamming"
         ),
-    )
-    return (
-        buckets.select(F.explode(F.flatten(pair_arrays)).alias("p"))
-        .select("p.doc_a", "p.doc_b", "p.hamming")
-        .distinct()
-        .filter(F.col("hamming") <= 3)
-    )
+    ).filter(F.col("hamming") <= 3)
 
 
 @query(
@@ -630,18 +545,11 @@ def dedup_embedding_lsh(spark, sf_dir):
     # Multi-probe: register each vector under its bucket and the
     # N_HYPERPLANES 1-bit flips; a pair collides if any probe bucket
     # matches the other's home bucket.
-    probes = F.array(
-        F.col("bucket"),
-        *[
-            F.col("bucket").bitwiseXOR(F.lit(1 << i).cast("long"))
-            for i in range(N_HYPERPLANES)
-        ],
-    )
     a = base.select(
         F.col("vec_id").alias("vec_a"),
         F.col("embedding").alias("emb_a"),
         F.col("norm").alias("norm_a"),
-        F.explode(probes).alias("probe"),
+        F.explode(flip_probes("bucket", N_HYPERPLANES)).alias("probe"),
     )
     b = base.select(
         F.col("vec_id").alias("vec_b"),
@@ -767,7 +675,10 @@ def text_dedup_prefix_key(spark, sf_dir):
 
 
 def _emb_lsh_candidate_oracle() -> str:
-    from caliper_poc_data_etl_spark.queries.similarity import _hyperplanes
+    from caliper_poc_data_etl_spark.queries.similarity import (
+        N_HYPERPLANES,
+        _hyperplanes,
+    )
 
     planes = " + ".join(
         "(CASE WHEN list_dot_product(qv, "
@@ -785,7 +696,7 @@ def _emb_lsh_candidate_oracle() -> str:
       SELECT vec_id, {planes} AS bucket FROM base
     ), probes AS (
       SELECT vec_id,
-             unnest([bucket] || list_transform(range(0, 8),
+             unnest([bucket] || list_transform(range(0, {N_HYPERPLANES}),
                     i -> xor(bucket, CAST(1 << i AS BIGINT)))) AS probe
       FROM b
     )
@@ -808,29 +719,21 @@ def dedup_embedding_lsh_candidate_parity(spark, sf_dir):
     same hyperplane family, same bit packing). The production path
     adds only the float cosine verification on top, which the
     subset-of-exact pytest covers."""
-    from caliper_poc_data_etl_spark.queries.similarity import _hp_sql, _hyperplanes
+    from caliper_poc_data_etl_spark.queries.similarity import (
+        N_HYPERPLANES,
+        lsh_bucket_column,
+    )
 
     e = t(spark, sf_dir, "embeddings")
     qv = F.transform(
         "embedding", lambda x: F.round(x.cast("double") * 1000).cast("double")
     )
-    base = e.select("vec_id", qv.alias("qv"))
-    # One parsed expression for the whole bit pack (build-cost fix;
-    # same shifted-CASE sum the Column loop built, value-identical).
-    bucket = F.expr(
-        " + ".join(
-            f"(CAST(CASE WHEN {dot_sql('qv', _hp_sql(hp))} > 0 "
-            f"THEN 1 ELSE 0 END AS BIGINT) << {i})"
-            for i, hp in enumerate(_hyperplanes())
-        )
-    )
-    b = base.select("vec_id", bucket.alias("bucket"))
-    probes = F.array(
-        F.col("bucket"),
-        *[F.col("bucket").bitwiseXOR(F.lit(1 << i).cast("long")) for i in range(8)],
+    b = e.select("vec_id", qv.alias("qv")).select(
+        "vec_id", lsh_bucket_column("qv").alias("bucket")
     )
     p = b.select(
-        F.col("vec_id").alias("vec_a"), F.explode(probes).alias("probe")
+        F.col("vec_id").alias("vec_a"),
+        F.explode(flip_probes("bucket", N_HYPERPLANES)).alias("probe"),
     )
     h = b.select(F.col("vec_id").alias("vec_b"), F.col("bucket").alias("home"))
     return (
@@ -912,23 +815,7 @@ def dedup_minhash_jaccard_estimate(spark, sf_dir):
     32-vectors. The oracle recomputes the identical md5-based
     signatures in SQL, so est_j — not just exact_j — hash-matches."""
     sets = _doc_shingle_sets(t(spark, sf_dir, "documents"))
-    sigs = sets.select(
-        "doc_id",
-        F.transform(
-            "shset",
-            lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-            % MERSENNE_P,
-        ).alias("harr"),
-    )
-    sigs = sigs.select(
-        "doc_id",
-        F.expr(
-            "array(" + ", ".join(
-                f"array_min(transform(harr, h -> ({a} * h + {b}) % {MERSENNE_P}))"
-                for a, b in _minhash_coeffs()
-            ) + ")"
-        ).alias("sig"),
-    )
+    sigs = _minhash(sets, _md5_base)
     sh = sets.select(
         "doc_id", F.size("shset").alias("n"), F.explode("shset").alias("shingle")
     )
@@ -1146,14 +1033,7 @@ def decontam_bloom_ngram(spark, sf_dir):
     def positions(col):
         return F.array(
             *[
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit(str(i)), F.lit(":"), col)), 1, 15
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % _DBL_BITS
+                md5_int(F.concat(F.lit(str(i)), F.lit(":"), col), 15) % _DBL_BITS
                 for i in range(_DBL_K)
             ]
         )
@@ -1570,56 +1450,11 @@ def dedup_minhash_recall_vs_exact(spark, sf_dir):
     sets = _doc_shingle_sets(reps.select("doc_id", "text")).join(
         reps.select("doc_id", "c"), "doc_id"
     ).persist()
-    h = sets.select(
-        "doc_id",
-        F.transform(
-            "shset",
-            lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast(
-                "long"
-            )
-            % MERSENNE_P,
-        ).alias("harr"),
+    bands = _minhash(sets, _md5_base).select(
+        "doc_id", F.posexplode(_band_keys("sig")).alias("band", "bkey")
     )
-    harr = F.col("harr")
-    mins = [
-        F.array_min(F.transform(harr, lambda x: (a * x + b) % MERSENNE_P))
-        for a, b in _minhash_coeffs()
-    ]
-    sigs = h.select("doc_id", F.array(*mins).alias("sig"))
-    r = MINHASH_K // MINHASH_BANDS
-    band_keys = F.array(
-        *[
-            F.concat_ws(
-                ",",
-                *[
-                    F.col("sig").getItem(i * r + j).cast("string")
-                    for j in range(r)
-                ],
-            )
-            for i in range(MINHASH_BANDS)
-        ]
-    )
-    bands = sigs.select(
-        "doc_id", F.posexplode(band_keys).alias("band", "bkey")
-    )
-    buckets = (
-        bands.groupBy("band", "bkey")
-        .agg(F.array_sort(F.collect_set("doc_id")).alias("docs"))
-        .filter(F.size("docs") >= 2)
-    )
-    docs = F.col("docs")
-    pair_arrays = F.transform(
-        docs,
-        lambda x, i: F.transform(
-            F.slice(docs, i + 2, F.size(docs)),
-            lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-        ),
-    )
-    cand = (
-        buckets.select(F.explode(F.flatten(pair_arrays)).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-        .withColumn("hit", F.lit(1))
+    cand = bucket_pairs(bands, ["band", "bkey"], "doc_id").select(
+        F.col("a").alias("doc_a"), F.col("b").alias("doc_b"), F.lit(1).alias("hit")
     )
     ex = sets.select("doc_id", F.explode("shset").alias("shingle"))
     sizes = sets.select("doc_id", F.size("shset").alias("n"), "c")
@@ -1780,38 +1615,8 @@ def decontam_minhash_crosscorpus(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
     flagged_side = F.col("doc_id") % DECONTAM_EVAL_MOD == 0
     sets = _doc_shingle_sets(d).withColumn("is_eval", flagged_side)
-    h = sets.select(
-        "doc_id",
-        "is_eval",
-        F.transform(
-            "shset",
-            lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast(
-                "long"
-            )
-            % MERSENNE_P,
-        ).alias("harr"),
-    )
-    harr = F.col("harr")
-    mins = [
-        F.array_min(F.transform(harr, lambda x: (a * x + b) % MERSENNE_P))
-        for a, b in _minhash_coeffs()
-    ]
-    sigs = h.select("doc_id", "is_eval", F.array(*mins).alias("sig"))
-    r = MINHASH_K // MINHASH_BANDS
-    band_keys = F.array(
-        *[
-            F.concat_ws(
-                ",",
-                *[
-                    F.col("sig").getItem(i * r + j).cast("string")
-                    for j in range(r)
-                ],
-            )
-            for i in range(MINHASH_BANDS)
-        ]
-    )
-    bands = sigs.select(
-        "doc_id", "is_eval", F.posexplode(band_keys).alias("band", "bkey")
+    bands = _minhash(sets, _md5_base).select(
+        "doc_id", "is_eval", F.posexplode(_band_keys("sig")).alias("band", "bkey")
     )
     ev = bands.filter(F.col("is_eval")).select(
         F.col("doc_id").alias("eval_id"), "band", "bkey"
@@ -2377,11 +2182,7 @@ def dedup_cdc_chunks(spark, sf_dir):
             F.sequence(F.lit(1), F.length("text") - w + 1)
         ).alias("p"),
     )
-    h = F.conv(
-        F.substring(F.md5(F.col("text").substr(F.col("p"), F.lit(w))), 1, 8),
-        16,
-        10,
-    ).cast("long")
+    h = md5_int(F.col("text").substr(F.col("p"), F.lit(w)), 8)
     # text rides ALONG both branches (cut rows + the per-doc sentinel)
     # so chunk substrings never re-join the corpus — a shared-lineage
     # re-join of `d` here resolved ambiguously under AQE and silently

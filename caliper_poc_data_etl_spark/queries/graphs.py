@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window as W
 
 from caliper_poc_data_etl_spark.graph import iterate, pagerank, truncate_lineage
-from caliper_poc_data_etl_spark.queries.kernels import topk
+from caliper_poc_data_etl_spark.queries.kernels import md5_int, topk
 from caliper_poc_data_etl_spark.queries.registry import query, t
 from caliper_poc_data_etl_spark.queries.training import _BFS_EDGES_SQL
 
@@ -629,22 +629,15 @@ def graph_random_walk_deterministic(spark, sf_dir):
     )
     for s in range(1, WALK_STEPS + 1):
         pick = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "_",
-                            F.col("cur").cast("string"),
-                            F.lit(str(s)),
-                            F.col("start_id").cast("string"),
-                        )
-                    ),
-                    1,
-                    10,
+            md5_int(
+                F.concat_ws(
+                    "_",
+                    F.col("cur").cast("string"),
+                    F.lit(str(s)),
+                    F.col("start_id").cast("string"),
                 ),
-                16,
                 10,
-            ).cast("long")
+            )
             % F.col("deg")
             + 1
         )

@@ -2,7 +2,9 @@
 
 One definition per recurring idea, so twins that must agree bit for bit
 (a Column fold and its SQL rendering, an embedding quantisation and the
-integer dot products over it) cannot drift apart.
+integer dot products over it, a Spark hash and its DuckDB oracle, the
+LSH bit packs of a production path and its parity twin) cannot drift
+apart.
 """
 
 from __future__ import annotations
@@ -78,6 +80,80 @@ def fround(x):
     """Floor-rounding to 4 decimals, ``FLOOR(x * 1e4 + 0.5) / 1e4`` on the
     DuckDB side."""
     return F.floor(x * F.lit(1e4) + F.lit(0.5)) / F.lit(1e4)
+
+
+def md5_int(col, hex_digits):
+    """The engine-agnostic integer hash: the first ``hex_digits`` hex
+    digits of ``md5(col)`` as a BIGINT, non-negative up to 15 digits.
+    DuckDB's twin is ``('0x' || substr(md5(x), 1, n))::BIGINT``."""
+    return F.conv(F.substring(F.md5(col), 1, hex_digits), 16, 10).cast("long")
+
+
+def word_trigrams(toks):
+    """Word 3-grams of the token-array column named ``toks``, in order
+    and with repeats: ``tk[i] tk[i+1] tk[i+2]`` for i = 1..size-2.
+    The array needs at least 3 tokens (for 2, ``sequence(1, 0)`` counts
+    down and indexes element 0), so callers filter ``size >= 3``.
+    ``toks`` must be a materialised column: an inline ``split()`` inside
+    the lambda re-runs its regex on every element access."""
+    tk = F.col(toks)
+    return F.transform(
+        F.sequence(F.lit(1), F.size(tk) - 2),
+        lambda i: F.concat_ws(
+            " ",
+            F.element_at(tk, i),
+            F.element_at(tk, i + 1),
+            F.element_at(tk, i + 2),
+        ),
+    )
+
+
+def sign_bits(conds):
+    """Pack SQL boolean conditions into one BIGINT, condition i → bit i
+    (a 64th condition sets the sign bit), as one parsed expression:
+    one py4j round-trip however many bits. The bits are disjoint, so
+    ``|`` gives the value ``+`` would, and it cannot overflow under
+    ANSI."""
+    return F.expr(
+        " | ".join(
+            f"(CAST(CASE WHEN {c} THEN 1 ELSE 0 END AS BIGINT) << {i})"
+            for i, c in enumerate(conds)
+        )
+    )
+
+
+def flip_probes(bucket, n_bits):
+    """Multi-probe set of the BIGINT bucket column named ``bucket``: the
+    bucket, then the ``n_bits`` buckets one bit flip away from it."""
+    b = F.col(bucket)
+    return F.array(
+        b, *[b.bitwiseXOR(F.lit(1 << i).cast("long")) for i in range(n_bits)]
+    )
+
+
+def bucket_pairs(df, keys, member):
+    """Distinct ``(a, b)`` pairs, ``a < b``, of the ``member`` values
+    that share a ``keys`` bucket. One groupBy collects each bucket's
+    sorted members and every member pairs with those after it, so no
+    self-join recomputes ``df``; cost scales with Σ bucket², LSH's
+    intrinsic cost. A one-member bucket yields nothing, and a pair two
+    buckets share appears once."""
+    m = F.col("_members")
+    pairs = F.transform(
+        m,
+        lambda x, i: F.transform(
+            F.slice(m, i + 2, F.size(m)),
+            lambda y: F.struct(x.alias("a"), y.alias("b")),
+        ),
+    )
+    return (
+        df.groupBy(*keys)
+        .agg(F.array_sort(F.collect_set(member)).alias("_members"))
+        .filter(F.size(m) >= 2)
+        .select(F.explode(F.flatten(pairs)).alias("_pair"))
+        .select("_pair.a", "_pair.b")
+        .distinct()
+    )
 
 
 # Spark infers a group limit only for bounds below

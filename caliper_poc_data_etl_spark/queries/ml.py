@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from caliper_poc_data_etl_spark.queries.curation import _DRIFT_CUTOFF
-from caliper_poc_data_etl_spark.queries.kernels import fround, idot, milli, topk
+from caliper_poc_data_etl_spark.queries.kernels import fround, idot, md5_int, milli, topk
 from caliper_poc_data_etl_spark.queries.registry import query, t
 
 
@@ -613,11 +613,7 @@ def ml_kfold_assign(spark, sf_dir):
     — verified by the balance tolerance test. Plan: one projection +
     one partial-aggregating groupBy; embarrassingly parallel."""
     emb = t(spark, sf_dir, "embeddings")
-    fold = (
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 10), 16, 10)
-        .cast("long")
-        % KFOLD_K
-    )
+    fold = md5_int(F.col("vec_id").cast("string"), 10) % KFOLD_K
     return (
         emb.select(
             fold.alias("fold"), F.col("label").cast("long").alias("label"), "vec_id"
@@ -1134,15 +1130,7 @@ def ml_ab_chi2_outcome(spark, sf_dir):
         .select(
             "user_id",
             F.when(
-                F.conv(
-                    F.substring(
-                        F.md5(F.col("user_id").cast("string")), 1, 10
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % 100
-                < 50,
+                md5_int(F.col("user_id").cast("string"), 10) % 100 < 50,
                 "A",
             )
             .otherwise("B")
@@ -1366,21 +1354,12 @@ def ml_bootstrap_ci_mean(spark, sf_dir):
         .select(
             "b",
             (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                "_",
-                                F.col("b").cast("string"),
-                                F.col("i").cast("string"),
-                            )
-                        ),
-                        1,
-                        10,
+                md5_int(
+                    F.concat_ws(
+                        "_", F.col("b").cast("string"), F.col("i").cast("string")
                     ),
-                    16,
                     10,
-                ).cast("long")
+                )
                 % F.col("n")
             ).alias("pick"),
         )
@@ -2135,8 +2114,5 @@ def ml_group_kfold_assign(spark, sf_dir):
     the group-integrity and fold-coverage properties are pinned in
     pytest (the hash proves parity, not the invariant)."""
     d = t(spark, sf_dir, "documents")
-    fold = (
-        F.conv(F.substring(F.md5(F.col("source")), 1, 13), 16, 10).cast("long")
-        % GKF_K
-    )
+    fold = md5_int(F.col("source"), 13) % GKF_K
     return d.select("doc_id", "source", fold.alias("fold"))

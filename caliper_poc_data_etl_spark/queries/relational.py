@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from caliper_poc_data_etl_spark.queries.kernels import topk
+from caliper_poc_data_etl_spark.queries.kernels import md5_int, topk
 from caliper_poc_data_etl_spark.queries.registry import query, t
 
 # --------------------------------------------------------------------- scans
@@ -2836,9 +2836,7 @@ def agg_kmv_distinct_sketch(spark, sf_dir):
     the oracle twin bit-exact while demonstrating the estimator
     math."""
     e = t(spark, sf_dir, "events")
-    hv = F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 10), 16, 10).cast(
-        "long"
-    )
+    hv = md5_int(F.col("user_id").cast("string"), 10)
     h = e.select("event_type", hv.alias("hv")).distinct()
     # The sketch: each group's K smallest hashes, kept per partition
     # before the shuffle. Its largest hash is the K-th (the nd-th when
@@ -2932,9 +2930,7 @@ def agg_kmv_set_ops(spark, sf_dir):
     partial aggregate (never materializing the distinct set); the
     estimator math is unchanged."""
     e = t(spark, sf_dir, "events")
-    hv = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 10), 16, 10
-    ).cast("long")
+    hv = md5_int(F.col("user_id").cast("string"), 10)
     ha = e.filter(F.col("event_type") == KMV_A).select(hv.alias("hv")).distinct()
     hb = e.filter(F.col("event_type") == KMV_B).select(hv.alias("hv")).distinct()
     hu = ha.unionByName(hb).distinct()
@@ -4047,9 +4043,7 @@ def agg_hll_md5_parity(spark, sf_dir):
     ONE pass over the distinct frame."""
     ev = t(spark, sf_dir, "events")
     du = ev.select("event_type", "user_id").distinct()
-    h52 = F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 13), 16, 10).cast(
-        "long"
-    )
+    h52 = md5_int(F.col("user_id").cast("string"), 13)
     b = du.select(
         "event_type",
         (h52 % HLL_M).alias("bucket"),
@@ -4172,13 +4166,7 @@ def agg_kll_quantile_sketch(spark, sf_dir):
     v = o.select(
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("v_centi"),
-        F.conv(
-            F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 13),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("u52"),
+        md5_int(F.col("o_orderkey").cast("string"), 13).alias("u52"),
     )
     m = f"(n_rows + {KLL_K - 1}) div {KLL_K}"
     params = (

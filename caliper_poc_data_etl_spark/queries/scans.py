@@ -13,6 +13,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from caliper_poc_data_etl_spark.queries.kernels import md5_int
 from caliper_poc_data_etl_spark.queries.registry import query, t
 from caliper_poc_data_etl_spark.sources import read_csv, read_json, read_orc
 
@@ -677,27 +678,17 @@ def sink_compact_small_files(spark, sf_dir):
     n_before = len(glob.glob(f"{base}/small/part-*.parquet"))
     n_after = len(glob.glob(f"{base}/compacted/part-*.parquet"))
     compacted = spark.read.parquet(f"{base}/compacted")
-    h = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        F.col("doc_id").cast("string"),
-                        "text",
-                        "lang",
-                        "source",
-                        F.col("n_chars").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        )
-        .cast("decimal(38,0)")
-    )
+    h = md5_int(
+        F.concat_ws(
+            "|",
+            F.col("doc_id").cast("string"),
+            "text",
+            "lang",
+            "source",
+            F.col("n_chars").cast("string"),
+        ),
+        15,
+    ).cast("decimal(38,0)")
     return compacted.agg(
         F.lit(n_before).cast("long").alias("n_files_before"),
         F.lit(n_after).cast("long").alias("n_files_after"),

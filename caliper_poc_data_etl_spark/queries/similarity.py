@@ -17,9 +17,11 @@ from caliper_poc_data_etl_spark.graph import iterate, truncate_lineage
 from caliper_poc_data_etl_spark.queries.kernels import (
     dot,
     dot_sql,
+    flip_probes,
     idot,
     isqdist,
     milli,
+    sign_bits,
     topk,
 )
 from caliper_poc_data_etl_spark.queries.registry import query, t
@@ -106,29 +108,15 @@ def _hp_sql(hp) -> str:
     return "array(" + ", ".join(f"{v:.1f}D" for v in hp) + ")"
 
 
-def lsh_bucket_column(emb_col):
-    """Random-hyperplane LSH bucket id: the sign bits of the dots with
-    N fixed hyperplanes, packed into a long.
-
-    Accepts a column NAME (string) to build the whole bucket as one
+def lsh_bucket_column(emb_col: str):
+    """Random-hyperplane LSH bucket id of the array column named
+    ``emb_col``: the sign bits of its dots with the N_HYPERPLANES fixed
+    hyperplanes, packed into a BIGINT by :func:`sign_bits` as one
     parsed expression — the N×DIM literal arrays cost 2 py4j calls
-    instead of N·DIM F.lit round-trips (value-identical by A/B) —
-    or a Column for ad-hoc expressions (original fold form)."""
-    if isinstance(emb_col, str):
-        bits = [
-            f"(CAST(CASE WHEN {dot_sql(emb_col, _hp_sql(hp))} > 0 "
-            f"THEN 1 ELSE 0 END AS BIGINT) << {i})"
-            for i, hp in enumerate(_hyperplanes())
-        ]
-        return F.expr("(" + " | ".join(bits) + ")").cast("long")
-    bucket = F.lit(0).cast("long")
-    for i, hp in enumerate(_hyperplanes()):
-        hp_arr = F.array(*[F.lit(v) for v in hp])
-        sign_bit = F.when(dot(emb_col, hp_arr) > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = bucket.bitwiseOR(F.shiftleft(sign_bit, i).cast("long"))
-    return bucket
+    instead of N·DIM F.lit round-trips."""
+    return sign_bits(
+        [f"{dot_sql(emb_col, _hp_sql(hp))} > 0" for hp in _hyperplanes()]
+    )
 
 
 @query("sim_ann_lsh", oracle=None)  # bucketing is engine-specific → rows-only
@@ -141,13 +129,7 @@ def sim_ann_lsh(spark, sf_dir):
     )
     # Multi-probe: each vector also registers in the N 1-bit-flipped
     # buckets, trading index size for recall.
-    probes = F.array(
-        F.col("bucket"),
-        *[
-            F.col("bucket").bitwiseXOR(F.lit(1 << i).cast("long"))
-            for i in range(N_HYPERPLANES)
-        ],
-    )
+    probes = flip_probes("bucket", N_HYPERPLANES)
     q = (
         e.filter(F.col("vec_id") < N_QUERY_VECS)
         .select(
@@ -206,17 +188,8 @@ def sim_lsh_bucket_parity(spark, sf_dir):
     qv = F.transform(
         "embedding", lambda x: F.round(x.cast("double") * 1000).cast("double")
     )
-    # One parsed expression for the whole bit pack (build-cost fix;
-    # same shifted-CASE sum the Column loop built, value-identical).
-    bucket = F.expr(
-        " + ".join(
-            f"(CAST(CASE WHEN {dot_sql('qv', _hp_sql(hp))} > 0 "
-            f"THEN 1 ELSE 0 END AS BIGINT) << {i})"
-            for i, hp in enumerate(_hyperplanes())
-        )
-    )
     return e.select("vec_id", qv.alias("qv")).select(
-        "vec_id", bucket.alias("bucket")
+        "vec_id", lsh_bucket_column("qv").alias("bucket")
     )
 
 

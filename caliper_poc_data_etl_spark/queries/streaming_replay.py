@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from caliper_poc_data_etl_spark.queries.kernels import _TS_FMT_DUCK, _TS_FMT_SPARK, topk
+from caliper_poc_data_etl_spark.queries.kernels import _TS_FMT_DUCK, _TS_FMT_SPARK, md5_int, topk
 from caliper_poc_data_etl_spark.queries.registry import query, t
 from caliper_poc_data_etl_spark.queries.relational import (
     _hll_est_from_zs,
@@ -672,9 +672,7 @@ def stream_hll_distinct_replay(spark, sf_dir):
     )
 
     events = read_event_stream(spark, sf_dir)
-    h52 = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 13), 16, 10
-    ).cast("long")
+    h52 = md5_int(F.col("user_id").cast("string"), 13)
     enriched = (
         events.withWatermark("ts", "2 hours")
         .withColumn("bucket", h52 % HLL_M)

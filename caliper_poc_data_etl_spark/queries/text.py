@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window as W
 
 from caliper_poc_data_etl_spark.graph import iterate, truncate_lineage
+from caliper_poc_data_etl_spark.queries.kernels import md5_int, word_trigrams
 from caliper_poc_data_etl_spark.queries.registry import query, t
 
 # A compact multi-language stopword table for the n-gram/stopword
@@ -317,22 +318,11 @@ def text_regex_extract(spark, sf_dir):
 def text_ngram_shingles(spark, sf_dir):
     """Distinct 3-gram word shingles per document — the MinHash input."""
     d = t(spark, sf_dir, "documents")
-    # Materialize toks before the transform — an inlined split() would
-    # re-run the regex per element_at (see dedup._doc_shingles).
-    toks = F.col("toks")
-    shingles = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - 2),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(toks, i),
-            F.element_at(toks, i + 1),
-            F.element_at(toks, i + 2),
-        ),
-    )
+    n = F.size(F.array_distinct(word_trigrams("toks")))
     return (
         d.select("doc_id", _tokens(F.col("text")).alias("toks"))
-        .filter(F.size(toks) >= 3)
-        .select("doc_id", F.size(F.array_distinct(shingles)).alias("n_distinct_shingles"))
+        .filter(F.size("toks") >= 3)
+        .select("doc_id", n.alias("n_distinct_shingles"))
     )
 
 
@@ -428,10 +418,7 @@ def text_hashing_vectorizer(spark, sf_dir):
         "doc_id",
         F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("tok"),
     )
-    bucket = (
-        F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
-        % HASH_VEC_BUCKETS
-    )
+    bucket = md5_int("tok", 8) % HASH_VEC_BUCKETS
     b = toks.groupBy("doc_id", bucket.alias("bucket")).agg(
         F.count("*").alias("c")
     )
@@ -1313,13 +1300,7 @@ def text_winnowing_fingerprint(spark, sf_dir):
         "text",
         F.explode(F.sequence(F.lit(1), F.length("text") - WIN_K + 1)).alias("pos"),
     )
-    h = F.conv(
-        F.substring(
-            F.md5(F.col("text").substr(F.col("pos"), F.lit(WIN_K))), 1, 10
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_int(F.col("text").substr(F.col("pos"), F.lit(WIN_K)), 10)
     key = h * F.lit(shift).cast("long") + (
         F.lit(shift - 1).cast("long") - F.col("pos")
     )
@@ -1748,20 +1729,8 @@ def text_ngram_novelty(spark, sf_dir):
     toks = d.select("doc_id", tk.alias("tk")).filter(
         F.size("tk") >= NOVELTY_N
     )
-    tkc = F.col("tk")
     grams = toks.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size(tkc) - 2),
-                lambda i: F.concat_ws(
-                    " ",
-                    F.element_at(tkc, i),
-                    F.element_at(tkc, i + 1),
-                    F.element_at(tkc, i + 2),
-                ),
-            )
-        ).alias("g"),
+        "doc_id", F.explode(word_trigrams("tk")).alias("g")
     ).distinct()
     firsts = grams.groupBy("g").agg(F.min("doc_id").alias("first_doc"))
     return (
@@ -1997,10 +1966,7 @@ def text_quality_classifier_score(spark, sf_dir):
         ),
     ).select(
         "doc_id",
-        (
-            F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
-            % _QC_BUCKETS
-        ).alias("bucket"),
+        (md5_int("tok", 8) % _QC_BUCKETS).alias("bucket"),
     )
     agg = (
         toks.join(F.broadcast(weights), "bucket")

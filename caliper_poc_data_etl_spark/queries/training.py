@@ -31,7 +31,12 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 from pyspark.sql.window import Window as W
 
-from caliper_poc_data_etl_spark.queries.kernels import _TS_FMT_SPARK, topk
+from caliper_poc_data_etl_spark.queries.kernels import (
+    _TS_FMT_SPARK,
+    md5_int,
+    topk,
+    word_trigrams,
+)
 from caliper_poc_data_etl_spark.queries.registry import query, t
 
 CHUNK_SIZE = 200
@@ -180,15 +185,8 @@ def decontam_ngram_overlap(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
     tk = F.split(F.trim(F.col("text")), r"\s+")
     shingled = d.select("doc_id", tk.alias("tk")).filter(F.size("tk") >= 3)
-    tkc = F.col("tk")
-    tri = F.transform(
-        F.sequence(F.lit(1), F.size(tkc) - 2),
-        lambda i: F.concat_ws(
-            " ", F.element_at(tkc, i), F.element_at(tkc, i + 1), F.element_at(tkc, i + 2)
-        ),
-    )
-    sh = (
-        shingled.select("doc_id", F.explode(F.array_distinct(tri)).alias("s"))
+    sh = shingled.select(
+        "doc_id", F.explode(F.array_distinct(word_trigrams("tk"))).alias("s")
     )
     bench = (
         sh.filter(F.col("doc_id") % _DECONTAM_MOD == 0).select("s").distinct()
@@ -796,21 +794,14 @@ def agg_countmin_heavy_hitters(spark, sf_dir):
                     F.struct(
                         F.lit(i).alias("hrow"),
                         (
-                            F.conv(
-                                F.substring(
-                                    F.md5(
-                                        F.concat(
-                                            F.lit(str(i)),
-                                            F.lit(":"),
-                                            F.col("user_id").cast("string"),
-                                        )
-                                    ),
-                                    1,
-                                    15,
+                            md5_int(
+                                F.concat(
+                                    F.lit(str(i)),
+                                    F.lit(":"),
+                                    F.col("user_id").cast("string"),
                                 ),
-                                16,
-                                10,
-                            ).cast("long")
+                                15,
+                            )
                             % _CMS_WIDTH
                         ).alias("cell"),
                     )
@@ -982,19 +973,7 @@ def agg_bloom_filter_membership(spark, sf_dir):
     def positions(col):
         return F.array(
             *[
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit(str(i)), F.lit(":"), col.cast("string")
-                            )
-                        ),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
+                md5_int(F.concat(F.lit(str(i)), F.lit(":"), col.cast("string")), 15)
                 % _BLOOM_BITS
                 for i in range(_BLOOM_K)
             ]

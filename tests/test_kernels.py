@@ -1,14 +1,26 @@
-"""queries/kernels.py: the shared top-k kernel, and the plan-audit rule
-that keeps every literal-bound rank filter limited before the shuffle."""
+"""queries/kernels.py: the shared top-k kernel, the plan-audit rule
+that keeps every literal-bound rank filter limited before the shuffle,
+and the hashing and LSH kernels against Python replicas."""
 
 from __future__ import annotations
+
+import hashlib
+import itertools
+import random
 
 import pytest
 
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from caliper_poc_data_etl_spark.queries.kernels import topk
+from caliper_poc_data_etl_spark.queries.kernels import (
+    bucket_pairs,
+    flip_probes,
+    md5_int,
+    sign_bits,
+    topk,
+    word_trigrams,
+)
 from tools.plan_audit import unlimited_rank_filters
 
 # (g, score, id): group 1 ties on score at the top-2 boundary, group 2
@@ -111,3 +123,78 @@ def test_kmv_sketch_plans_a_group_limit(spark, sf_dir):
     plan = _executed_plan(QUERIES["agg_kmv_distinct_sketch"].spark(spark, sf_dir))
     assert "WindowGroupLimit" in plan
     assert unlimited_rank_filters(plan) == []
+
+
+# --- LSH and hashing kernels -------------------------------------------------
+
+
+@pytest.mark.parametrize("n", [8, 13, 15])
+def test_md5_int_is_the_hex_prefix_as_an_integer(spark, n):
+    words = ["", "a", "héllo wörld", "3:user-42", "x" * 200]
+    df = spark.createDataFrame([(w,) for w in words], "s string")
+    got = {r.s: r.h for r in df.select("s", md5_int("s", n).alias("h")).collect()}
+    assert got == {w: int(hashlib.md5(w.encode()).hexdigest()[:n], 16) for w in words}
+
+
+def _signed64(v: int) -> int:
+    return v - (1 << 64) if v >= 1 << 63 else v
+
+
+def test_sign_bits_is_the_bit_or_of_its_conditions(spark):
+    rnd = random.Random(7)
+    rows = [
+        [False] * 64,
+        [True] * 64,
+        [i == 63 for i in range(64)],
+        [i == 0 for i in range(64)],
+    ] + [[rnd.random() < 0.5 for _ in range(64)] for _ in range(4)]
+    df = spark.createDataFrame([(i, f) for i, f in enumerate(rows)], "id int, f array<boolean>")
+    packed = sign_bits([f"f[{i}]" for i in range(64)])
+    got = dict(map(tuple, df.select("id", packed.alias("v")).collect()))
+    want = {}
+    for i, flags in enumerate(rows):
+        v = 0
+        for b, on in enumerate(flags):
+            if on:
+                v |= 1 << b
+        want[i] = _signed64(v)
+    assert got == want
+    assert got[2] == -(1 << 63)
+
+
+def test_flip_probes_are_the_bucket_and_its_one_bit_flips(spark):
+    n = 8
+    buckets = [0, 5, 255, 170]
+    df = spark.createDataFrame([(b,) for b in buckets], "bucket bigint")
+    for r in df.select("bucket", flip_probes("bucket", n).alias("p")).collect():
+        assert len(r.p) == n + 1
+        assert r.p[0] == r.bucket
+        assert sorted(bin(p ^ r.bucket).count("1") for p in r.p) == [0] + [1] * n
+        assert len(set(r.p)) == n + 1
+
+
+def test_bucket_pairs_are_the_in_bucket_combinations(spark):
+    rows = [
+        (1, 3), (1, 1), (1, 2), (1, 2),  # a repeated member counts once
+        (2, 5),                          # a one-member bucket pairs nothing
+        (3, 2), (3, 1),                  # (1, 2) again: listed once
+        (4, 9), (4, 7), (4, 8), (4, 6),
+    ]
+    df = spark.createDataFrame(rows, "k int, m int")
+    got = [tuple(r) for r in bucket_pairs(df, ["k"], "m").collect()]
+    members = {}
+    for k, m in rows:
+        members.setdefault(k, set()).add(m)
+    want = {p for ms in members.values() for p in itertools.combinations(sorted(ms), 2)}
+    assert sorted(got) == sorted(want)
+    assert len(got) == len(want)
+
+
+def test_word_trigrams_match_a_python_replica(spark):
+    texts = ["a b c", "the cat sat on the mat", "x y x y x y", "one two three four"]
+    toks = [t.split(" ") for t in texts]
+    df = spark.createDataFrame([(i, tk) for i, tk in enumerate(toks)], "id int, toks array<string>")
+    got = {r.id: r.g for r in df.select("id", word_trigrams("toks").alias("g")).collect()}
+    assert got == {
+        i: [" ".join(tk[j : j + 3]) for j in range(len(tk) - 2)] for i, tk in enumerate(toks)
+    }
